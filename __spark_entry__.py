@@ -21,7 +21,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from arabic_ocr_spark.job import ExtractionJobConfig, plan_extraction
+from arabic_ocr_spark.job import ExtractionJobConfig, lineage_rows, plan_extraction
 from arabic_ocr_spark.kernel.classifier import CharModel
 from arabic_ocr_spark.operators.dedup import (
     dedup_groups,
@@ -198,13 +198,12 @@ def _q_extract_eval(spark, sf_dir):
 
 
 def _q_extract_lineage(spark, sf_dir):
-    """Per-chunk lineage aggregate (partition id, turn range, rows, failures)."""
-    r = _extraction_plan(spark, sf_dir)
-    return r.groupBy("chunk").agg(
-        F.count("*").cast("long").alias("rows_processed"),
-        F.sum(F.col("ok").cast("long")).alias("n_ok"),
-        F.min("turn_idx").cast("long").alias("turn_min"),
-        F.max("turn_idx").cast("long").alias("turn_max"),
+    """Per-chunk lineage aggregate (partition id, turn range, rows, failures):
+    a projection of the job's own lineage_rows."""
+    return lineage_rows(_extraction_plan(spark, sf_dir), wave=0).select(
+        "chunk", "rows_processed", "n_ok",
+        F.col("turn_min").cast("long").alias("turn_min"),
+        F.col("turn_max").cast("long").alias("turn_max"),
     )
 
 

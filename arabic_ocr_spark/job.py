@@ -231,18 +231,7 @@ def plan_extraction(spark, df, cfg: ExtractionJobConfig, model: CharModel | None
         if cfg.payload_roles:
             cols = df.filter(F.col("role").isin(*cfg.payload_roles)).select("conv_id", "turn_idx", "text")
 
-        salt_buckets = cfg.salt_buckets
-        if salt_buckets is None:
-            salt_buckets = derive_salt_buckets(cols, cfg.num_chunks)
-            cfg.salt_buckets = salt_buckets  # pin: every wave must salt identically
-
-        salted = cols.withColumn(
-            "chunk",
-            F.pmod(
-                F.xxhash64(F.col("conv_id"), F.pmod(F.xxhash64(F.col("turn_idx")), F.lit(salt_buckets))),
-                F.lit(cfg.num_chunks),
-            ).cast("int"),
-        )
+        salted = _with_salted_chunk(cols, cfg)
         if wave is not None:
             salted = salted.filter(_wave_of(F.col("chunk"), cfg.num_waves) == wave)
     gate = None
@@ -314,6 +303,21 @@ def _wave_of(chunk_col, num_waves: int):
     return F.pmod(chunk_col, F.lit(num_waves)).cast("int")
 
 
+def _with_salted_chunk(df, cfg: ExtractionJobConfig):
+    """df plus the salted `chunk` column,
+    pmod(xxhash64(conv_id, pmod(xxhash64(turn_idx), S)), C).  When S is
+    unset it is derived from df's skew sketch and pinned on cfg: every wave
+    (and a later run over the same output) must salt identically."""
+    from pyspark.sql import functions as F
+
+    if cfg.salt_buckets is None:
+        cfg.salt_buckets = derive_salt_buckets(df, cfg.num_chunks)
+    salt = F.pmod(F.xxhash64(F.col("turn_idx")), F.lit(cfg.salt_buckets))
+    return df.withColumn(
+        "chunk", F.pmod(F.xxhash64(F.col("conv_id"), salt), F.lit(cfg.num_chunks)).cast("int")
+    )
+
+
 def stage_chunked(spark, df, cfg: ExtractionJobConfig, staged_dir: str) -> str:
     """ONE pass over the raw input writing it re-laid-out as
     `staged_dir/wave=<w>/` partitions with the salted chunk column
@@ -329,29 +333,58 @@ def stage_chunked(spark, df, cfg: ExtractionJobConfig, staged_dir: str) -> str:
     will be extracted more than once."""
     from pyspark.sql import functions as F
 
-    if cfg.salt_buckets is None:
-        cfg.salt_buckets = derive_salt_buckets(df.select("conv_id", "turn_idx", "text"), cfg.num_chunks)
     # `role` rides along so a later role-restricted run over the staged
     # layout can still filter (plan_extraction's prechunked branch); sources
     # without the column stage role-less and such runs raise there
     keep = ["conv_id", "turn_idx", "text"] + (["role"] if "role" in df.columns else [])
-    cols = df.select(*keep)
-    salted = cols.withColumn(
-        "chunk",
-        F.pmod(
-            F.xxhash64(F.col("conv_id"), F.pmod(F.xxhash64(F.col("turn_idx")), F.lit(cfg.salt_buckets))),
-            F.lit(cfg.num_chunks),
-        ).cast("int"),
-    ).withColumn("wave", _wave_of(F.col("chunk"), cfg.num_waves))
+    salted = _with_salted_chunk(df.select(*keep), cfg)
+    salted = salted.withColumn("wave", _wave_of(F.col("chunk"), cfg.num_waves))
     salted.write.mode("overwrite").partitionBy("wave").parquet(staged_dir)
-    with open(os.path.join(staged_dir, "_partitioning.json"), "w", encoding="utf-8") as f:
-        json.dump({"num_chunks": cfg.num_chunks, "num_waves": cfg.num_waves,
-                   "salt_buckets": cfg.salt_buckets}, f)
+    _pin_partitioning(cfg, staged_dir, "staged input", adopt=False)
     return staged_dir
 
 
+_PIN_FILE = "_partitioning.json"
+
+
 def _is_staged(input_path: str | None) -> bool:
-    return bool(input_path) and os.path.exists(os.path.join(input_path, "_partitioning.json"))
+    return bool(input_path) and os.path.exists(os.path.join(input_path, _PIN_FILE))
+
+
+def _pin_partitioning(cfg: ExtractionJobConfig, dirpath: str, owner: str,
+                      source=None, adopt: bool = True) -> None:
+    """The ONE reader and writer of a directory's `_partitioning.json`.
+    chunk (and therefore wave membership) is a function of (salt_buckets,
+    num_chunks), so data chunked under a pin must be read, resumed and
+    extended under the same one — a re-derived sample sketch could land on
+    a different S and silently duplicate/drop rows.
+
+    With adopt=True an existing pin is validated against cfg (a mismatch
+    raises, naming `owner`) and its S adopted into cfg; without a pin, or
+    with adopt=False, cfg's parameters are written — S derived from
+    `source`'s skew sketch first when unset."""
+    path = os.path.join(dirpath, _PIN_FILE)
+    if adopt and os.path.exists(path):
+        with open(path, encoding="utf-8") as f:
+            pinned = json.load(f)
+        if pinned["num_chunks"] != cfg.num_chunks or pinned["num_waves"] != cfg.num_waves:
+            raise ValueError(
+                f"{owner} was chunked with num_chunks={pinned['num_chunks']}, "
+                f"num_waves={pinned['num_waves']}; a run or resume must use the same values"
+            )
+        if cfg.salt_buckets is not None and cfg.salt_buckets != pinned["salt_buckets"]:
+            raise ValueError(
+                f"{owner} was salted with S={pinned['salt_buckets']}, "
+                f"got salt_buckets={cfg.salt_buckets}"
+            )
+        cfg.salt_buckets = pinned["salt_buckets"]
+        return
+    if cfg.salt_buckets is None:
+        cfg.salt_buckets = derive_salt_buckets(source, cfg.num_chunks)
+    os.makedirs(dirpath, exist_ok=True)
+    with open(path, "w", encoding="utf-8") as f:
+        json.dump({"num_chunks": cfg.num_chunks, "num_waves": cfg.num_waves,
+                   "salt_buckets": cfg.salt_buckets}, f)
 
 
 def lineage_rows(written, wave: int, golden=None):
@@ -450,49 +483,14 @@ def run_extraction(
         # stage_chunked layout: adopt its pinned partitioning (the chunk
         # column in the data was computed with it) and read the wave-
         # partitioned copy so per-wave scans prune to 1/num_waves
-        with open(os.path.join(input_path, "_partitioning.json"), encoding="utf-8") as f:
-            sp = json.load(f)
-        if sp["num_chunks"] != cfg.num_chunks or sp["num_waves"] != cfg.num_waves:
-            raise ValueError(
-                f"staged input was chunked with num_chunks={sp['num_chunks']}, "
-                f"num_waves={sp['num_waves']}; the run must use the same values"
-            )
-        if cfg.salt_buckets is not None and cfg.salt_buckets != sp["salt_buckets"]:
-            raise ValueError(f"staged input was salted with S={sp['salt_buckets']}")
-        cfg.salt_buckets = sp["salt_buckets"]
+        _pin_partitioning(cfg, input_path, "staged input")
     df = spark.table(input_table) if input_table else spark.read.parquet(input_path)
     if cfg.require_payload:
         df = df.filter(F.col("text") != "")
 
-    # pin the partitioning parameters for the OUTPUT's lifetime: chunk (and
-    # therefore wave membership) is a function of (salt_buckets, num_chunks),
-    # so a resumed run MUST salt exactly like the committed waves — a
-    # re-derived sample sketch could land on a different S and silently
-    # duplicate/drop rows across the resume boundary
-    params_path = os.path.join(output_dir, "_partitioning.json")
-    if os.path.exists(params_path):
-        with open(params_path, encoding="utf-8") as f:
-            pinned = json.load(f)
-        if pinned["num_chunks"] != cfg.num_chunks or pinned["num_waves"] != cfg.num_waves:
-            raise ValueError(
-                f"output dir was written with num_chunks={pinned['num_chunks']}, "
-                f"num_waves={pinned['num_waves']}; resume must use the same values"
-            )
-        if cfg.salt_buckets is not None and cfg.salt_buckets != pinned["salt_buckets"]:
-            raise ValueError(
-                f"output dir was salted with S={pinned['salt_buckets']}, "
-                f"got salt_buckets={cfg.salt_buckets}"
-            )
-        cfg.salt_buckets = pinned["salt_buckets"]
-    else:
-        if cfg.salt_buckets is None:
-            cfg.salt_buckets = derive_salt_buckets(
-                df.select("conv_id", "turn_idx", "text"), cfg.num_chunks
-            )
-        os.makedirs(output_dir, exist_ok=True)
-        with open(params_path, "w", encoding="utf-8") as f:
-            json.dump({"num_chunks": cfg.num_chunks, "num_waves": cfg.num_waves,
-                       "salt_buckets": cfg.salt_buckets}, f)
+    # pin the partitioning parameters for the OUTPUT's lifetime: a resumed
+    # run must salt exactly like the committed waves
+    _pin_partitioning(cfg, output_dir, "output dir", source=df)
 
     # broadcast once for the whole run; every wave's plan reuses the handles
     model_bc = spark.sparkContext.broadcast(model or CharModel.load(cfg.model_path))

@@ -11,7 +11,7 @@ words right-to-left within a line).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Generator
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -35,10 +35,16 @@ class ExtractionResult:
     feat_vectors: list = field(default_factory=list, repr=False)
 
 
-def iter_words(image: np.ndarray, skip_deskew: bool = False) -> Iterator[tuple[np.ndarray, list, int]]:
+def iter_words(
+    image: np.ndarray,
+    templates: list[TemplateSpec] | None = None,
+    skip_deskew: bool = False,
+) -> Generator[tuple[np.ndarray, list, int], None, int]:
     """Grayscale page -> (word_image, char_cut_points, line_index) in the
     reference's processing order (lines top-down, words right-to-left).
-    Word-level errors propagate; callers decide the failure policy."""
+    The generator's return value is the page's line count, lines without
+    words included.  Word-level errors propagate; callers decide the
+    failure policy."""
     binary = binarize_inv(image)
     if not skip_deskew:
         binary = deskew(binary)
@@ -49,8 +55,8 @@ def iter_words(image: np.ndarray, skip_deskew: bool = False) -> Iterator[tuple[n
         for i in range(len(seps) - 1, -1, -1):
             word = line[:, int(seps[i]):previous_width]
             previous_width = int(seps[i])
-            cuts = contour_seg(word, baseline)
-            yield word, cuts, line_idx
+            yield word, contour_seg(word, baseline, templates), line_idx
+    return len(lines)
 
 
 def extract_page(
@@ -67,26 +73,19 @@ def extract_page(
     if image is None:
         return ExtractionResult(text="", ok=False, err="blank_payload")
     res = ExtractionResult()
-    recognized = ""
+    words = iter_words(image, templates, skip_deskew)
     try:
-        binary = binarize_inv(image)
-        if not skip_deskew:
-            binary = deskew(binary)
-        lines = segment_lines(binary)
-        res.n_lines = len(lines)
-        for line in lines:
-            seps, baseline = word_separators(line)
-            previous_width = line.shape[1]
-            for i in range(len(seps) - 1, -1, -1):
-                word = line[:, int(seps[i]):previous_width]
-                previous_width = int(seps[i])
-                cuts = contour_seg(word, baseline, templates)
-                fvs = batch_get_feat_vectors(word, cuts)
-                if keep_feat_vectors:
-                    res.feat_vectors.append([list(fv) for fv in fvs])
-                recognized += " " + match_feat_to_char(model, fvs)
-                res.n_words += 1
+        while True:
+            try:
+                word, cuts, _line_idx = next(words)
+            except StopIteration as end:
+                res.n_lines = end.value
+                break
+            fvs = batch_get_feat_vectors(word, cuts)
+            if keep_feat_vectors:
+                res.feat_vectors.append([list(fv) for fv in fvs])
+            res.text += " " + match_feat_to_char(model, fvs)
+            res.n_words += 1
     except Exception as exc:  # reference-crash-equivalent turn
         return ExtractionResult(text="", ok=False, err=f"{type(exc).__name__}: {exc}")
-    res.text = recognized
     return res

@@ -15,14 +15,16 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import functools
 import math
+import operator
 
 from pyspark.sql import DataFrame, functions as F
 
 __all__ = ["exact_dup_groups", "minhash_signatures", "lsh_candidate_pairs",
            "jaccard_verified_pairs", "simhash", "simhash_expr",
            "min_label_components", "dedup_groups", "auto_bucket_cap",
-           "resolve_bucket_cap", "bucket_audit", "lsh_bucket_audit"]
+           "resolve_bucket_cap", "bucket_audit", "banded_pairs", "lsh_bucket_audit"]
 
 
 def auto_bucket_cap(n_rows: int, c: float = 8.0) -> int:
@@ -57,28 +59,78 @@ def resolve_bucket_cap(max_bucket_size: int | str | None,
                 f"max_bucket_size must be an int, None, or the string 'auto'; "
                 f"got {max_bucket_size!r}"
             )
-        n = n_rows if n_rows is not None else source.count()
-        return auto_bucket_cap(n)
+        if n_rows is None and source is None:
+            raise ValueError("max_bucket_size='auto' needs n_rows or a source to count")
+        return auto_bucket_cap(n_rows if n_rows is not None else source.count())
     return int(max_bucket_size)
 
 
-def bucket_audit(buckets: DataFrame, cap: int, id_col: str) -> DataFrame:
+def bucket_audit(buckets: DataFrame, cap: int | None, id_col: str) -> DataFrame:
     """One-row audit of the hot-bucket guard at `cap` over an
     (id, band, key) bucket table: bucket count, buckets above the cap, the
     largest bucket, and an UPPER BOUND on pairs the star guard drops
     (s*(s-1)/2 - (s-1) per hot bucket — an upper bound because a dropped
     pair re-surfaces through any other band bucket below the cap where the
-    two ids still collide)."""
+    two ids still collide).  An unguarded audit (cap None) reports a NULL
+    cap and no hot buckets."""
     key_cols = [c for c in buckets.columns if c != id_col]
     sizes = buckets.groupBy(*key_cols).agg(F.count("*").alias("bsz"))
-    hot = F.col("bsz") > cap
+    hot = F.col("bsz") > F.lit(cap)
     dropped = (F.col("bsz") * (F.col("bsz") - 1)) / 2 - (F.col("bsz") - 1)
     return sizes.agg(
-        F.lit(int(cap)).alias("cap"),
+        F.lit(cap).cast("long").alias("cap"),
         F.count("*").alias("n_buckets"),
         F.coalesce(F.sum(hot.cast("long")), F.lit(0)).cast("long").alias("n_hot_buckets"),
         F.coalesce(F.max("bsz"), F.lit(0)).cast("long").alias("max_bucket"),
         F.coalesce(F.sum(F.when(hot, dropped)), F.lit(0.0)).cast("long").alias("dropped_pairs_ubound"),
+    )
+
+
+def banded_pairs(buckets: DataFrame, id_col: str, cap: int | None) -> DataFrame:
+    """Distinct pairs (x_a < x_b) of ids sharing at least one band bucket of
+    an (id, band, key) bucket table — the band self-join behind both LSH
+    candidate operators (lsh_candidate_pairs: doc_id -> doc_a/doc_b;
+    embedding_neardup_candidates: vec_id -> vec_a/vec_b).
+
+    cap — the HOT-BUCKET guard: a degenerate band bucket (a mass-templated
+    near-identical cluster of m members, which survives exact dedup whenever
+    any byte differs) otherwise makes the self-join quadratic in m.  With a
+    cap, buckets larger than it contribute only their STAR around the
+    bucket's minimum id — O(m) pairs that still connect every member to the
+    anchor for downstream connected-components grouping.  The filter is
+    applied to the join's LEFT input, so the quadratic intermediate never
+    materializes.  None disables the guard; resolve_bucket_cap turns the
+    operators' max_bucket_size argument into `cap`.
+
+    RECALL CAVEAT when the cap binds: a hot bucket only guarantees its
+    members share ONE band (moderate similarity), NOT that they are
+    near-identical to the anchor — a chain-shaped cluster (a~b~c with
+    anchor!~c above the threshold) can lose the b-c pair that the uncapped
+    path plus verify+CC would have kept, unless b and c also co-occur in
+    some below-cap bucket.  Audit bucket composition (bucket_audit, via
+    lsh_bucket_audit / neardup_bucket_audit) before relying on a cap in
+    recall-sensitive paths."""
+    key_cols = [c for c in buckets.columns if c != id_col]
+    if cap is not None:
+        sizes = buckets.groupBy(*key_cols).agg(
+            F.count("*").alias("bsz"), F.min(id_col).alias("anchor")
+        )
+        left = (
+            buckets.join(sizes, key_cols)
+            .filter((F.col("bsz") <= cap) | (F.col(id_col) == F.col("anchor")))
+            .select(*buckets.columns)
+            .alias("l")
+        )
+    else:
+        left = buckets.alias("l")
+    right = buckets.alias("r")
+    on = [F.col(f"l.{c}") == F.col(f"r.{c}") for c in key_cols]
+    on.append(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
+    prefix = id_col.removesuffix("_id")
+    return (
+        left.join(right, functools.reduce(operator.and_, on))
+        .select(F.col(f"l.{id_col}").alias(f"{prefix}_a"), F.col(f"r.{id_col}").alias(f"{prefix}_b"))
+        .distinct()
     )
 
 
@@ -172,50 +224,14 @@ def lsh_candidate_pairs(docs: DataFrame, k: int = 7, num_hashes: int = 8, band_s
     LSH band.  Bands of `band_size` consecutive minhashes; the self-join is
     on the int64-folded band key (see _text_band_buckets).
 
-    max_bucket_size — the HOT-BUCKET guard: a mass-templated cluster of m
-    near-identical documents (which survives exact dedup whenever any byte
-    differs) puts all m in one band bucket and makes the self-join
-    quadratic in m.  With a cap, buckets larger than max_bucket_size
-    contribute only their STAR around the bucket's minimum doc_id — O(m)
-    pairs, filtered on the join's LEFT input so the quadratic intermediate
-    never materializes.  The default "auto" derives the cap as
+    max_bucket_size — the hot-bucket cap (see banded_pairs for the guard
+    and its recall caveat).  The default "auto" derives it as
     auto_bucket_cap(n) = ceil(8*sqrt(n)) (pass n_rows — a catalog/metadata
     count — to skip the plan-time count), which never binds on natural
     near-dup buckets at the gated scales, so the default path stays exactly
-    oracle-checked; None disables the guard entirely.
-
-    RECALL CAVEAT when the cap binds: a hot bucket only guarantees its
-    members share one minhash band (moderate similarity), NOT that they are
-    near-identical to the anchor — a chain-shaped cluster (a~b~c with
-    anchor!~c above the Jaccard threshold) can lose the b-c pair that the
-    uncapped path plus verify+CC would have kept, unless b and c also
-    co-occur in some below-cap bucket.  Audit bucket composition
-    (lsh_bucket_audit) before relying on a cap in recall-sensitive paths."""
-    buckets = _text_band_buckets(docs, k, num_hashes, band_size)
-    max_bucket_size = resolve_bucket_cap(max_bucket_size, docs, n_rows)
-    if max_bucket_size is not None:
-        sizes = buckets.groupBy("band", "band_key").agg(
-            F.count("*").alias("bsz"), F.min("doc_id").alias("anchor")
-        )
-        left = (
-            buckets.join(sizes, ["band", "band_key"])
-            .filter((F.col("bsz") <= max_bucket_size) | (F.col("doc_id") == F.col("anchor")))
-            .select("doc_id", "band", "band_key")
-            .alias("l")
-        )
-    else:
-        left = buckets.alias("l")
-    right = buckets.alias("r")
-    return (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    oracle-checked; None disables the guard entirely."""
+    return banded_pairs(_text_band_buckets(docs, k, num_hashes, band_size), "doc_id",
+                        resolve_bucket_cap(max_bucket_size, docs, n_rows))
 
 
 def lsh_bucket_audit(docs: DataFrame, k: int = 7, num_hashes: int = 8, band_size: int = 2,
@@ -226,9 +242,8 @@ def lsh_bucket_audit(docs: DataFrame, k: int = 7, num_hashes: int = 8, band_size
     dropped_pairs_ubound).  Run it before enabling a cap on a new corpus —
     and alongside the guarded job in production — so a binding cap is a
     measured, inspected event rather than silent pair loss."""
-    cap = resolve_bucket_cap(max_bucket_size, docs, n_rows)
     return bucket_audit(_text_band_buckets(docs, k, num_hashes, band_size),
-                        cap if cap is not None else 2**62, "doc_id")
+                        resolve_bucket_cap(max_bucket_size, docs, n_rows), "doc_id")
 
 
 def jaccard_verified_pairs(docs: DataFrame, k: int = 7, num_hashes: int = 8,

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from arabic_ocr_spark.operators.dedup import bucket_audit, resolve_bucket_cap
+from arabic_ocr_spark.operators.dedup import banded_pairs, bucket_audit, resolve_bucket_cap
 
 __all__ = ["cosine_topk", "lsh_ann_topk", "lsh_ann_candidates", "ivf_ann_topk", "ann_recall",
            "embedding_dup_pairs", "embedding_neardup_candidates", "embedding_neardup_hi",
@@ -218,62 +218,21 @@ def embedding_neardup_candidates(embeddings: DataFrame, n_bands: int = 16,
     a pure function of the seed, so recall is a testable constant, not a
     random variable.
 
-    max_bucket_size — the HOT-BUCKET guard: a degenerate band bucket (a
-    mass-templated near-identical cluster of m vectors) otherwise makes the
-    self-join quadratic in m, the one quadratic the collision model cannot
-    bound (it assumes near-orthogonal background).  With a cap, buckets
-    larger than max_bucket_size contribute only their STAR around the
-    bucket's minimum vec_id — O(m) pairs that still connect every member
-    to the anchor for downstream connected-components grouping, while the
-    intra-cluster pair flood (m^2/2 candidate rows all verifying ~1.0) is
-    skipped.  The filter is applied to the join's LEFT input, so the
-    quadratic intermediate is never materialized.  The default "auto"
-    derives the cap as auto_bucket_cap(n) = ceil(8*sqrt(n)) (pass n_rows to
-    skip the plan-time count); at the gated fixture scales natural buckets
-    sit far below it (max 9 vs cap 189+), so the default path keeps exact
-    banded semantics; None disables the guard entirely.
-
-    RECALL CAVEAT when the cap binds: a hot bucket only guarantees its
-    members agree on ONE band's sign bits (moderate similarity), NOT that
-    they are near-identical to the anchor — a chain-shaped cluster (a~b~c
-    with anchor!~c above threshold) can lose the b-c pair the uncapped
-    path plus verify+CC would have kept, unless b and c also co-occur in
-    some below-cap bucket.  Audit bucket composition before relying on a
-    cap in recall-sensitive paths: neardup_bucket_audit reports hot-bucket
-    count and a dropped-pair upper bound at the same parameters.
+    max_bucket_size — the hot-bucket cap (see dedup.banded_pairs for the
+    guard and its recall caveat; neardup_bucket_audit reports hot-bucket
+    count and a dropped-pair upper bound at the same parameters).  The
+    default "auto" derives it as auto_bucket_cap(n) = ceil(8*sqrt(n)) (pass
+    n_rows to skip the plan-time count); at the gated fixture scales
+    natural buckets sit far below it (max 9 vs cap 189+), so the default
+    path keeps exact banded semantics; None disables the guard entirely.
 
     Scale shape: signature pass is map-only (one GEMM per Arrow batch); the
     only shuffles are the self-join on the short (band, key) buckets and the
     final distinct — identical to the MinHash-LSH text ladder, which is the
     point: at 0.95+ this replaces a quadratic GEMM with a bucket join."""
     vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
-    buckets = _band_buckets(vecs, n_bands, rows_per_band, seed)
-    max_bucket_size = resolve_bucket_cap(max_bucket_size, vecs, n_rows)
-    if max_bucket_size is not None:
-        sizes = buckets.groupBy("band", "key").agg(
-            F.count("*").alias("bsz"), F.min("vec_id").alias("anchor")
-        )
-        annotated = buckets.join(sizes, ["band", "key"])
-        left = (
-            annotated.filter(
-                (F.col("bsz") <= max_bucket_size) | (F.col("vec_id") == F.col("anchor"))
-            )
-            .select("vec_id", "band", "key")
-            .alias("l")
-        )
-        right = buckets.alias("r")
-    else:
-        left, right = buckets.alias("l"), buckets.alias("r")
-    return (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.vec_id") < F.col("r.vec_id")),
-        )
-        .select(F.col("l.vec_id").alias("vec_a"), F.col("r.vec_id").alias("vec_b"))
-        .distinct()
-    )
+    return banded_pairs(_band_buckets(vecs, n_bands, rows_per_band, seed), "vec_id",
+                        resolve_bucket_cap(max_bucket_size, vecs, n_rows))
 
 
 def neardup_bucket_audit(embeddings: DataFrame, n_bands: int = 16,
@@ -286,9 +245,8 @@ def neardup_bucket_audit(embeddings: DataFrame, n_bands: int = 16,
     and alongside the guarded job in production — so a binding cap is a
     measured, inspected event rather than silent pair loss."""
     vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
-    cap = resolve_bucket_cap(max_bucket_size, vecs, n_rows)
     return bucket_audit(_band_buckets(vecs, n_bands, rows_per_band, seed),
-                        cap if cap is not None else 2**62, "vec_id")
+                        resolve_bucket_cap(max_bucket_size, vecs, n_rows), "vec_id")
 
 
 def neardup_band_params(n_rows: int, threshold: float = 0.95,

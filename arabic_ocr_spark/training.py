@@ -41,24 +41,12 @@ def _has_dots(fv):
     return fv[5] > 0
 
 
-def _has_n_dots(n):
-    return lambda fv: fv[5] == n
-
-
 def _dotted_top(fv):
     return fv[4] == 1
 
 
 def _dotted_bottom(fv):
     return fv[4] == 3
-
-
-def _has_score(fv):
-    return fv[0] != 0
-
-
-def _has_no_score(fv):
-    return fv[0] == 0
 
 
 def validations_for(label: str) -> list:

@@ -89,6 +89,12 @@ def test_lsh_auto_guard_binds_only_on_degenerate_buckets(spark):
     assert audit.max_bucket == m
     assert audit.dropped_pairs_ubound == 4 * (m * (m - 1) // 2 - (m - 1))
 
+    # unguarded: no cap to report, so NULL rather than a sentinel
+    unguarded = lsh_bucket_audit(docs, max_bucket_size=None).collect()[0]
+    assert unguarded.cap is None
+    assert unguarded.n_hot_buckets == unguarded.dropped_pairs_ubound == 0
+    assert unguarded.max_bucket == m
+
 
 def test_lsh_auto_guard_is_nonbinding_on_fixture(spark):
     """At the gated scales natural buckets sit far below ceil(8*sqrt(n)), so
@@ -117,3 +123,6 @@ def test_resolve_bucket_cap_validates_strings():
     for bad in ("AUTO", "Auto", "64", ""):
         with _pytest.raises(ValueError, match="auto"):
             resolve_bucket_cap(bad, n_rows=100)
+    # "auto" with nothing to count
+    with _pytest.raises(ValueError, match="auto"):
+        resolve_bucket_cap("auto")

@@ -251,6 +251,8 @@ def test_staged_input_equals_direct(spark, synth_dir, tmp_path):
 
     with pytest.raises(ValueError, match="staged input was chunked"):
         run_extraction(spark, staged, str(tmp_path / "o_bad"), _cfg(num_waves=7))
+    with pytest.raises(ValueError, match="staged input was salted with"):
+        run_extraction(spark, staged, str(tmp_path / "o_bad_s"), _cfg(salt_buckets=cfg.salt_buckets + 1))
 
 
 def test_staged_input_respects_payload_roles(spark, synth_dir, tmp_path):
