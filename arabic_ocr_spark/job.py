@@ -16,12 +16,13 @@ re-expressed as a DataFrame program, reference segment_words.py:234-277):
  -> mapInPandas(extract kernel): Arrow batches in, NumPy per payload,
     classifier weights + templates broadcast ONCE per executor
  -> checkpointed write: chunks are grouped into WAVES; each wave commits
-    its data directory atomically (parquet _SUCCESS; Iceberg snapshot on a
-    real catalog) and then appends its lineage rows (chunk, turn range,
-    rows, failures, wall time).  A killed run resumes by reading the
-    lineage table and recomputing only waves without lineage; a wave whose
-    data committed but whose lineage write was lost is overwritten
-    idempotently (deterministic wave -> path mapping).
+    through `commit_unit` (shared with the streaming micro-batch sink): its
+    data directory atomically (parquet _SUCCESS; Iceberg snapshot on a
+    real catalog), then its lineage rows (chunk, turn range, rows,
+    failures, wall time).  A killed run resumes by reading the lineage
+    table and recomputing only waves without lineage; a wave whose data
+    committed but whose lineage write was lost is overwritten idempotently
+    (deterministic wave -> path mapping).
 
 At 100 TB: C is sized so a chunk's payload bytes fit one task comfortably
 (e.g. 2-8 GB/chunk -> C in the tens of thousands), waves bound the blast
@@ -35,7 +36,6 @@ import glob
 import json
 import math
 import os
-import shutil
 import time
 from collections.abc import Iterator
 from dataclasses import dataclass
@@ -48,12 +48,12 @@ from .kernel.segmentation import TemplateSpec
 from .sources.codec import decode_payload
 
 __all__ = ["ExtractionJobConfig", "derive_salt_buckets", "plan_extraction",
-           "stage_chunked", "run_extraction", "read_lineage", "lineage_rows"]
+           "stage_chunked", "run_extraction", "read_lineage", "lineage_rows", "commit_unit"]
 
-RESULT_SCHEMA = (
-    "conv_id string, turn_idx int, chunk int, part_id int, extracted_text string, "
-    "n_lines int, n_words int, ok boolean, err string, proc_us bigint"
+_KERNEL_SCHEMA = (
+    "extracted_text string, n_lines int, n_words int, ok boolean, err string, proc_us bigint"
 )
+RESULT_SCHEMA = "conv_id string, turn_idx int, chunk int, part_id int, " + _KERNEL_SCHEMA
 
 LINEAGE_SCHEMA = (
     "wave int, chunk int, rows_processed bigint, n_ok bigint, n_failed bigint, "
@@ -79,7 +79,6 @@ class ExtractionJobConfig:
     # the sandbox (no Iceberg runtime jar here).  Production DDL, catalog
     # config and the sandbox->catalog artifact mapping: docs/iceberg.md.
     iceberg_table: str | None = None
-    iceberg_lineage_table: str | None = None
     # optional golden table (conv_id, turn_idx, expected_text): when set,
     # each lineage row carries the chunk's extraction accuracy (the north
     # star's per-partition "extraction accuracy" metric)
@@ -138,51 +137,32 @@ def derive_salt_buckets(df, num_chunks: int, sample_fraction: float = 0.02,
     return int(min(max_buckets, max(1, math.ceil(spread * safety))))
 
 
-def _make_kernel(model_bc, templates_bc, passthrough_col: str | None = None):
-    """Returns the mapInPandas function.  The broadcast values deserialize
-    once per executor (Spark broadcast semantics) — the reference reloads
-    its 1.4 MB model JSON per image and its template PNGs per contour; here
-    both cross the wire exactly once per executor.
+def _extract(df, model_bc, templates_bc):
+    """df through the OCR kernel (mapInPandas): consumes `text`, passes every
+    other column through and appends the _KERNEL_SCHEMA columns, so the
+    kernel knows nothing of the plan's key columns.  The broadcast values
+    deserialize once per executor (Spark broadcast semantics) — the
+    reference reloads its 1.4 MB model JSON per image and its template PNGs
+    per contour; here both cross the wire exactly once per executor."""
+    from pyspark.sql.types import StructType
 
-    passthrough_col: optional extra input column copied to the output ahead
-    of the result schema (used by the distinct-payload plan)."""
+    keep = [c for c in df.columns if c != "text"]
+    added = StructType.fromDDL(_KERNEL_SCHEMA)
 
     def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
         model: CharModel = model_bc.value
         templates: list[TemplateSpec] = templates_bc.value
-        part_id = TaskContext.get().partitionId() if TaskContext.get() else -1
         for pdf in batches:
-            n = len(pdf)
-            texts = pdf["text"].tolist()
-            out = {}
-            if passthrough_col:
-                out[passthrough_col] = pdf[passthrough_col].tolist()
-            out.update({
-                "conv_id": pdf["conv_id"].tolist(),
-                "turn_idx": pdf["turn_idx"].tolist(),
-                "chunk": pdf["chunk"].tolist(),
-                "part_id": [part_id] * n,
-                "extracted_text": [""] * n,
-                "n_lines": [0] * n,
-                "n_words": [0] * n,
-                "ok": [False] * n,
-                "err": [""] * n,
-                "proc_us": [0] * n,
-            })
-            for i in range(n):
+            results = []
+            for payload in pdf["text"].tolist():
                 t0 = time.perf_counter()
-                res = extract_page(decode_payload(texts[i]), model, templates)
-                out["extracted_text"][i] = res.text
-                out["n_lines"][i] = res.n_lines
-                out["n_words"][i] = res.n_words
-                out["ok"][i] = res.ok
-                out["err"][i] = res.err
-                out["proc_us"][i] = int((time.perf_counter() - t0) * 1e6)
-            yield pd.DataFrame(out)
+                res = extract_page(decode_payload(payload), model, templates)
+                results.append((res.text, res.n_lines, res.n_words, res.ok, res.err,
+                                int((time.perf_counter() - t0) * 1e6)))
+            yield pd.concat([pdf[keep], pd.DataFrame(results, columns=added.names)], axis=1)
 
-    return extract_batches
+    schema = StructType([df.schema[c] for c in keep] + added.fields)
+    return df.mapInPandas(extract_batches, schema=schema)
 
 
 def plan_extraction(spark, df, cfg: ExtractionJobConfig, model: CharModel | None = None,
@@ -202,6 +182,7 @@ def plan_extraction(spark, df, cfg: ExtractionJobConfig, model: CharModel | None
     broadcast the model exactly once instead of once per plan.
     """
     from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
 
     if model_bc is None:
         model = model or CharModel.load(cfg.model_path)
@@ -260,41 +241,30 @@ def plan_extraction(spark, df, cfg: ExtractionJobConfig, model: CharModel | None
             # drops every turn of a gated-out payload — same row set as the
             # direct path's gate
             distinct = gate(distinct)
-        distinct = (
-            distinct
-            .withColumn("conv_id", F.lit(""))
-            .withColumn("turn_idx", F.lit(0))
-            .withColumn("chunk", F.pmod(F.xxhash64("_ph"), F.lit(cfg.num_chunks)).cast("int"))
+        # the distinct side's `chunk` is the payload's own bucket: it only
+        # spreads the kernel tasks, and the turns keep their salted chunk
+        distinct = distinct.withColumn(
+            "chunk", F.pmod(F.xxhash64("_ph"), F.lit(cfg.num_chunks)).cast("int")
+        ).repartition(cfg.num_chunks, F.col("chunk"))
+        per_payload = _extract(distinct, model_bc, templates_bc).drop("chunk")
+        # restore the canonical partitioning/order contract after the join
+        result = (
+            hashed.drop("text").join(per_payload, "_ph")
             .repartition(cfg.num_chunks, F.col("chunk"))
-        )
-        per_payload = distinct.mapInPandas(
-            _make_kernel(model_bc, templates_bc, passthrough_col="_ph"),
-            schema="_ph string, " + RESULT_SCHEMA,
-        ).select("_ph", "extracted_text", "n_lines", "n_words", "ok", "err", "proc_us")
-        joined = (
-            hashed.select("conv_id", "turn_idx", "chunk", "_ph")
-            .join(per_payload, "_ph")
-            .drop("_ph")
-        )
-        # restore the canonical partitioning/order contract; part_id is the
-        # task that OWNS the row's chunk after this repartition (the kernel
-        # task's id would describe the distinct-payload shuffle, not the
-        # chunk->partition mapping lineage reports on)
-        return (
-            joined.repartition(cfg.num_chunks, F.col("chunk"))
             .sortWithinPartitions("conv_id", "turn_idx")
-            .withColumn("part_id", F.spark_partition_id())
-            .select(
-                "conv_id", "turn_idx", "chunk", "part_id", "extracted_text",
-                "n_lines", "n_words", "ok", "err", "proc_us",
-            )
         )
-    if gate is not None:
-        salted = gate(salted)
-    partitioned = salted.repartition(cfg.num_chunks, F.col("chunk")).sortWithinPartitions(
-        "conv_id", "turn_idx"
-    )
-    return partitioned.mapInPandas(_make_kernel(model_bc, templates_bc), schema=RESULT_SCHEMA)
+    else:
+        if gate is not None:
+            salted = gate(salted)
+        result = _extract(
+            salted.repartition(cfg.num_chunks, F.col("chunk")).sortWithinPartitions("conv_id", "turn_idx"),
+            model_bc, templates_bc,
+        )
+    # part_id is the partition that OWNS the row's chunk: the kernel task on
+    # the direct branch, the post-join repartition on the distinct-payload one
+    # (the kernel task's id there would describe the payload shuffle)
+    return (result.withColumn("part_id", F.spark_partition_id())
+            .select(*StructType.fromDDL(RESULT_SCHEMA).names))
 
 
 def _wave_of(chunk_col, num_waves: int):
@@ -389,8 +359,8 @@ def _pin_partitioning(cfg: ExtractionJobConfig, dirpath: str, owner: str,
 
 def lineage_rows(written, wave: int, golden=None):
     """Per-chunk lineage aggregate in the canonical LINEAGE_SCHEMA — the ONE
-    definition shared by the batch wave commit and the streaming foreachBatch
-    sink (stream_job.py), so a consumer written against either lineage table
+    definition, applied by `commit_unit` to batch waves and streaming
+    micro-batches alike, so a consumer written against either lineage table
     reads both.  `wave` is the commit unit id (checkpoint wave in batch,
     micro-batch id in streaming); `golden` an optional
     (conv_id, turn_idx, expected_text) frame for the per-chunk
@@ -447,12 +417,47 @@ def _committed_waves(output_dir: str) -> set[int]:
 
 def read_lineage(spark, output_dir: str):
     """All committed lineage rows, or None when no wave has committed."""
-    paths = sorted(glob.glob(os.path.join(output_dir, "lineage", "wave=*")))
-    done = [p for p in paths if os.path.exists(os.path.join(p, "_SUCCESS"))]
+    done = sorted(_committed_waves(output_dir))
     if not done:
         return None
-    df = spark.read.schema(LINEAGE_SCHEMA).parquet(*done)
-    return df
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(
+        *(os.path.join(output_dir, "lineage", f"wave={w}") for w in done)
+    )
+
+
+def commit_unit(spark, result, output_dir: str, unit: str, unit_id: int,
+                golden=None, iceberg_table: str | None = None) -> int:
+    """Commit one unit of work — a batch wave or a streaming micro-batch —
+    and return its row count.  The ONE commit sequence of both jobs:
+
+    1. write `result` to `data/<unit>=<unit_id>` (mode overwrite: a unit
+       whose data committed but whose lineage was lost is replaced
+       idempotently — the unit -> path mapping is deterministic);
+    2. read the committed files back with RESULT_SCHEMA (no schema
+       inference), so everything below sees exactly the rows that
+       committed and the kernel runs once per unit;
+    3. with `iceberg_table`, one atomic `overwritePartitions` snapshot of
+       that read-back, partitioned by `unit` (retry-idempotent; the parquet
+       directory stays the sandbox-testable system of record, so with a
+       catalog configured this dual-writes during migration);
+    4. LAST, the unit's `lineage_rows` to `lineage/<unit>=<unit_id>` — its
+       `_SUCCESS` marker is the resume ledger, and lineage can never claim
+       rows that did not commit;
+    5. the row count from a re-read of that tiny lineage, not another pass
+       over the data (collecting the lineage to the driver and writing it
+       with createDataFrame saves a job but measured slower)."""
+    from pyspark.sql import functions as F
+
+    part = f"{unit}={unit_id}"
+    data_dir = os.path.join(output_dir, "data", part)
+    lin_dir = os.path.join(output_dir, "lineage", part)
+    result.write.mode("overwrite").parquet(data_dir)
+    written = spark.read.schema(RESULT_SCHEMA).parquet(data_dir)
+    if iceberg_table:
+        written.withColumn(unit, F.lit(unit_id)).writeTo(iceberg_table).overwritePartitions()
+    lineage_rows(written, unit_id, golden).coalesce(1).write.mode("overwrite").parquet(lin_dir)
+    return (spark.read.schema(LINEAGE_SCHEMA).parquet(lin_dir)
+            .agg(F.sum("rows_processed")).collect()[0][0] or 0)
 
 
 def run_extraction(
@@ -495,6 +500,8 @@ def run_extraction(
     # broadcast once for the whole run; every wave's plan reuses the handles
     model_bc = spark.sparkContext.broadcast(model or CharModel.load(cfg.model_path))
     templates_bc = spark.sparkContext.broadcast(templates or [])
+    golden = spark.read.parquet(cfg.golden_path) if cfg.golden_path else None
+    iceberg_table = cfg.iceberg_table if cfg.iceberg_table and _iceberg_available(spark) else None
 
     # resume ledger = the lineage directories' commit markers, NOT the
     # lineage row values: an all-dropped wave commits an empty-but-valid
@@ -505,14 +512,8 @@ def run_extraction(
     rows_written = 0
     t_start = time.time()
     for wave in range(cfg.num_waves):
-        data_dir = os.path.join(output_dir, "data", f"wave={wave}")
-        lin_dir = os.path.join(output_dir, "lineage", f"wave={wave}")
         if wave in done_waves:
             continue
-        # data committed but lineage lost -> idempotent overwrite
-        if os.path.exists(data_dir):
-            shutil.rmtree(data_dir, ignore_errors=True)
-
         # per-wave plan: the wave predicate sits BELOW the kernel (on the
         # pre-shuffle salted chunk), so this wave scans/shuffles/extracts
         # only its own 1/num_waves of the rows; with a staged input the
@@ -527,34 +528,8 @@ def run_extraction(
             wave_df = plan_extraction(
                 spark, df, cfg, wave=wave, model_bc=model_bc, templates_bc=templates_bc
             )
-        wave_df.write.mode("overwrite").parquet(data_dir)
-        if cfg.iceberg_table and _iceberg_available(spark):
-            # production path: one atomic Iceberg snapshot per wave
-            # (overwritePartitions on the wave partition -> retry-idempotent),
-            # fed from the COMMITTED parquet files so the kernel runs exactly
-            # once per wave and the snapshot's rows are the committed rows;
-            # the parquet wave directory stays the sandbox-testable system of
-            # record, so with a catalog configured this dual-writes during
-            # migration
-            (spark.read.parquet(data_dir).withColumn("wave", F.lit(wave))
-             .writeTo(cfg.iceberg_table).overwritePartitions())
-
-        # lineage derived from the COMMITTED files (read-back of the tiny
-        # metric columns only -> column-pruned scan), so lineage can never
-        # claim rows that did not commit
-        written = spark.read.parquet(data_dir)
-        golden = (
-            spark.read.parquet(cfg.golden_path) if cfg.golden_path else None
-        )
-        lin = lineage_rows(written, wave, golden)
-        lin.coalesce(1).write.mode("overwrite").parquet(lin_dir)
+        rows_written += commit_unit(spark, wave_df, output_dir, "wave", wave, golden, iceberg_table)
         waves_run += 1
-        # row count from the just-committed (tiny) lineage — not another
-        # pass over the wave's data
-        rows_written += (
-            spark.read.schema(LINEAGE_SCHEMA).parquet(lin_dir)
-            .agg(F.sum("rows_processed")).collect()[0][0] or 0
-        )
         if fail_after_wave is not None and waves_run >= fail_after_wave:
             raise RuntimeError(f"injected failure after wave {wave}")
 

@@ -3,10 +3,11 @@
 1. Streaming extraction (`run_streaming_extraction`): the transcripts table
    as an append-only file stream -> the SAME batch plan (salted chunk,
    repartition, sortWithinPartitions, mapInPandas kernel) applied per
-   micro-batch via foreachBatch.  Each micro-batch writes an idempotent
-   `batch=<id>` data directory plus lineage rows, and Spark's streaming
-   checkpoint guarantees a killed stream resumes at the first uncommitted
-   batch — the streaming twin of the batch job's wave checkpointing.
+   micro-batch via foreachBatch.  Each micro-batch commits through the
+   batch job's `job.commit_unit` (an idempotent `batch=<id>` data directory,
+   then its lineage rows), and Spark's streaming checkpoint guarantees a
+   killed stream resumes at the first uncommitted batch — the streaming twin
+   of the batch job's wave checkpointing.
    (sortWithinPartitions is not allowed on an unbounded stream; inside
    foreachBatch the micro-batch is a bounded DataFrame, so the full batch
    plan applies unchanged.)
@@ -20,7 +21,7 @@ from __future__ import annotations
 
 import os
 
-from ..job import ExtractionJobConfig, lineage_rows, plan_extraction
+from ..job import ExtractionJobConfig, commit_unit, plan_extraction
 from ..kernel.classifier import CharModel
 
 __all__ = ["run_streaming_extraction", "streaming_events_hourly", "streaming_conv_progress",
@@ -151,17 +152,9 @@ def run_streaming_extraction(
         result = plan_extraction(
             df.sparkSession, df, cfg, model_bc=model_bc, templates_bc=templates_bc
         )
-        data_dir = os.path.join(output_dir, "data", f"batch={batch_id}")
-        result.write.mode("overwrite").parquet(data_dir)  # idempotent per batch id
-        written = df.sparkSession.read.parquet(data_dir)
-        # lineage in the CANONICAL batch LINEAGE_SCHEMA (job.lineage_rows):
-        # `wave` carries the micro-batch id, so one consumer reads the batch
-        # and streaming lineage tables interchangeably (pre-r3 the streaming
-        # schema was a column subset and broke such consumers)
-        lin = lineage_rows(written, int(batch_id), golden)
-        lin.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(output_dir, "lineage", f"batch={batch_id}")
-        )
+        # idempotent per batch id; lineage's `wave` column carries the
+        # micro-batch id, so one consumer reads batch and streaming lineage
+        commit_unit(df.sparkSession, result, output_dir, "batch", int(batch_id), golden)
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

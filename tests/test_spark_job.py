@@ -130,7 +130,10 @@ def test_dedup_payloads_plan_equivalent(spark, synth_dir, tmp_path):
     from arabic_ocr_spark.job import plan_extraction
 
     df = spark.read.parquet(f"{synth_dir}/transcripts.parquet").filter(F.col("text") != "")
-    cols = ["conv_id", "turn_idx", "chunk", "extracted_text", "n_lines", "n_words", "ok", "err"]
+    # part_id included: both plans end in the same projection, so they must
+    # agree on the partition that owns each row
+    cols = ["conv_id", "turn_idx", "chunk", "part_id", "extracted_text", "n_lines", "n_words",
+            "ok", "err"]
     direct = plan_extraction(spark, df, _cfg()).select(cols)
     cfg2 = _cfg()
     cfg2.dedup_payloads = True
@@ -138,6 +141,27 @@ def test_dedup_payloads_plan_equivalent(spark, synth_dir, tmp_path):
     assert direct.count() == deduped.count()
     assert direct.exceptAll(deduped).count() == 0
     assert deduped.exceptAll(direct).count() == 0
+
+
+def test_spark_job_count_per_run(spark, synth_dir, tmp_path):
+    """Pins the Spark jobs a 3-wave run with a golden table starts: the
+    golden read happens once per run and every wave commit reads its files
+    back with RESULT_SCHEMA (no schema-inference job per read-back)."""
+    sc = spark.sparkContext
+    cfg = _cfg(golden_path=f"{synth_dir}/transcripts_golden.parquet")
+    group = f"job-count-{os.path.basename(str(tmp_path))}"
+    sc.setJobGroup(group, group)
+    try:
+        stats = run_extraction(spark, f"{synth_dir}/transcripts.parquet", str(tmp_path / "out"), cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events land asynchronously
+    assert stats["waves_run"] == 3
+    # 2 per run (schema reads of the input and the golden table) + 7 per
+    # wave (5 for the data and lineage writes with their shuffle stages, 2
+    # for the lineage re-read); a per-wave golden read and schema-inferred
+    # read-back would make it 28
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 23
 
 
 def test_lineage_extraction_accuracy(spark, synth_dir, tmp_path):

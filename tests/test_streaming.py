@@ -84,7 +84,7 @@ def test_streaming_lineage_schema_equals_batch(spark, stream_synth, tmp_path):  
     """One consumer reads both lineage tables: the streaming foreachBatch
     sink emits the canonical batch LINEAGE_SCHEMA (wave = micro-batch id),
     not a column subset."""
-    from arabic_ocr_spark.job import LINEAGE_SCHEMA, run_extraction
+    from arabic_ocr_spark.job import LINEAGE_SCHEMA, RESULT_SCHEMA, run_extraction
 
     s_out, b_out = str(tmp_path / "sout"), str(tmp_path / "bout")
     run_streaming_extraction(spark, f"{stream_synth}/stream_in", s_out, _cfg())
@@ -98,6 +98,11 @@ def test_streaming_lineage_schema_equals_batch(spark, stream_synth, tmp_path):  
     canon = [(f.name, f.dataType) for f in spark.createDataFrame([], LINEAGE_SCHEMA).schema]
     assert [(f.name, f.dataType) for f in s_lin.schema] == canon
     assert [(f.name, f.dataType) for f in b_lin.schema] == canon
+    # and so are the committed data files: the canonical RESULT_SCHEMA
+    result = [(f.name, f.dataType) for f in spark.createDataFrame([], RESULT_SCHEMA).schema]
+    for out, unit in ((s_out, "batch=0"), (b_out, "wave=0")):
+        data = spark.read.parquet(os.path.join(out, "data", unit))
+        assert [(f.name, f.dataType) for f in data.schema] == result
     # a consumer can union them directly
     assert s_lin.unionByName(b_lin).count() == s_lin.count() + b_lin.count()
 
