@@ -93,16 +93,27 @@ def synth_dir_for(sf_dir: str) -> str:
     return out
 
 
-_EXTRACTION_CACHE: dict[tuple[str, str], DataFrame] = {}
+def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.read.parquet(os.path.join(synth_dir_for(sf_dir), "transcripts.parquet"))
 
 
-def _evict_cache(cache: dict, key: tuple[str, str]) -> None:
-    """Bound a per-(session, sf_dir) result cache to ONE live entry: evict
-    entries from other sessions (their persisted blocks died with the
-    stopped session, but the Python references would pin them forever) AND
-    other sf_dirs of the live session (an unbounded per-sf cache would pin
-    every scale's persisted stages for the whole application lifetime),
-    unpersisting whatever is evicted.
+_STAGES: dict[tuple[str, str], dict[str, DataFrame]] = {}
+
+
+def _stage(spark: SparkSession, sf_dir: str, name: str,
+           build: Callable[[], DataFrame]) -> DataFrame:
+    """The driver's stage memo: `build()` persisted once per
+    (session, sf_dir, name).  Several driver queries consume the same
+    expensive prefix (the kernel output, the near-dup ladder's stages, the
+    ANN top-k sets, the fused payload sweep); the first consumer pays it,
+    later consumers read the materialized partitions.  Values are identical
+    either way — every consumer is oracle- or equality-gated on its own.
+
+    The memo holds ONE live (session, sf_dir): entries of other sessions
+    (their persisted blocks died with the stopped session, but the Python
+    references would pin them forever) and of other sf_dirs of the live
+    session (an unbounded per-sf memo would pin every scale's persisted
+    stages for the whole application lifetime) are evicted and unpersisted.
 
     Known trade-off: a single session interleaving TWO scales (no current
     flow does — driver gate, bench, and tools each pin one sf_dir per
@@ -110,36 +121,30 @@ def _evict_cache(cache: dict, key: tuple[str, str]) -> None:
     flow ever appears, widen this to keep-last-K sf_dirs instead of
     exactly one.  Correctness is unaffected either way — evicted entries
     are recomputed, never reused stale."""
-    for stale in [k for k in cache if k != key]:
-        v = cache.pop(stale)
-        for df in (v.values() if isinstance(v, dict) else [v]):
+    key = (spark.sparkContext.applicationId, sf_dir)
+    for stale in [k for k in _STAGES if k != key]:
+        for df in _STAGES.pop(stale).values():
             try:
                 df.unpersist()
             except Exception:
                 pass  # session already stopped; nothing left to unpersist
+    stages = _STAGES.setdefault(key, {})
+    if name not in stages:
+        stages[name] = build().persist()
+    return stages[name]
 
 
 def _extraction_plan(spark: SparkSession, sf_dir: str, cached: bool = True) -> DataFrame:
-    """The extraction result, persisted per (session, sf_dir): several
-    driver queries (extract_turns / extract_eval / extract_lineage) consume
-    the same kernel output, and the kernel dominates their cost — the first
-    query pays it, the rest reuse the cached partitions.  cached=False
-    returns the raw un-persisted plan (plan-shape tests)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _EXTRACTION_CACHE.get(key)
-    if hit is not None and cached:
-        return hit
-    _evict_cache(_EXTRACTION_CACHE, key)
-    d = synth_dir_for(sf_dir)
-    df = spark.read.parquet(os.path.join(d, "transcripts.parquet")).filter(F.col("text") != "")
-    # 128 chunks: ~4 task rounds at 32 cores so stragglers average out
-    cfg = ExtractionJobConfig(num_chunks=128, model_path=default_model_path())
-    result = plan_extraction(spark, df, cfg, model=CharModel.load(default_model_path()))
-    if not cached:
-        return result
-    result = result.persist()
-    _EXTRACTION_CACHE[key] = result
-    return result
+    """The extraction result: extract_turns / extract_eval /
+    extract_lineage share it through _stage.  cached=False returns the raw
+    un-persisted plan (plan-shape tests)."""
+    def build():
+        df = _transcripts(spark, sf_dir).filter(F.col("text") != "")
+        # 128 chunks: ~4 task rounds at 32 cores so stragglers average out
+        cfg = ExtractionJobConfig(num_chunks=128, model_path=default_model_path())
+        return plan_extraction(spark, df, cfg, model=CharModel.load(default_model_path()))
+
+    return _stage(spark, sf_dir, "extraction", build) if cached else build()
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -167,33 +172,24 @@ def _q_extract_eval(spark, sf_dir):
     golden = spark.read.parquet(os.path.join(d, "transcripts_golden.parquet"))
     j = result.join(golden, ["conv_id", "turn_idx"])
     strip = lambda c: F.regexp_replace(c, r"\s", "")  # noqa: E731
+
+    def exact_rate(ref):
+        return F.round(F.avg((F.col("extracted_text") == F.col(ref)).cast("double")), 6)
+
+    def lev_accuracy(ref):
+        dist = F.levenshtein(strip("extracted_text"), strip(ref))
+        return F.round(F.avg(F.greatest(
+            F.lit(0.0), 1 - dist / F.greatest(F.length(strip(ref)), F.lit(1)))), 6)
+
     return j.agg(
         F.count("*").cast("long").alias("n_turns"),
         # the gate: per-turn equality vs the serial oracle
-        F.round(F.avg((F.col("extracted_text") == F.col("expected_text")).cast("double")), 6).alias("exact_match_rate"),
-        F.round(
-            F.avg(
-                F.greatest(
-                    F.lit(0.0),
-                    1 - F.levenshtein(strip("extracted_text"), strip("expected_text"))
-                    / F.greatest(F.length(strip("expected_text")), F.lit(1)),
-                )
-            ),
-            6,
-        ).alias("lev_accuracy"),
+        exact_rate("expected_text").alias("exact_match_rate"),
+        lev_accuracy("expected_text").alias("lev_accuracy"),
         # recognition quality vs the composed ground truth (bounded by the
         # reference's own deskew estimator on the rotated pool subset)
-        F.round(F.avg((F.col("extracted_text") == F.col("true_text")).cast("double")), 6).alias("true_exact_rate"),
-        F.round(
-            F.avg(
-                F.greatest(
-                    F.lit(0.0),
-                    1 - F.levenshtein(strip("extracted_text"), strip("true_text"))
-                    / F.greatest(F.length(strip("true_text")), F.lit(1)),
-                )
-            ),
-            6,
-        ).alias("true_lev_accuracy"),
+        exact_rate("true_text").alias("true_exact_rate"),
+        lev_accuracy("true_text").alias("true_lev_accuracy"),
     )
 
 
@@ -207,64 +203,33 @@ def _q_extract_lineage(spark, sf_dir):
     )
 
 
-_DEDUP_CACHE: dict[tuple[str, str], dict] = {}
-
-
 def _dedup_chain(spark: SparkSession, sf_dir: str, stage: str) -> DataFrame:
     """The near-dup ladder is a CHAIN — LSH candidates -> Jaccard-verified
     pairs -> CC groups — and four driver queries consume successive stages
-    of it, sharing the expensive prefix.  Same pattern (and precedent) as
-    the extraction-plan cache: each stage persists once per
-    (session, sf_dir); the first consumer pays it, later consumers and the
-    curation composition reuse the materialized partitions.  That is also
-    how a production pipeline consumes the ladder: compute once, read many
-    — re-deriving the LSH subtree per downstream consumer is the
-    anti-pattern the cache removes.  Values are identical either way (the
+    of it, sharing the expensive prefix through _stage.  That is also how a
+    production pipeline consumes the ladder: compute once, read many —
+    re-deriving the LSH subtree per downstream consumer is the
+    anti-pattern the memo removes.  Values are identical either way (the
     oracle gate checks every stage independently)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_cache(_DEDUP_CACHE, key)
-    cache = _DEDUP_CACHE.setdefault(key, {})
     docs = _t(spark, sf_dir, "documents")
-    if stage == "cands":
-        if "cands" not in cache:
-            cache["cands"] = lsh_candidate_pairs(docs).persist()
-        return cache["cands"]
-    if stage == "pairs":
-        if "pairs" not in cache:
-            cache["pairs"] = jaccard_verified_pairs(
-                docs, candidates=_dedup_chain(spark, sf_dir, "cands")
-            ).persist()
-        return cache["pairs"]
-    if "groups" not in cache:
-        cache["groups"] = dedup_groups(
-            docs, pairs=_dedup_chain(spark, sf_dir, "pairs")
-        ).persist()
-    return cache["groups"]
-
-
-_ANN_CACHE: dict[tuple[str, str], dict] = {}
+    build = {
+        "cands": lambda: lsh_candidate_pairs(docs),
+        "pairs": lambda: jaccard_verified_pairs(
+            docs, candidates=_dedup_chain(spark, sf_dir, "cands")),
+        "groups": lambda: dedup_groups(docs, pairs=_dedup_chain(spark, sf_dir, "pairs")),
+    }[stage]
+    return _stage(spark, sf_dir, f"dedup.{stage}", build)
 
 
 def _ann_chain(spark: SparkSession, sf_dir: str, stage: str) -> DataFrame:
     """The ANN suite shares its materialized stages the way the dedup
-    ladder does: the exact cosine baseline, the IVF top-k and the LSH top-k
-    each persist once per (session, sf_dir); the top-k driver queries and
-    the ann_recall measurement consume the SAME results (pre-r4 ann_recall
-    re-derived the whole suite from scratch, so the bench paid the ANN
-    queries twice).  Values are identical either way — recall is a join
-    over the same outputs."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_cache(_ANN_CACHE, key)
-    cache = _ANN_CACHE.setdefault(key, {})
-    if stage not in cache:
-        emb = _t(spark, sf_dir, "embeddings")
-        if stage == "exact":
-            cache[stage] = cosine_topk(emb).persist()
-        elif stage == "ivf":
-            cache[stage] = ivf_ann_topk(emb).persist()
-        else:
-            cache[stage] = lsh_ann_topk(emb).persist()
-    return cache[stage]
+    ladder does: the exact cosine baseline ("exact"), the IVF top-k ("ivf")
+    and the LSH top-k ("lsh") each persist once through _stage; the top-k
+    driver queries and the ann_recall measurement consume the SAME results
+    instead of paying the ANN queries twice.  Values are identical either
+    way — recall is a join over the same outputs."""
+    op = {"exact": cosine_topk, "ivf": ivf_ann_topk, "lsh": lsh_ann_topk}[stage]
+    return _stage(spark, sf_dir, f"ann.{stage}", lambda: op(_t(spark, sf_dir, "embeddings")))
 
 
 # planted-fixture shape shared by _augmented_embeddings AND its oracle
@@ -312,16 +277,11 @@ def _augmented_embeddings(spark: SparkSession, sf_dir: str,
     )
 
 
-_PROFILE_CACHE: dict[tuple[str, str], dict] = {}
-
-
 def _profile_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fused payload sweep (operators/multimodal.payload_profile) is
-    the shared prefix of the three heavy per-image driver queries —
-    payload_features, payload_ink, payload_thumbnail are column projections
-    of its ONE decode pass.  Same pattern (and precedent) as _dedup_chain:
-    the profile persists once per (session, sf_dir); the first consumer
-    pays the decode, later consumers read the materialized partitions.
+    the shared prefix of the heavy per-image driver queries —
+    payload_features, payload_ink, payload_thumbnail and payload_profile
+    are column projections of its ONE decode pass, shared through _stage.
     That is the production shape the operator exists for: payload bytes
     dominate the scan cost at 100 TB, so a pipeline wanting features + ink
     stats + thumbnails decodes each payload once, not once per consumer.
@@ -329,14 +289,8 @@ def _profile_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     independently callable and every projection is oracle-gated.
     (payload_meta stays standalone: its JVM-only envelope decode never
     touches Python, so routing it through the profile would ADD cost.)"""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    _evict_cache(_PROFILE_CACHE, key)
-    cache = _PROFILE_CACHE.setdefault(key, {})
-    if "profile" not in cache:
-        d = synth_dir_for(sf_dir)
-        df = spark.read.parquet(os.path.join(d, "transcripts.parquet"))
-        cache["profile"] = payload_profile(df).persist()
-    return cache["profile"]
+    return _stage(spark, sf_dir, "profile",
+                  lambda: payload_profile(_transcripts(spark, sf_dir)))
 
 
 def _q_payload_meta(spark, sf_dir):
@@ -349,10 +303,7 @@ def _q_payload_meta(spark, sf_dir):
     NON-default sf_dir pass it to oracle_sql(sf_dir=...) explicitly (or set
     SPARK_GRAFT_ORACLE_SF_DIR) — query builders no longer mutate process
     globals, so oracle/query alignment is order-independent."""
-    d = synth_dir_for(sf_dir)
-    df = spark.read.parquet(os.path.join(d, "transcripts.parquet"))
-    m = payload_meta(df)
-    return m.select(
+    return payload_meta(_transcripts(spark, sf_dir)).select(
         "conv_id", "turn_idx",
         F.col("height").cast("long").alias("height"),
         F.col("width").cast("long").alias("width"),
@@ -455,7 +406,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rank", F.col("rank").cast("long"))
     # the DETERMINISTIC candidate stage of ann_lsh_topk, oracle-gated: the
     # DuckDB twin replays the seeded Gaussian planes as SQL literals and the
-    # same sign-of-projection bucketing (see _sql_lsh_ann_candidates)
+    # same sign-of-projection bucketing (see _sql_band_sig)
     q["ann_lsh_candidates"] = lambda s, d: lsh_ann_candidates(_t(s, d, "embeddings"))
     q["ann_recall"] = lambda s, d: ann_recall(
         _t(s, d, "embeddings"),
@@ -615,14 +566,48 @@ FROM s
 """
 
 
-def _sql_lsh_ann_cte(dim: int, n_queries: int = 5, n_planes: int = 4,
-                     n_tables: int = 16, seed: int = 11) -> str:
-    """Shared WITH-prefix for the ANN-LSH oracles (candidates + full top-k):
-    DuckDB twin of similarity._band_buckets — the Gaussian plane matrix is a
-    PURE FUNCTION of (seed, bits, dim), regenerated here with the identical
-    numpy call and inlined as float64 SQL literals (repr round-trips doubles
-    exactly), so DuckDB evaluates the same sign-of-projection buckets over
-    the same parquet floats.
+_SQL_VECS = "v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS emb FROM embeddings)"
+
+
+def _sql_cos(a: str, b: str) -> str:
+    """Cosine of two DOUBLE lists rounded to 4 places — the twin of
+    similarity._cosine's sequential left-fold."""
+    return (f"round(list_dot_product({a}, {b}) / "
+            f"(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 4)")
+
+
+def _sql_topk(sims: str, k: int, cols: str) -> str:
+    """The deterministic (sim_r DESC, neighbor_id ASC) top-k of a
+    (query_id, neighbor_id, sim_r) relation — the twin of
+    similarity._top_k."""
+    return f"""SELECT {cols} FROM (
+  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim_r DESC, neighbor_id ASC) AS rank
+  FROM {sims}
+) WHERE rank <= {k}"""
+
+
+def _sql_exact_sims(n_queries: int) -> str:
+    """Exact cosine of the first n_queries vectors against every other one."""
+    return f"""SELECT q.query_id, v.vec_id AS neighbor_id, {_sql_cos("q.qe", "v.emb")} AS sim_r
+  FROM v JOIN (SELECT vec_id AS query_id, emb AS qe FROM v WHERE vec_id < {n_queries}) q
+    ON v.vec_id <> q.query_id"""
+
+
+def _sql_sim_pairs(vecs: str, threshold: float) -> str:
+    """All (vec_a < vec_b) pairs of `vecs` at rounded cosine >= threshold."""
+    return f"""SELECT vec_a, vec_b, sim_r FROM (
+  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, {_sql_cos("a.emb", "b.emb")} AS sim_r
+  FROM {vecs} a JOIN {vecs} b ON a.vec_id < b.vec_id
+) WHERE sim_r >= {threshold}"""
+
+
+def _sql_band_sig(vecs: str, dim: int, n_bands: int, rows_per_band: int, seed: int) -> str:
+    """(vec_id, band, key) rows of `vecs` — the twin of
+    similarity._band_buckets.  The Gaussian plane matrix is a PURE FUNCTION
+    of (seed, bits, dim), regenerated here with the identical numpy call and
+    inlined as float64 SQL literals (repr round-trips doubles exactly), so
+    DuckDB evaluates the same sign-of-projection buckets over the same
+    parquet floats.
 
     Portability note: Spark computes the projections as one BLAS GEMM,
     DuckDB as sequential list_dot_product folds — different summation
@@ -633,71 +618,58 @@ def _sql_lsh_ann_cte(dim: int, n_queries: int = 5, n_planes: int = 4,
     (seed, corpus), so green once is green always."""
     import numpy as np
 
-    planes = np.random.default_rng(seed).standard_normal((n_tables * n_planes, dim))
+    planes = np.random.default_rng(seed).standard_normal((n_bands * rows_per_band, dim))
 
     def key_expr(t: int) -> str:
         terms = []
-        for j in range(n_planes):
-            lit = "[" + ", ".join(repr(x) for x in planes[t * n_planes + j]) + "]"
+        for j in range(rows_per_band):
+            lit = "[" + ", ".join(repr(x) for x in planes[t * rows_per_band + j]) + "]"
             terms.append(f"CASE WHEN list_dot_product(emb, {lit}) > 0 THEN {2 ** j} ELSE 0 END")
         return "CAST(" + " + ".join(terms) + " AS BIGINT)"
 
-    sig_branches = "\n  UNION ALL ".join(
-        f"SELECT vec_id, {t} AS band, {key_expr(t)} AS key FROM v" for t in range(n_tables)
+    return "\n  UNION ALL ".join(
+        f"SELECT vec_id, {t} AS band, {key_expr(t)} AS key FROM {vecs}" for t in range(n_bands)
     )
+
+
+def _sql_lsh_ann_cte(dim: int, n_queries: int = 5, n_planes: int = 4,
+                     n_tables: int = 16, seed: int = 11) -> str:
+    """Shared WITH-prefix for the ANN-LSH oracles: the seeded band
+    signatures, the OR-over-tables candidate pairs (`cand`) and their exact
+    cosines (`sims`)."""
     return f"""
-WITH v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS emb FROM embeddings),
+WITH {_SQL_VECS},
 sig AS (
-  {sig_branches}
+  {_sql_band_sig("v", dim, n_tables, n_planes, seed)}
 ),
 q AS (SELECT vec_id AS query_id, band, key FROM sig WHERE vec_id < {n_queries}),
 cand AS (
   SELECT DISTINCT q.query_id, s.vec_id AS neighbor_id
   FROM sig s JOIN q ON s.band = q.band AND s.key = q.key AND s.vec_id <> q.query_id
-)"""
-
-
-def _sql_lsh_ann_candidates(dim: int, **kw) -> str:
-    return _sql_lsh_ann_cte(dim, **kw) + """
-SELECT query_id, neighbor_id FROM cand
-"""
-
-
-_SQL_LSH_SIMS = """,
+),
 sims AS (
-  SELECT c.query_id, c.neighbor_id,
-    round(list_dot_product(qv.emb, nv.emb)
-          / (sqrt(list_dot_product(qv.emb, qv.emb)) * sqrt(list_dot_product(nv.emb, nv.emb))), 4) AS sim_r
+  SELECT c.query_id, c.neighbor_id, {_sql_cos("qv.emb", "nv.emb")} AS sim_r
   FROM cand c
   JOIN v qv ON qv.vec_id = c.query_id
   JOIN v nv ON nv.vec_id = c.neighbor_id
 )"""
 
 
-def _sql_lsh_ann_recall(dim: int, k: int = 10, n_queries: int = 5, **kw) -> str:
+def _sql_lsh_ann_recall(dim: int, k: int = 10, n_queries: int = 5) -> str:
     """DuckDB twin of the ann_lsh_recall query: recomputes BOTH top-k sets
     from scratch — the exact cosine baseline and the banded-LSH top-k (the
-    same CTEs as the cosine_topk / ann_lsh_topk twins) — and replays the
-    left-join hit aggregate, so the recall number itself is value-gated."""
-    return _sql_lsh_ann_cte(dim, n_queries=n_queries, **kw) + _SQL_LSH_SIMS + f""",
+    same fragments as the cosine_topk / ann_lsh_topk twins) — and replays
+    the left-join hit aggregate, so the recall number itself is
+    value-gated."""
+    return _sql_lsh_ann_cte(dim, n_queries=n_queries) + f""",
 lshk AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim_r DESC, neighbor_id ASC) AS rank
-    FROM sims
-  ) WHERE rank <= {k}
+{_sql_topk("sims", k, "query_id, neighbor_id")}
 ),
 xsims AS (
-  SELECT q2.query_id, v2.vec_id AS neighbor_id,
-    round(list_dot_product(q2.qe, v2.emb)
-          / (sqrt(list_dot_product(q2.qe, q2.qe)) * sqrt(list_dot_product(v2.emb, v2.emb))), 4) AS sim_r
-  FROM v v2 JOIN (SELECT vec_id AS query_id, emb AS qe FROM v WHERE vec_id < {n_queries}) q2
-    ON v2.vec_id <> q2.query_id
+  {_sql_exact_sims(n_queries)}
 ),
 exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim_r DESC, neighbor_id ASC) AS rank
-    FROM xsims
-  ) WHERE rank <= {k}
+{_sql_topk("xsims", k, "query_id, neighbor_id")}
 )
 SELECT CAST(count(*) AS BIGINT) AS n_exact,
   CAST(coalesce(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_hit,
@@ -706,18 +678,123 @@ FROM exact e LEFT JOIN lshk l ON e.query_id = l.query_id AND e.neighbor_id = l.n
 """
 
 
-def _sql_lsh_ann_topk(dim: int, k: int = 10, **kw) -> str:
-    """Full ann_lsh_topk twin: the candidate CTE above + exact cosine over
-    the candidate pairs + the deterministic (sim_r DESC, neighbor_id ASC)
-    row_number ranking — the whole operator is a deterministic function of
-    (seed, corpus), so it is value-gated end-to-end; even its RECALL vs the
-    exact baseline is a replayable constant (see _sql_lsh_ann_recall)."""
-    return _sql_lsh_ann_cte(dim, **kw) + _SQL_LSH_SIMS + f"""
-SELECT query_id, neighbor_id, sim_r, CAST(rank AS BIGINT) AS rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim_r DESC, neighbor_id ASC) AS rank
-  FROM sims
-) WHERE rank <= {k}
-"""
+# the ranked output of the top-k twins (cosine_topk, ann_lsh_topk)
+_SQL_TOPK_COLS = "query_id, neighbor_id, sim_r, CAST(rank AS BIGINT) AS rank"
+
+
+def _sql_payload_ctes(tp: str) -> str:
+    """Shared WITH-prefix of the five payload twins, read from the synth
+    transcripts at `tp`.  Each twin is this prefix plus a short SELECT —
+    the mirror of the Spark side, where the single-product operators are
+    projections of multimodal.payload_profile; DuckDB evaluates only the
+    CTEs a twin's SELECT references.
+
+    - raw -> hdr -> dims -> ok: the envelope decode (payload_meta): base64
+      decoded and the little-endian header replayed from its hex, byte for
+      byte.
+    - bm -> rows_ink -> agg: pixel-level replay of the ink/line statistics.
+      The blob is reduced to a '1'/'0' ink bitmap C-speed (translate maps
+      each hex nibble char: 0-7 -> '1' ink-high-nibble, 8-F -> '0'; the
+      global regexp keeps the first char of each non-overlapping pair = the
+      high nibble, i.e. byte <= 127 exactly like kernel binarize_inv@127);
+      row flags + rising edges then run over h-length lists only.
+    - stats: the integer stats plus the two rounded ratios, computed as
+      EXACT integer half-up on the true rational (multimodal.round_ratio) on
+      BOTH sides: decimal ties are reachable (any denominator dividing
+      2*10^k, e.g. h*w = 128 or nz_rows/n_starts = 33/32) and no float
+      round() replays Python's binary-double rounding across engines, so
+      the compared value is derived from 64-bit integers only — the final
+      int/10^k division is IEEE-exact everywhere.  quality_ok compares the
+      UNROUNDED double ratio like the Python kernel.
+    - st -> t -> thumbs: DuckDB re-BUILDS the decimated envelope — stride
+      from the ceil-division the operator uses, stride-sampled pixel hex
+      pairs re-assembled, u16le dims re-packed, unhex + base64 — so the
+      opaque binary output column itself is value-compared byte for
+      byte."""
+    return f"""
+WITH raw AS (
+  SELECT conv_id, turn_idx, from_base64(text) AS p FROM read_parquet('{tp}')
+),
+hdr AS (
+  SELECT conv_id, turn_idx, octet_length(p) AS n, hex(p) AS hh FROM raw
+),
+dims AS (
+  SELECT conv_id, turn_idx, n, hh,
+    TRY_CAST(concat('0x', substring(hh, 11, 2), substring(hh, 9, 2)) AS BIGINT) AS h,
+    TRY_CAST(concat('0x', substring(hh, 15, 2), substring(hh, 13, 2)) AS BIGINT) AS w,
+    substring(hh, 1, 8) AS magic
+  FROM hdr
+),
+ok AS (
+  SELECT *, coalesce(n >= 8 AND magic = '47525931' AND h > 0 AND w > 0 AND n = 8 + h * w, FALSE) AS valid
+  FROM dims
+),
+bm AS (
+  SELECT conv_id, turn_idx, valid, h, w,
+    CASE WHEN valid THEN
+      regexp_replace(translate(substring(hh, 17), '0123456789ABCDEF', '1111111100000000'), '(.).', '\\1', 'g')
+    ELSE '' END AS bits
+  FROM ok
+),
+rows_ink AS (
+  SELECT conv_id, turn_idx, valid, h, w, bits,
+    CASE WHEN valid THEN
+      [instr(substring(bits, (r-1)*w + 1, w), '1') > 0 for r in generate_series(1, h)]
+    ELSE [] END AS row_flags
+  FROM bm
+),
+agg AS (
+  SELECT conv_id, turn_idx, valid, h, w,
+    length(bits) - length(replace(bits, '1', '')) AS n_ink,
+    len(list_filter(generate_series(1, h), r -> row_flags[r] AND (r = 1 OR NOT row_flags[r-1]))) AS n_starts,
+    len(list_filter(row_flags, x -> x)) AS nz_rows
+  FROM rows_ink
+),
+stats AS (
+  SELECT conv_id, turn_idx,
+    CAST(CASE WHEN valid THEN h ELSE 0 END AS BIGINT) AS height,
+    CAST(CASE WHEN valid THEN w ELSE 0 END AS BIGINT) AS width,
+    CAST(valid AS BIGINT) AS valid,
+    CAST(CASE WHEN valid THEN n_ink ELSE 0 END AS BIGINT) AS n_ink,
+    CAST(CASE WHEN valid THEN h * w ELSE 0 END AS BIGINT) AS n_pixels,
+    CAST(CASE WHEN valid THEN n_starts ELSE 0 END AS BIGINT) AS n_lines,
+    CAST(CASE WHEN valid THEN nz_rows ELSE 0 END AS BIGINT) AS nz_rows,
+    CASE WHEN valid THEN CAST((n_ink * 2000000 + h * w) // (2 * h * w) AS DOUBLE) / 1000000 ELSE 0.0 END AS ink_ratio,
+    CASE WHEN valid AND n_starts > 0 THEN CAST((nz_rows * 20000 + n_starts) // (2 * n_starts) AS DOUBLE) / 10000 ELSE 0.0 END AS mean_line_height,
+    CAST(CASE WHEN valid AND n_starts > 0
+          AND CAST(n_ink AS DOUBLE) / (h * w) >= 0.005
+          AND CAST(n_ink AS DOUBLE) / (h * w) <= 0.5
+         THEN 1 ELSE 0 END AS BIGINT) AS quality_ok
+  FROM agg
+),
+st AS (
+  SELECT conv_id, turn_idx, valid, h, w, hh,
+    CASE WHEN valid THEN greatest(1, (greatest(h, w) + 31) // 32) ELSE 1 END AS stride
+  FROM ok
+),
+t AS (
+  SELECT conv_id, turn_idx, valid, stride,
+    CASE WHEN valid THEN (h - 1) // stride + 1 ELSE 0 END AS h2,
+    CASE WHEN valid THEN (w - 1) // stride + 1 ELSE 0 END AS w2,
+    CASE WHEN valid THEN
+      array_to_string([
+        array_to_string([substring(hh, 17 + 2*(r*w + c), 2) for c in generate_series(0, w-1, stride)], '')
+        for r in generate_series(0, h-1, stride)], '')
+    ELSE '' END AS px
+  FROM st
+),
+thumbs AS (
+  SELECT conv_id, turn_idx,
+    CASE WHEN valid THEN
+      to_base64(unhex(concat('47525931',
+        lpad(hex(h2 % 256), 2, '0'), lpad(hex(h2 // 256), 2, '0'),
+        lpad(hex(w2 % 256), 2, '0'), lpad(hex(w2 // 256), 2, '0'),
+        px)))
+    ELSE '' END AS thumb,
+    CAST(h2 AS BIGINT) AS thumb_height, CAST(w2 AS BIGINT) AS thumb_width,
+    CAST(valid AS BIGINT) AS valid
+  FROM t
+)"""
 
 
 def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
@@ -823,324 +900,48 @@ SELECT doc_id,
 FROM documents
 """
 
-    sql["cosine_topk"] = """
-WITH v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS emb FROM embeddings),
-q AS (SELECT vec_id AS query_id, emb AS qe FROM v WHERE vec_id < 5),
+    sql["cosine_topk"] = f"""
+WITH {_SQL_VECS},
 sims AS (
-  SELECT q.query_id, v.vec_id AS neighbor_id,
-    round(list_dot_product(q.qe, v.emb)
-          / (sqrt(list_dot_product(q.qe, q.qe)) * sqrt(list_dot_product(v.emb, v.emb))), 4) AS sim_r
-  FROM v, q WHERE v.vec_id <> q.query_id
+  {_sql_exact_sims(5)}
 )
-SELECT query_id, neighbor_id, sim_r, CAST(rank AS BIGINT) AS rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim_r DESC, neighbor_id ASC) AS rank
-  FROM sims
-) WHERE rank <= 10
+{_sql_topk("sims", 10, _SQL_TOPK_COLS)}
 """
 
-    sql["embedding_dup_pairs"] = """
-WITH v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS emb FROM embeddings)
-SELECT vec_a, vec_b, sim_r FROM (
-  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-    round(list_dot_product(a.emb, b.emb)
-          / (sqrt(list_dot_product(a.emb, a.emb)) * sqrt(list_dot_product(b.emb, b.emb))), 4) AS sim_r
-  FROM v a JOIN v b ON a.vec_id < b.vec_id
-) WHERE sim_r >= 0.38
+    sql["embedding_dup_pairs"] = f"""
+WITH {_SQL_VECS}
+{_sql_sim_pairs("v", 0.38)}
 """
 
-    # payload_meta: the JVM-side envelope decode IS SQL-expressible — DuckDB
-    # decodes the same base64 and replays the little-endian hex arithmetic
-    # byte for byte.  The synth transcripts table is not among the driver's
-    # pre-registered views, so the oracle reads it by path; sf defaults to
-    # the driver's correctness scale (sf0.01) and tools/check_oracles.py
-    # overrides via env to keep its own sf_dir consistent.  synth_dir_for()
+    # the payload twins read the synth transcripts by path: that table is
+    # not among the driver's pre-registered views.  sf defaults to the
+    # driver's correctness scale (sf0.01) and tools/check_oracles.py passes
+    # its own sf_dir to keep the two sides consistent.  synth_dir_for()
     # builds the fixture if missing, so the oracle is self-sufficient
     # whichever side the driver runs first.
     meta_sf = sf_dir or os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
     tp = os.path.join(synth_dir_for(meta_sf), "transcripts.parquet").replace("'", "''")
-
-    # ann_lsh candidate stage: the plane literals need the corpus dim, read
-    # once from the same sf dir the driver's views point at (resolution as
-    # meta_sf above); skipped (rows-only fallback) if the table is absent
-    emb_path = os.path.join(meta_sf, "embeddings.parquet")
-    if os.path.exists(emb_path):
-        import duckdb as _duckdb
-
-        dim = _duckdb.sql(
-            f"SELECT len(embedding) FROM read_parquet('{emb_path}') LIMIT 1"
-        ).fetchone()[0]
-        sql["ann_lsh_candidates"] = _sql_lsh_ann_candidates(int(dim))
-        # the FULL LSH top-k is deterministic end-to-end (seeded candidates
-        # + exact cosine + deterministic tie-break), so it is value-gated —
-        # it leaves the rows-only set; only IVF (trained quantizer) and the
-        # recall measurement built on it remain rows-only
-        sql["ann_lsh_topk"] = _sql_lsh_ann_topk(int(dim))
-        sql["ann_lsh_recall"] = _sql_lsh_ann_recall(int(dim))
-    sql["payload_meta"] = f"""
-WITH hx AS (
-  SELECT conv_id, turn_idx,
-    octet_length(from_base64(text)) AS n, hex(from_base64(text)) AS h
-  FROM read_parquet('{tp}')
-),
-dims AS (
-  SELECT conv_id, turn_idx, n,
-    TRY_CAST(concat('0x', substring(h, 11, 2), substring(h, 9, 2)) AS BIGINT) AS ht,
-    TRY_CAST(concat('0x', substring(h, 15, 2), substring(h, 13, 2)) AS BIGINT) AS wd,
-    substring(h, 1, 8) AS magic
-  FROM hx
-),
-ok AS (
-  SELECT conv_id, turn_idx, ht, wd,
-    coalesce(n >= 8 AND magic = '47525931' AND ht > 0 AND wd > 0
-             AND n = 8 + ht * wd, FALSE) AS valid
-  FROM dims
-)
+    payload = _sql_payload_ctes(tp)
+    sql["payload_meta"] = payload + """
 SELECT conv_id, turn_idx,
-  CASE WHEN valid THEN ht ELSE 0 END AS height,
-  CASE WHEN valid THEN wd ELSE 0 END AS width,
+  CASE WHEN valid THEN h ELSE 0 END AS height,
+  CASE WHEN valid THEN w ELSE 0 END AS width,
   CAST(valid AS BIGINT) AS valid
 FROM ok
 """
-
-    # payload_ink: pixel-level replay of the ink/line statistics.  The blob
-    # is reduced to a '1'/'0' ink bitmap C-speed (translate maps each hex
-    # nibble char: 0-7 -> '1' ink-high-nibble, 8-F -> '0'; the global
-    # regexp keeps the first char of each non-overlapping pair = the high
-    # nibble, i.e. byte <= 127 exactly like kernel binarize_inv@127);
-    # row flags + rising edges then run over h-length lists only.  All
-    # outputs are exact integers — no float rounding anywhere.
-    sql["payload_ink"] = f"""
-WITH raw AS (
-  SELECT conv_id, turn_idx, from_base64(text) AS p FROM read_parquet('{tp}')
-),
-hdr AS (
-  SELECT conv_id, turn_idx, octet_length(p) AS n, hex(p) AS hh FROM raw
-),
-dims AS (
-  SELECT conv_id, turn_idx, n, hh,
-    TRY_CAST(concat('0x', substring(hh, 11, 2), substring(hh, 9, 2)) AS BIGINT) AS h,
-    TRY_CAST(concat('0x', substring(hh, 15, 2), substring(hh, 13, 2)) AS BIGINT) AS w,
-    substring(hh, 1, 8) AS magic
-  FROM hdr
-),
-ok AS (
-  SELECT *, coalesce(n >= 8 AND magic = '47525931' AND h > 0 AND w > 0 AND n = 8 + h * w, FALSE) AS valid
-  FROM dims
-),
-bm AS (
-  SELECT conv_id, turn_idx, valid, h, w,
-    CASE WHEN valid THEN
-      regexp_replace(translate(substring(hh, 17), '0123456789ABCDEF', '1111111100000000'), '(.).', '\\1', 'g')
-    ELSE '' END AS bits
-  FROM ok
-),
-rows_ink AS (
-  SELECT conv_id, turn_idx, valid, h, w, bits,
-    CASE WHEN valid THEN
-      [instr(substring(bits, (r-1)*w + 1, w), '1') > 0 for r in generate_series(1, h)]
-    ELSE [] END AS row_flags
-  FROM bm
-)
-SELECT conv_id, turn_idx,
-  CASE WHEN valid THEN CAST(length(bits) - length(replace(bits, '1', '')) AS BIGINT) ELSE 0 END AS n_ink,
-  CASE WHEN valid THEN h * w ELSE 0 END AS n_pixels,
-  CASE WHEN valid THEN CAST(len(list_filter(generate_series(1, h), r -> row_flags[r] AND (r = 1 OR NOT row_flags[r-1]))) AS BIGINT) ELSE 0 END AS n_lines,
-  CASE WHEN valid THEN CAST(len(list_filter(row_flags, x -> x)) AS BIGINT) ELSE 0 END AS nz_rows
-FROM rows_ink
+    sql["payload_ink"] = payload + """
+SELECT conv_id, turn_idx, n_ink, n_pixels, n_lines, nz_rows FROM stats
 """
-
-    # payload_features: the ratio/quality view over the same bitmap replay
-    # as payload_ink.  The two rounded ratios are computed as EXACT integer
-    # half-up on the true rational (operators/multimodal.round_ratio) on
-    # BOTH sides: decimal ties are reachable (any denominator dividing
-    # 2*10^k, e.g. h*w = 128 or nz_rows/n_starts = 33/32) and no float
-    # round() replays Python's binary-double rounding across engines, so
-    # the compared value is derived from 64-bit integers only — the final
-    # int/10^k division is IEEE-exact everywhere.  quality_ok compares the
-    # UNROUNDED double ratio like the Python kernel.
-    sql["payload_features"] = f"""
-WITH raw AS (
-  SELECT conv_id, turn_idx, from_base64(text) AS p FROM read_parquet('{tp}')
-),
-hdr AS (
-  SELECT conv_id, turn_idx, octet_length(p) AS n, hex(p) AS hh FROM raw
-),
-dims AS (
-  SELECT conv_id, turn_idx, n, hh,
-    TRY_CAST(concat('0x', substring(hh, 11, 2), substring(hh, 9, 2)) AS BIGINT) AS h,
-    TRY_CAST(concat('0x', substring(hh, 15, 2), substring(hh, 13, 2)) AS BIGINT) AS w,
-    substring(hh, 1, 8) AS magic
-  FROM hdr
-),
-ok AS (
-  SELECT *, coalesce(n >= 8 AND magic = '47525931' AND h > 0 AND w > 0 AND n = 8 + h * w, FALSE) AS valid
-  FROM dims
-),
-bm AS (
-  SELECT conv_id, turn_idx, valid, h, w,
-    CASE WHEN valid THEN
-      regexp_replace(translate(substring(hh, 17), '0123456789ABCDEF', '1111111100000000'), '(.).', '\\1', 'g')
-    ELSE '' END AS bits
-  FROM ok
-),
-rows_ink AS (
-  SELECT conv_id, turn_idx, valid, h, w, bits,
-    CASE WHEN valid THEN
-      [instr(substring(bits, (r-1)*w + 1, w), '1') > 0 for r in generate_series(1, h)]
-    ELSE [] END AS row_flags
-  FROM bm
-),
-agg AS (
-  SELECT conv_id, turn_idx, valid, h, w,
-    length(bits) - length(replace(bits, '1', '')) AS n_ink,
-    len(list_filter(generate_series(1, h), r -> row_flags[r] AND (r = 1 OR NOT row_flags[r-1]))) AS n_starts,
-    len(list_filter(row_flags, x -> x)) AS nz_rows
-  FROM rows_ink
-)
-SELECT conv_id, turn_idx,
-  CAST(CASE WHEN valid THEN h ELSE 0 END AS BIGINT) AS height,
-  CAST(CASE WHEN valid THEN w ELSE 0 END AS BIGINT) AS width,
-  CAST(valid AS BIGINT) AS valid,
-  CASE WHEN valid THEN CAST((n_ink * 2000000 + h * w) // (2 * h * w) AS DOUBLE) / 1000000 ELSE 0.0 END AS ink_ratio,
-  CAST(CASE WHEN valid THEN n_starts ELSE 0 END AS BIGINT) AS n_lines,
-  CASE WHEN valid AND n_starts > 0 THEN CAST((nz_rows * 20000 + n_starts) // (2 * n_starts) AS DOUBLE) / 10000 ELSE 0.0 END AS mean_line_height,
-  CAST(CASE WHEN valid AND n_starts > 0
-        AND CAST(n_ink AS DOUBLE) / (h * w) >= 0.005
-        AND CAST(n_ink AS DOUBLE) / (h * w) <= 0.5
-       THEN 1 ELSE 0 END AS BIGINT) AS quality_ok
-FROM agg
+    sql["payload_features"] = payload + """
+SELECT conv_id, turn_idx, height, width, valid, ink_ratio, n_lines, mean_line_height, quality_ok
+FROM stats
 """
-
-    # payload_thumbnail: DuckDB re-BUILDS the decimated envelope — stride
-    # from the ceil-division the operator uses, stride-sampled pixel hex
-    # pairs re-assembled, u16le dims re-packed, unhex + base64 — so the
-    # opaque binary output column itself is value-compared byte for byte.
-    sql["payload_thumbnail"] = f"""
-WITH raw AS (
-  SELECT conv_id, turn_idx, from_base64(text) AS p FROM read_parquet('{tp}')
-),
-hdr AS (
-  SELECT conv_id, turn_idx, octet_length(p) AS n, hex(p) AS hh FROM raw
-),
-dims AS (
-  SELECT conv_id, turn_idx, n, hh,
-    TRY_CAST(concat('0x', substring(hh, 11, 2), substring(hh, 9, 2)) AS BIGINT) AS h,
-    TRY_CAST(concat('0x', substring(hh, 15, 2), substring(hh, 13, 2)) AS BIGINT) AS w,
-    substring(hh, 1, 8) AS magic
-  FROM hdr
-),
-ok AS (
-  SELECT *, coalesce(n >= 8 AND magic = '47525931' AND h > 0 AND w > 0 AND n = 8 + h * w, FALSE) AS valid
-  FROM dims
-),
-st AS (
-  SELECT conv_id, turn_idx, valid, h, w, hh,
-    CASE WHEN valid THEN greatest(1, (greatest(h, w) + 31) // 32) ELSE 1 END AS stride
-  FROM ok
-),
-t AS (
-  SELECT conv_id, turn_idx, valid, stride,
-    CASE WHEN valid THEN (h - 1) // stride + 1 ELSE 0 END AS h2,
-    CASE WHEN valid THEN (w - 1) // stride + 1 ELSE 0 END AS w2,
-    CASE WHEN valid THEN
-      array_to_string([
-        array_to_string([substring(hh, 17 + 2*(r*w + c), 2) for c in generate_series(0, w-1, stride)], '')
-        for r in generate_series(0, h-1, stride)], '')
-    ELSE '' END AS px
-  FROM st
-)
-SELECT conv_id, turn_idx,
-  CASE WHEN valid THEN
-    to_base64(unhex(concat('47525931',
-      lpad(hex(h2 % 256), 2, '0'), lpad(hex(h2 // 256), 2, '0'),
-      lpad(hex(w2 % 256), 2, '0'), lpad(hex(w2 // 256), 2, '0'),
-      px)))
-  ELSE '' END AS thumb,
-  CAST(h2 AS BIGINT) AS height, CAST(w2 AS BIGINT) AS width, CAST(valid AS BIGINT) AS valid
-FROM t
+    sql["payload_thumbnail"] = payload + """
+SELECT conv_id, turn_idx, thumb, thumb_height AS height, thumb_width AS width, valid FROM thumbs
 """
-
-    # payload_profile: the fused sweep's oracle composes the payload_ink
-    # bitmap replay (integer stats + half-up ratio arithmetic) with the
-    # thumbnail envelope re-build, joined on the turn key from the shared
-    # header CTEs — every fused column is value-compared in one statement.
-    sql["payload_profile"] = f"""
-WITH raw AS (
-  SELECT conv_id, turn_idx, from_base64(text) AS p FROM read_parquet('{tp}')
-),
-hdr AS (
-  SELECT conv_id, turn_idx, octet_length(p) AS n, hex(p) AS hh FROM raw
-),
-dims AS (
-  SELECT conv_id, turn_idx, n, hh,
-    TRY_CAST(concat('0x', substring(hh, 11, 2), substring(hh, 9, 2)) AS BIGINT) AS h,
-    TRY_CAST(concat('0x', substring(hh, 15, 2), substring(hh, 13, 2)) AS BIGINT) AS w,
-    substring(hh, 1, 8) AS magic
-  FROM hdr
-),
-ok AS (
-  SELECT *, coalesce(n >= 8 AND magic = '47525931' AND h > 0 AND w > 0 AND n = 8 + h * w, FALSE) AS valid
-  FROM dims
-),
-bm AS (
-  SELECT conv_id, turn_idx, valid, h, w,
-    CASE WHEN valid THEN
-      regexp_replace(translate(substring(hh, 17), '0123456789ABCDEF', '1111111100000000'), '(.).', '\\1', 'g')
-    ELSE '' END AS bits
-  FROM ok
-),
-rows_ink AS (
-  SELECT conv_id, turn_idx, valid, h, w, bits,
-    CASE WHEN valid THEN
-      [instr(substring(bits, (r-1)*w + 1, w), '1') > 0 for r in generate_series(1, h)]
-    ELSE [] END AS row_flags
-  FROM bm
-),
-agg AS (
-  SELECT conv_id, turn_idx, valid, h, w,
-    length(bits) - length(replace(bits, '1', '')) AS n_ink,
-    len(list_filter(generate_series(1, h), r -> row_flags[r] AND (r = 1 OR NOT row_flags[r-1]))) AS n_starts,
-    len(list_filter(row_flags, x -> x)) AS nz_rows
-  FROM rows_ink
-),
-st AS (
-  SELECT conv_id, turn_idx, valid, h, w, hh,
-    CASE WHEN valid THEN greatest(1, (greatest(h, w) + 31) // 32) ELSE 1 END AS stride
-  FROM ok
-),
-t AS (
-  SELECT conv_id, turn_idx, valid, stride,
-    CASE WHEN valid THEN (h - 1) // stride + 1 ELSE 0 END AS h2,
-    CASE WHEN valid THEN (w - 1) // stride + 1 ELSE 0 END AS w2,
-    CASE WHEN valid THEN
-      array_to_string([
-        array_to_string([substring(hh, 17 + 2*(r*w + c), 2) for c in generate_series(0, w-1, stride)], '')
-        for r in generate_series(0, h-1, stride)], '')
-    ELSE '' END AS px
-  FROM st
-)
-SELECT a.conv_id, a.turn_idx,
-  CAST(CASE WHEN a.valid THEN a.h ELSE 0 END AS BIGINT) AS height,
-  CAST(CASE WHEN a.valid THEN a.w ELSE 0 END AS BIGINT) AS width,
-  CAST(a.valid AS BIGINT) AS valid,
-  CAST(CASE WHEN a.valid THEN a.n_ink ELSE 0 END AS BIGINT) AS n_ink,
-  CAST(CASE WHEN a.valid THEN a.h * a.w ELSE 0 END AS BIGINT) AS n_pixels,
-  CAST(CASE WHEN a.valid THEN a.n_starts ELSE 0 END AS BIGINT) AS n_lines,
-  CAST(CASE WHEN a.valid THEN a.nz_rows ELSE 0 END AS BIGINT) AS nz_rows,
-  CASE WHEN a.valid THEN CAST((a.n_ink * 2000000 + a.h * a.w) // (2 * a.h * a.w) AS DOUBLE) / 1000000 ELSE 0.0 END AS ink_ratio,
-  CASE WHEN a.valid AND a.n_starts > 0 THEN CAST((a.nz_rows * 20000 + a.n_starts) // (2 * a.n_starts) AS DOUBLE) / 10000 ELSE 0.0 END AS mean_line_height,
-  CAST(CASE WHEN a.valid AND a.n_starts > 0
-        AND CAST(a.n_ink AS DOUBLE) / (a.h * a.w) >= 0.005
-        AND CAST(a.n_ink AS DOUBLE) / (a.h * a.w) <= 0.5
-       THEN 1 ELSE 0 END AS BIGINT) AS quality_ok,
-  CASE WHEN t.valid THEN
-    to_base64(unhex(concat('47525931',
-      lpad(hex(t.h2 % 256), 2, '0'), lpad(hex(t.h2 // 256), 2, '0'),
-      lpad(hex(t.w2 % 256), 2, '0'), lpad(hex(t.w2 // 256), 2, '0'),
-      t.px)))
-  ELSE '' END AS thumb,
-  CAST(t.h2 AS BIGINT) AS thumb_height, CAST(t.w2 AS BIGINT) AS thumb_width
-FROM agg a JOIN t ON a.conv_id = t.conv_id AND a.turn_idx = t.turn_idx
+    sql["payload_profile"] = payload + """
+SELECT stats.*, thumbs.thumb, thumbs.thumb_height, thumbs.thumb_width
+FROM stats JOIN thumbs ON stats.conv_id = thumbs.conv_id AND stats.turn_idx = thumbs.turn_idx
 """
 
     # high-threshold near-dup: the oracle replays the deterministic planting
@@ -1150,60 +951,55 @@ FROM agg a JOIN t ON a.conv_id = t.conv_id AND a.turn_idx = t.turn_idx
     perturb = ("[emb[g] * (1 + {amp} * (((g-1) % 7) - 3) / CAST(30.0 AS DOUBLE)) "
                "for g in generate_series(1, len(emb))]")
     aug_cte = f"""
-WITH base AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS emb FROM embeddings),
+WITH {_SQL_VECS},
 aug AS (
-  SELECT vec_id, emb FROM base
+  SELECT vec_id, emb FROM v
   UNION ALL
   SELECT vec_id + 1000000, {perturb.format(amp="CAST(0.5 AS DOUBLE) * (1 + vec_id % 4)")}
-  FROM base WHERE vec_id < {_N_PLANTED}
+  FROM v WHERE vec_id < {_N_PLANTED}
   UNION ALL
   SELECT vec_id + 2000000, {perturb.format(amp="CAST(6.0 AS DOUBLE)")}
-  FROM base WHERE vec_id >= {_N_PLANTED} AND vec_id < {_N_PLANTED + _N_DECOYS}
+  FROM v WHERE vec_id >= {_N_PLANTED} AND vec_id < {_N_PLANTED + _N_DECOYS}
 )"""
-    sql["embedding_neardup_hi"] = aug_cte + """
-SELECT vec_a, vec_b, sim_r FROM (
-  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-    round(list_dot_product(a.emb, b.emb)
-          / (sqrt(list_dot_product(a.emb, a.emb)) * sqrt(list_dot_product(b.emb, b.emb))), 4) AS sim_r
-  FROM aug a JOIN aug b ON a.vec_id < b.vec_id
-) WHERE sim_r >= 0.95
+    sql["embedding_neardup_hi"] = aug_cte + f"""
+{_sql_sim_pairs("aug", 0.95)}
 """
 
-    # the near-dup candidate stage, oracle-gated like ann_lsh_candidates:
-    # the twin replays the collision-model (b, r) for the SAME corpus count
-    # the Spark query derives, the seed-7 planes as literals, and the
-    # banded sign-bucket self-join over its own aug reconstruction
+    # the seeded band-signature twins need the corpus dim (and the near-dup
+    # cands the aug row count), read once from the same sf dir the driver's
+    # views point at (resolution as meta_sf above); skipped (rows-only
+    # fallback) if the table is absent
+    emb_path = os.path.join(meta_sf, "embeddings.parquet")
     if os.path.exists(emb_path):
-        import duckdb as _duckdb2
-        import numpy as _np
+        import duckdb
 
         # the aug row count REPLAYS the planted branches' id-range filters
         # (not a constant +50): on a fixture with sparse or missing low ids
         # both engines must size the banding from the same n
-        base_n, n_planted, n_decoys = _duckdb2.sql(f"""
-            SELECT count(*),
+        dim, base_n, n_planted, n_decoys = duckdb.sql(f"""
+            SELECT any_value(len(embedding)), count(*),
                    count(*) FILTER (vec_id < {_N_PLANTED}),
                    count(*) FILTER (vec_id >= {_N_PLANTED}
                                     AND vec_id < {_N_PLANTED + _N_DECOYS})
             FROM read_parquet('{emb_path}')
         """).fetchone()
-        n_aug = int(base_n) + int(n_planted) + int(n_decoys)
-        nb, rpb = neardup_band_params(n_aug)
-        nd_planes = _np.random.default_rng(7).standard_normal((nb * rpb, int(dim)))
-
-        def nd_key_expr(t: int) -> str:
-            terms = []
-            for j in range(rpb):
-                lit = "[" + ", ".join(repr(x) for x in nd_planes[t * rpb + j]) + "]"
-                terms.append(f"CASE WHEN list_dot_product(emb, {lit}) > 0 THEN {2 ** j} ELSE 0 END")
-            return "CAST(" + " + ".join(terms) + " AS BIGINT)"
-
-        nd_sig = "\n  UNION ALL ".join(
-            f"SELECT vec_id, {t} AS band, {nd_key_expr(t)} AS key FROM aug" for t in range(nb)
-        )
+        dim = int(dim)
+        # the ann_lsh candidate stage, and the FULL LSH top-k: deterministic
+        # end-to-end (seeded candidates + exact cosine + deterministic
+        # tie-break), so it is value-gated — only IVF (trained quantizer)
+        # and the recall measurement built on it remain rows-only
+        lsh = _sql_lsh_ann_cte(dim)
+        sql["ann_lsh_candidates"] = lsh + "\nSELECT query_id, neighbor_id FROM cand\n"
+        sql["ann_lsh_topk"] = lsh + f"\n{_sql_topk('sims', 10, _SQL_TOPK_COLS)}\n"
+        sql["ann_lsh_recall"] = _sql_lsh_ann_recall(dim)
+        # the near-dup candidate stage, oracle-gated like ann_lsh_candidates:
+        # the collision-model (b, r) for the SAME corpus count the Spark
+        # query derives, the seed-7 planes, and the banded sign-bucket
+        # self-join over the oracle's own aug reconstruction
+        nb, rpb = neardup_band_params(int(base_n) + int(n_planted) + int(n_decoys))
         sql["embedding_neardup_cands"] = aug_cte + f""",
 sig AS (
-  {nd_sig}
+  {_sql_band_sig("aug", dim, nb, rpb, 7)}
 )
 SELECT DISTINCT l.vec_id AS vec_a, r.vec_id AS vec_b
 FROM sig l JOIN sig r ON l.band = r.band AND l.key = r.key AND l.vec_id < r.vec_id

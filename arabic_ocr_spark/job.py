@@ -399,36 +399,35 @@ def lineage_rows(written, wave: int, golden=None):
     )
 
 
-def _committed_waves(output_dir: str) -> set[int]:
-    """Wave ids whose lineage COMMITTED (the `_SUCCESS` marker of the
-    lineage directory, not its row contents): a wave that legitimately
-    produced zero rows — e.g. every payload dropped by the quality gate —
-    still counts as done, so a resumed run skips it instead of re-scanning
-    and re-gating it forever."""
-    done: set[int] = set()
-    for p in glob.glob(os.path.join(output_dir, "lineage", "wave=*")):
+def _committed_units(output_dir: str, unit: str = "*") -> dict[str, int]:
+    """lineage/<unit>=<id> directory -> id, for every commit unit whose
+    lineage COMMITTED (the `_SUCCESS` marker of the lineage directory, not
+    its row contents): a unit that legitimately produced zero rows — e.g.
+    every payload dropped by the quality gate — still counts as done, so a
+    resumed run skips it instead of re-scanning and re-gating it forever."""
+    done: dict[str, int] = {}
+    for p in glob.glob(os.path.join(output_dir, "lineage", f"{unit}=*")):
         if os.path.exists(os.path.join(p, "_SUCCESS")):
             try:
-                done.add(int(os.path.basename(p).split("=", 1)[1]))
+                done[p] = int(os.path.basename(p).split("=", 1)[1])
             except ValueError:
                 pass
     return done
 
 
 def read_lineage(spark, output_dir: str):
-    """All committed lineage rows, or None when no wave has committed."""
-    done = sorted(_committed_waves(output_dir))
+    """All committed lineage rows — batch waves and streaming micro-batches
+    alike — or None when no unit has committed."""
+    done = _committed_units(output_dir)
     if not done:
         return None
-    return spark.read.schema(LINEAGE_SCHEMA).parquet(
-        *(os.path.join(output_dir, "lineage", f"wave={w}") for w in done)
-    )
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(*sorted(done))
 
 
 def commit_unit(spark, result, output_dir: str, unit: str, unit_id: int,
-                golden=None, iceberg_table: str | None = None) -> int:
-    """Commit one unit of work — a batch wave or a streaming micro-batch —
-    and return its row count.  The ONE commit sequence of both jobs:
+                golden=None, iceberg_table: str | None = None) -> None:
+    """Commit one unit of work — a batch wave or a streaming micro-batch.
+    The ONE commit sequence of both jobs:
 
     1. write `result` to `data/<unit>=<unit_id>` (mode overwrite: a unit
        whose data committed but whose lineage was lost is replaced
@@ -442,10 +441,10 @@ def commit_unit(spark, result, output_dir: str, unit: str, unit_id: int,
        catalog configured this dual-writes during migration);
     4. LAST, the unit's `lineage_rows` to `lineage/<unit>=<unit_id>` — its
        `_SUCCESS` marker is the resume ledger, and lineage can never claim
-       rows that did not commit;
-    5. the row count from a re-read of that tiny lineage, not another pass
-       over the data (collecting the lineage to the driver and writing it
-       with createDataFrame saves a job but measured slower)."""
+       rows that did not commit.
+
+    Row counts are the lineage's to answer (read_lineage), not the
+    commit's: counting here would cost every unit extra Spark jobs."""
     from pyspark.sql import functions as F
 
     part = f"{unit}={unit_id}"
@@ -456,8 +455,6 @@ def commit_unit(spark, result, output_dir: str, unit: str, unit_id: int,
     if iceberg_table:
         written.withColumn(unit, F.lit(unit_id)).writeTo(iceberg_table).overwritePartitions()
     lineage_rows(written, unit_id, golden).coalesce(1).write.mode("overwrite").parquet(lin_dir)
-    return (spark.read.schema(LINEAGE_SCHEMA).parquet(lin_dir)
-            .agg(F.sum("rows_processed")).collect()[0][0] or 0)
 
 
 def run_extraction(
@@ -506,10 +503,9 @@ def run_extraction(
     # resume ledger = the lineage directories' commit markers, NOT the
     # lineage row values: an all-dropped wave commits an empty-but-valid
     # lineage file and must still be skipped on resume
-    done_waves = _committed_waves(output_dir)
+    done_waves = set(_committed_units(output_dir, "wave").values())
 
-    waves_run = 0
-    rows_written = 0
+    ran: list[int] = []
     t_start = time.time()
     for wave in range(cfg.num_waves):
         if wave in done_waves:
@@ -528,14 +524,20 @@ def run_extraction(
             wave_df = plan_extraction(
                 spark, df, cfg, wave=wave, model_bc=model_bc, templates_bc=templates_bc
             )
-        rows_written += commit_unit(spark, wave_df, output_dir, "wave", wave, golden, iceberg_table)
-        waves_run += 1
-        if fail_after_wave is not None and waves_run >= fail_after_wave:
+        commit_unit(spark, wave_df, output_dir, "wave", wave, golden, iceberg_table)
+        ran.append(wave)
+        if fail_after_wave is not None and len(ran) >= fail_after_wave:
             raise RuntimeError(f"injected failure after wave {wave}")
 
+    # one read of the tiny lineage of the waves this run committed
+    rows_written = 0
+    if ran:
+        lineage = spark.read.schema(LINEAGE_SCHEMA).parquet(
+            *(os.path.join(output_dir, "lineage", f"wave={w}") for w in ran))
+        rows_written = lineage.agg(F.sum("rows_processed")).collect()[0][0] or 0
     return {
         "waves_total": cfg.num_waves,
-        "waves_run": waves_run,
+        "waves_run": len(ran),
         "waves_skipped": len(done_waves),
         "rows_written": rows_written,
         "wall_s": time.time() - t_start,

@@ -462,9 +462,4 @@ def simhash_expr(text_col, bits: int = 16):
 def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
     """Per-document SimHash over whitespace tokens (see _simhash_total).
     Returns (doc_id, simhash)."""
-    toks = F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != F.lit(""))
-    return docs.select("doc_id", F.col("text"), ).withColumn("toks", toks).select(
-        "doc_id",
-        F.when(F.size("toks") > 0, _simhash_total(F.col("toks"), bits))
-        .otherwise(F.lit(0)).cast("long").alias("simhash"),
-    )
+    return docs.select("doc_id", simhash_expr(F.col("text"), bits).alias("simhash"))

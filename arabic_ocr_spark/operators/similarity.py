@@ -39,6 +39,50 @@ def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
 
 
+def _top_k(sims: DataFrame, k: int) -> DataFrame:
+    """The deterministic (sim_r desc, neighbor_id asc) top-k of a
+    (query_id, neighbor_id, sim_r) frame, with its 1-based `rank`."""
+    w = Window.partitionBy("query_id").orderBy(F.col("sim_r").desc(), F.col("neighbor_id").asc())
+    return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _rank_candidates(vecs: DataFrame, cand_ids: DataFrame, n_queries: int, k: int) -> DataFrame:
+    """Exact-cosine top-k over (query_id, neighbor_id) candidate ids — the
+    ranking tail of the approximate top-k operators.  Candidates carry IDS
+    ONLY; the vectors re-join by id for just the surviving pairs, the query
+    side broadcast."""
+    queries = vecs.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("q")
+    )
+    nbrs = vecs.select(F.col("vec_id").alias("neighbor_id"), "v")
+    sims = (
+        cand_ids.join(F.broadcast(queries), "query_id")
+        .join(nbrs, "neighbor_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(_cosine(F.col("q"), F.col("v")), 4).alias("sim_r"),
+        )
+    )
+    return _top_k(sims, k)
+
+
+def _verify_pairs(vecs: DataFrame, cand: DataFrame, threshold: float) -> DataFrame:
+    """Exact re-verification of (vec_a, vec_b) candidate pairs: the
+    sequential-fold HOF cosine, so emitted values are bit-identical to any
+    engine evaluating the same left-fold (the DuckDB all-pairs oracle
+    matches value-for-value)."""
+    va = vecs.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"))
+    vb = vecs.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"))
+    return (
+        cand.join(va, "vec_a")
+        .join(vb, "vec_b")
+        .select("vec_a", "vec_b", F.round(_cosine(F.col("va"), F.col("vb")), 4).alias("sim_r"))
+        .filter(F.col("sim_r") >= threshold)
+        .select("vec_a", "vec_b", "sim_r")
+    )
+
+
 def cosine_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10) -> DataFrame:
     """Top-k cosine neighbours for the first n_queries vectors.
 
@@ -56,11 +100,7 @@ def cosine_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10) -> DataF
             F.round(_cosine(F.col("q"), F.col("v")), 4).alias("sim_r"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim_r").desc(), F.col("neighbor_id").asc())
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(sims, k)
 
 
 def embedding_dup_pairs(embeddings: DataFrame, threshold: float = 0.38,
@@ -148,15 +188,7 @@ def embedding_dup_pairs(embeddings: DataFrame, threshold: float = 0.38,
             yield pd.DataFrame({"vec_a": a, "vec_b": b})
 
     cand = tasks.mapInPandas(gemm_candidates, "vec_a bigint, vec_b bigint")
-    va = vecs.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"))
-    vb = vecs.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"))
-    return (
-        cand.join(va, "vec_a")
-        .join(vb, "vec_b")
-        .select("vec_a", "vec_b", F.round(_cosine(F.col("va"), F.col("vb")), 4).alias("sim_r"))
-        .filter(F.col("sim_r") >= threshold)
-        .select("vec_a", "vec_b", "sim_r")
-    )
+    return _verify_pairs(vecs, cand, threshold)
 
 
 def _band_buckets(vecs: DataFrame, n_bands: int, rows_per_band: int, seed: int) -> DataFrame:
@@ -329,15 +361,7 @@ def embedding_neardup_hi(embeddings: DataFrame, threshold: float = 0.95,
     max_bucket_size = resolve_bucket_cap(max_bucket_size, vecs, n)
     cand = embedding_neardup_candidates(embeddings, n_bands, rows_per_band, seed,
                                         max_bucket_size)
-    va = vecs.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"))
-    vb = vecs.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"))
-    return (
-        cand.join(va, "vec_a")
-        .join(vb, "vec_b")
-        .select("vec_a", "vec_b", F.round(_cosine(F.col("va"), F.col("vb")), 4).alias("sim_r"))
-        .filter(F.col("sim_r") >= threshold)
-        .select("vec_a", "vec_b", "sim_r")
-    )
+    return _verify_pairs(vecs, cand, threshold)
 
 
 def _train_ivf_centroids(vecs: DataFrame, n_centroids: int, iters: int):
@@ -400,6 +424,29 @@ def _train_ivf_centroids(vecs: DataFrame, n_centroids: int, iters: int):
     return cent.tolist()
 
 
+def _nearest_cells(vecs: DataFrame, cent: list, n: int, id_col: str, name: str) -> DataFrame:
+    """(id_col, cell): each vector's `n` nearest centroids by cosine, the
+    top-n of one (batch x C) GEMM per Arrow batch (stable order on ties) —
+    the IVF index when n = n_assign, the query probes when n = nprobe.
+    `name` labels the MapInPandas node in query plans."""
+    import numpy as np
+    import pandas as pd
+
+    def cells(batches, cent_list=cent):
+        cent_m = np.asarray(cent_list)
+        for pdf in batches:
+            X = np.asarray([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
+            Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
+            top = np.argsort(-(Xn @ cent_m.T), kind="stable", axis=1)[:, :n]
+            yield pd.DataFrame({
+                id_col: np.repeat(pdf["vec_id"].to_numpy(), n),
+                "cell": top.reshape(-1),
+            })
+
+    cells.__name__ = name
+    return vecs.mapInPandas(cells, f"{id_col} bigint, cell int")
+
+
 def ivf_ann_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
                  n_centroids: int = 32, n_assign: int = 3, nprobe: int = 8,
                  kmeans_iters: int = 5) -> DataFrame:
@@ -422,65 +469,23 @@ def ivf_ann_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
     the corpus; candidate generation joins the C-cell index against the
     broadcast query probes; only candidates (a cell-bounded fraction of the
     corpus) reach the exact-cosine ranking."""
-    import numpy as np
-    import pandas as pd
-
     vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
     cent = _train_ivf_centroids(vecs, n_centroids, kmeans_iters)
 
     # the index and probe tables carry IDS ONLY: shipping the vectors
     # through the cell join (duplicated n_assign x / nprobe x) would shuffle
-    # ~3x the corpus vector bytes at scale; instead the exact-cosine ranking
-    # re-joins vectors by id for just the surviving candidates — the same
-    # shape the near-dup verify stages use
-    def index_cells(batches, cent_list=cent, a=n_assign):
-        cent_m = np.asarray(cent_list)
-        for pdf in batches:
-            X = np.asarray([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
-            Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-            top = np.argsort(-(Xn @ cent_m.T), kind="stable", axis=1)[:, :a]
-            yield pd.DataFrame({
-                "vec_id": np.repeat(pdf["vec_id"].to_numpy(), a),
-                "cell": top.reshape(-1),
-            })
-
-    def probe_cells(batches, cent_list=cent, p=nprobe):
-        cent_m = np.asarray(cent_list)
-        for pdf in batches:
-            X = np.asarray([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
-            Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-            top = np.argsort(-(Xn @ cent_m.T), kind="stable", axis=1)[:, :p]
-            yield pd.DataFrame({
-                "query_id": np.repeat(pdf["vec_id"].to_numpy(), p),
-                "cell": top.reshape(-1),
-            })
-
-    indexed = vecs.mapInPandas(index_cells, "vec_id bigint, cell int")
-    probes = (
-        vecs.filter(F.col("vec_id") < n_queries)
-        .mapInPandas(probe_cells, "query_id bigint, cell int")
-    )
+    # ~3x the corpus vector bytes at scale; _rank_candidates re-joins
+    # vectors by id for just the surviving candidates
+    indexed = _nearest_cells(vecs, cent, n_assign, "vec_id", "index_cells")
+    probes = _nearest_cells(vecs.filter(F.col("vec_id") < n_queries), cent, nprobe, "query_id",
+                            "probe_cells")
     cand_ids = (
         indexed.join(F.broadcast(probes), "cell")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
         .dropDuplicates(["query_id", "neighbor_id"])  # multi-assign x multi-probe overlap
     )
-    queries = vecs.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("q")
-    )
-    nbrs = vecs.select(F.col("vec_id").alias("neighbor_id"), "v")
-    sims = (
-        cand_ids.join(F.broadcast(queries), "query_id")
-        .join(nbrs, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(_cosine(F.col("q"), F.col("v")), 4).alias("sim_r"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim_r").desc(), F.col("neighbor_id").asc())
-    return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_candidates(vecs, cand_ids, n_queries, k)
 
 
 def ann_recall(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
@@ -543,7 +548,7 @@ def lsh_ann_candidates(embeddings: DataFrame, n_queries: int = 5,
     pure function of the seed and bucketing is sign-of-projection, so this
     stage is DuckDB-oracle-checked — the oracle replays the identical
     float64 planes as SQL literals and the identical sign rule over the
-    same parquet floats (see __spark_entry__._sql_lsh_ann_candidates).
+    same parquet floats (see __spark_entry__._sql_band_sig).
     Only the top-k RANKING built on these candidates is approximate and
     graded by measured recall instead."""
     vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
@@ -593,18 +598,4 @@ def lsh_ann_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
     no training pass."""
     vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
     cand_ids = lsh_ann_candidates(embeddings, n_queries, n_planes, n_tables)
-    queries = vecs.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("q")
-    )
-    nbrs = vecs.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("v"))
-    sims = (
-        cand_ids.join(F.broadcast(queries), "query_id")
-        .join(nbrs, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(_cosine(F.col("q"), F.col("v")), 4).alias("sim_r"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim_r").desc(), F.col("neighbor_id").asc())
-    return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_candidates(vecs, cand_ids, n_queries, k)

@@ -29,19 +29,14 @@ __all__ = ["run_streaming_extraction", "streaming_events_hourly", "streaming_con
            "streaming_neardup_payloads"]
 
 
-def streaming_dedup_payloads(transcripts_stream, watermark: str = "1 hour"):
-    """Streaming exact PAYLOAD dedup: suppress turns whose (non-blank)
-    payload hash was already seen within the watermark horizon
-    (dropDuplicatesWithinWatermark keys state by md5(text), so state is
-    bounded by the horizon's distinct-payload count, not the stream's
-    length).  The streaming face of the batch dedup-before-compute option:
-    retried/forwarded documents are suppressed before the expensive kernel
-    sees them — intentionally ACROSS conversations, a repeated document is
-    extracted once.
-
-    Blank turns (text = '', the contract's non-payload marker) carry no
-    document and pass through un-deduped — they would otherwise all
-    collapse onto the single md5('') key and real turns would be lost."""
+def _suppress_within_watermark(transcripts_stream, key, watermark: str):
+    """Drop non-blank turns whose `key` (a Column over the row) was already
+    seen within the watermark horizon; dropDuplicatesWithinWatermark keeps
+    one state entry per distinct key in the horizon, so state is bounded by
+    the horizon, not the stream's length.  Blank turns (text = '', the
+    contract's non-payload marker) carry no document and pass through
+    un-deduped — they would otherwise all collapse onto one key and real
+    turns would be lost."""
     from pyspark.sql import functions as F
 
     stamped = transcripts_stream.withColumn("ts", F.col("ts").cast("timestamp")).withWatermark(
@@ -49,12 +44,23 @@ def streaming_dedup_payloads(transcripts_stream, watermark: str = "1 hour"):
     )
     payloads = (
         stamped.filter(F.col("text") != "")
-        .withColumn("_ph", F.md5("text"))
-        .dropDuplicatesWithinWatermark(["_ph"])
-        .drop("_ph")
+        .withColumn("_key", key)
+        .dropDuplicatesWithinWatermark(["_key"])
+        .drop("_key")
     )
-    blanks = stamped.filter(F.col("text") == "")
-    return payloads.unionByName(blanks)
+    return payloads.unionByName(stamped.filter(F.col("text") == ""))
+
+
+def streaming_dedup_payloads(transcripts_stream, watermark: str = "1 hour"):
+    """Streaming exact PAYLOAD dedup: suppress turns whose (non-blank)
+    payload md5 was already seen within the watermark horizon.  The
+    streaming face of the batch dedup-before-compute option:
+    retried/forwarded documents are suppressed before the expensive kernel
+    sees them — intentionally ACROSS conversations, a repeated document is
+    extracted once.  Blank turns pass through un-deduped."""
+    from pyspark.sql import functions as F
+
+    return _suppress_within_watermark(transcripts_stream, F.md5("text"), watermark)
 
 
 def streaming_neardup_payloads(transcripts_stream, watermark: str = "1 hour",
@@ -79,17 +85,8 @@ def streaming_neardup_payloads(transcripts_stream, watermark: str = "1 hour",
 
     from ..operators.dedup import simhash_expr
 
-    stamped = transcripts_stream.withColumn("ts", F.col("ts").cast("timestamp")).withWatermark(
-        "ts", watermark
-    )
-    payloads = (
-        stamped.filter(F.col("text") != "")
-        .withColumn("_sh", simhash_expr(F.col("text"), bits))
-        .dropDuplicatesWithinWatermark(["_sh"])
-        .drop("_sh")
-    )
-    blanks = stamped.filter(F.col("text") == "")
-    return payloads.unionByName(blanks)
+    return _suppress_within_watermark(
+        transcripts_stream, simhash_expr(F.col("text"), bits), watermark)
 
 
 def streaming_payload_quality(transcripts_stream):

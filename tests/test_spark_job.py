@@ -157,11 +157,12 @@ def test_spark_job_count_per_run(spark, synth_dir, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events land asynchronously
     assert stats["waves_run"] == 3
-    # 2 per run (schema reads of the input and the golden table) + 7 per
-    # wave (5 for the data and lineage writes with their shuffle stages, 2
-    # for the lineage re-read); a per-wave golden read and schema-inferred
-    # read-back would make it 28
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 23
+    # 2 per run (schema reads of the input and the golden table) + 5 per
+    # wave (the data and lineage writes with their shuffle stages) + 2 for
+    # the one lineage read that counts rows_written after the last wave; a
+    # per-wave row count would make it 23, and a per-wave golden read with a
+    # schema-inferred read-back 28
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 19
 
 
 def test_lineage_extraction_accuracy(spark, synth_dir, tmp_path):

@@ -84,7 +84,7 @@ def test_streaming_lineage_schema_equals_batch(spark, stream_synth, tmp_path):  
     """One consumer reads both lineage tables: the streaming foreachBatch
     sink emits the canonical batch LINEAGE_SCHEMA (wave = micro-batch id),
     not a column subset."""
-    from arabic_ocr_spark.job import LINEAGE_SCHEMA, RESULT_SCHEMA, run_extraction
+    from arabic_ocr_spark.job import LINEAGE_SCHEMA, RESULT_SCHEMA, read_lineage, run_extraction
 
     s_out, b_out = str(tmp_path / "sout"), str(tmp_path / "bout")
     run_streaming_extraction(spark, f"{stream_synth}/stream_in", s_out, _cfg())
@@ -105,6 +105,11 @@ def test_streaming_lineage_schema_equals_batch(spark, stream_synth, tmp_path):  
         assert [(f.name, f.dataType) for f in data.schema] == result
     # a consumer can union them directly
     assert s_lin.unionByName(b_lin).count() == s_lin.count() + b_lin.count()
+    # read_lineage reads every committed unit, micro-batches included
+    streamed = read_lineage(spark, s_out)
+    assert streamed is not None
+    assert (streamed.agg(F.sum("rows_processed")).collect()[0][0]
+            == spark.read.schema(RESULT_SCHEMA).parquet(os.path.join(s_out, "data", "*")).count())
 
 
 def test_streaming_lineage_extraction_acc_with_golden(spark, stream_synth, tmp_path):  # noqa: F811

@@ -10,6 +10,7 @@ from __future__ import annotations
 import math
 import os
 import sys
+import time
 
 sys.path.insert(0, ".")
 
@@ -33,6 +34,7 @@ def norm_rows(cols, rows):
 
 
 def main() -> int:
+    t0 = time.perf_counter()
     import duckdb
 
     import __spark_entry__ as entry
@@ -52,13 +54,14 @@ def main() -> int:
     # payload oracles read the synth transcripts by path: pass THIS sf_dir
     # explicitly so they don't fall back to the driver default (sf0.01)
     oracles = entry.oracle_sql(sf_dir)
-    failures = 0
+    failures = rows_only = ok = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
         if name not in oracles:
             try:
                 n = fn(spark, sf_dir).count()
+                rows_only += 1
                 print(f"[rows-only] {name}: {n} rows")
             except Exception as e:  # noqa: BLE001
                 failures += 1
@@ -95,8 +98,10 @@ def main() -> int:
             bad = [(a, b) for a, b in zip(sr, orr) if a != b][:3]
             print(f"[FAIL vals] {name}: first diffs: {bad}")
             continue
+        ok += 1
         print(f"[OK] {name}: {len(sr)} rows match")
     spark.stop()
+    print(f"{ok} ok, {rows_only} rows-only, {failures} failed in {time.perf_counter() - t0:.1f} s")
     return 1 if failures else 0
 
 
