@@ -71,7 +71,6 @@ class ExtractionJobConfig:
     salt_buckets: int | None = 16
     model_path: str | None = None
     payload_roles: tuple = ()       # optional role filter pushed into the scan
-    require_payload: bool = True    # filter text != '' at the scan
     # Iceberg output (production): when set and an Iceberg catalog is on the
     # classpath, each wave commits via writeTo(table).overwritePartitions()
     # with the wave as a partition column — an atomic snapshot per wave, the
@@ -91,8 +90,6 @@ class ExtractionJobConfig:
     # work on the dropped fraction.  Default off: a clean corpus only pays
     # the extra decode.
     quality_filter: bool = False
-    quality_min_ink: float = 0.005
-    quality_max_ink: float = 0.5
     # dedup-before-compute: extract each DISTINCT payload once and join the
     # result back to the turns.  Real transcript corpora repeat payloads
     # (retries, quoted/forwarded documents); when the duplication factor is
@@ -222,11 +219,7 @@ def plan_extraction(spark, df, cfg: ExtractionJobConfig, model: CharModel | None
         from .operators.multimodal import with_quality_flag
 
         def gate(d):
-            return (
-                with_quality_flag(d, cfg.quality_min_ink, cfg.quality_max_ink)
-                .filter(F.col("quality_ok"))
-                .drop("quality_ok")
-            )
+            return with_quality_flag(d).filter(F.col("quality_ok")).drop("quality_ok")
 
     if cfg.dedup_payloads:
         # extract once per distinct payload, join results back to the turns.
@@ -487,8 +480,7 @@ def run_extraction(
         # partitioned copy so per-wave scans prune to 1/num_waves
         _pin_partitioning(cfg, input_path, "staged input")
     df = spark.table(input_table) if input_table else spark.read.parquet(input_path)
-    if cfg.require_payload:
-        df = df.filter(F.col("text") != "")
+    df = df.filter(F.col("text") != "")
 
     # pin the partitioning parameters for the OUTPUT's lifetime: a resumed
     # run must salt exactly like the committed waves
@@ -534,7 +526,7 @@ def run_extraction(
     if ran:
         lineage = spark.read.schema(LINEAGE_SCHEMA).parquet(
             *(os.path.join(output_dir, "lineage", f"wave={w}") for w in ran))
-        rows_written = lineage.agg(F.sum("rows_processed")).collect()[0][0] or 0
+        rows_written = sum(r.rows_processed for r in lineage.select("rows_processed").collect())
     return {
         "waves_total": cfg.num_waves,
         "waves_run": len(ran),

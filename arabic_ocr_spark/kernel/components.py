@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import numpy as np
 
-__all__ = ["label_components", "largest_label", "remove_dots", "split_largest_component"]
+__all__ = ["label_components", "largest_label"]
 
 
 def label_components(img: np.ndarray) -> tuple[int, np.ndarray, np.ndarray]:
@@ -25,16 +25,20 @@ def label_components(img: np.ndarray) -> tuple[int, np.ndarray, np.ndarray]:
     Returns (n_labels, labels, sizes) where n_labels counts the background,
     labels is int32 HxW, and sizes[k] is the pixel count of label k
     (sizes[0] = background count).
-    """
+
+    One vectorized pass finds the runs; a plain-Python union-find merges
+    them (min-root union, raster first-encounter labels).  The kernel's
+    inputs are word and character slices of a few dozen runs, where
+    per-call numpy overhead would dominate any vectorized merge."""
     h, w = img.shape
     fg = img != 0
-    labels = np.zeros((h, w), dtype=np.int32)
     if not fg.any():
-        return 1, labels, np.array([img.size], dtype=np.int64)
+        return 1, np.zeros((h, w), dtype=np.int32), np.array([img.size], dtype=np.int64)
 
-    # one vectorized pass: runs over the row-padded flat image (the sentinel
-    # column breaks runs at row boundaries)
-    fgp = np.zeros((h, w + 1), dtype=np.int8)
+    # runs over the row-padded flat image (the sentinel column breaks runs
+    # at row boundaries)
+    wp = w + 1
+    fgp = np.zeros((h, wp), dtype=np.int8)
     fgp[:, :w] = fg
     flat = fgp.ravel()
     d = np.empty(flat.shape, dtype=np.int8)
@@ -42,97 +46,15 @@ def label_components(img: np.ndarray) -> tuple[int, np.ndarray, np.ndarray]:
     np.subtract(flat[1:], flat[:-1], out=d[1:])
     run_starts = np.flatnonzero(d == 1)
     run_ends = np.flatnonzero(d == -1)  # exclusive; sentinel guarantees closure
-    wp = w + 1
-    rows = run_starts // wp
-    s_cols = run_starts % wp
-    e_cols = ((run_ends - 1) % wp) + 1
-    n_runs = len(run_starts)
-
-    if n_runs <= 96:
-        # fast path for the dominant caller (per-character slices, a
-        # handful of runs): plain-Python union-find over int lists beats
-        # the vectorized machinery's fixed numpy-call overhead by ~5x
-        return _label_small(img, h, w, wp, run_starts.tolist(), run_ends.tolist(),
-                            rows.tolist(), s_cols.tolist(), e_cols.tolist())
-
-    # --- adjacency, vectorized: runs within a row are disjoint and sorted,
-    # so the 8-connected overlaps of run i with the PREVIOUS row's runs form
-    # a contiguous range [lo_i, hi_i): first prev-run with e > s_i - 1,
-    # last prev-run with s < e_i + 1.  searchsorted against the global
-    # raster-sorted (row-major) run arrays gives both bounds in one shot
-    # because a row's runs are contiguous in them.
-    row_ptr = np.searchsorted(rows, np.arange(h + 1))  # run-index range per row
-    prev_lo = np.searchsorted(run_ends, (rows - 1) * wp + s_cols, side="left")
-    prev_hi = np.searchsorted(run_starts, (rows - 1) * wp + e_cols + 1, side="left")
-    # clamp to the previous row's own runs (first-row runs get empty ranges)
-    lo = np.maximum(prev_lo, row_ptr[np.maximum(rows - 1, 0)])
-    hi = np.minimum(prev_hi, row_ptr[rows])
-    counts = np.maximum(hi - lo, 0)
-
-    parent = np.arange(n_runs + 1, dtype=np.int64)  # union-find over run ids (1-based)
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return int(x)
-
-    if counts.any():
-        # expand (i, j) overlap pairs: i repeated counts[i] times, j walking
-        # each i's [lo, hi) range — arange-minus-segment-offset trick
-        total = int(counts.sum())
-        left = np.repeat(np.arange(n_runs), counts) + 1
-        seg_off = np.repeat(np.cumsum(counts) - counts, counts)
-        j_idx = np.repeat(lo, counts) + (np.arange(total) - seg_off) + 1
-        for a, b in zip(left.tolist(), j_idx.tolist()):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                if ra < rb:
-                    parent[rb] = ra
-                else:
-                    parent[ra] = rb
-
-    # full path compression, vectorized (pointer doubling)
-    while True:
-        grand = parent[parent]
-        if np.array_equal(grand, parent):
-            break
-        parent = grand
-    roots = parent
-
-    # paint run ids into the flat image without a Python loop: runs never
-    # touch (>= 1 background/sentinel cell between them), so a +rid at each
-    # start / -rid at each end cumsums to rid inside runs and 0 outside
-    rids = np.arange(1, n_runs + 1, dtype=np.int32)
-    delta = np.zeros(h * wp + 1, dtype=np.int32)
-    delta[run_starts] += rids
-    delta[run_ends] -= rids
-    labels_flat = np.cumsum(delta[:-1], dtype=np.int32)
-
-    # relabel roots in raster order of first encounter (runs are raster-
-    # ordered, so the first run whose root is r fixes r's final label)
-    root_of_run = roots[1:]
-    first_idx = np.sort(np.unique(root_of_run, return_index=True)[1])
-    remap = np.zeros(n_runs + 1, dtype=np.int32)
-    remap[root_of_run[first_idx]] = np.arange(1, len(first_idx) + 1, dtype=np.int32)
-    next_label = len(first_idx) + 1
-    lut = remap[roots]
-    labels = lut[labels_flat].reshape(h, wp)[:, :w]
-
-    run_len = (run_ends - run_starts).astype(np.int64)
-    sizes = np.zeros(next_label, dtype=np.int64)
-    np.add.at(sizes, lut[1:], run_len)
-    sizes[0] = img.size - sizes[1:].sum()
-    return next_label, labels, sizes
-
-
-def _label_small(img, h, w, wp, rs, re_, rows_l, s_l, e_l):
-    """Pure-Python run merge for small run counts — identical semantics to
-    the vectorized path (min-root union, raster first-encounter labels)."""
+    rs = run_starts.tolist()
+    re_ = run_ends.tolist()
+    rows = (run_starts // wp).tolist()
+    s_cols = (run_starts % wp).tolist()
+    e_cols = (((run_ends - 1) % wp) + 1).tolist()
     n_runs = len(rs)
-    parent = list(range(n_runs + 1))
+    parent = list(range(n_runs + 1))  # union-find over run ids (1-based)
 
-    def findp(x):
+    def find(x):
         while parent[x] != x:
             parent[x] = parent[parent[x]]
             x = parent[x]
@@ -142,16 +64,16 @@ def _label_small(img, h, w, wp, rs, re_, rows_l, s_l, e_l):
     cur: list = []
     cur_row = -2
     for i in range(n_runs):
-        y = rows_l[i]
+        y = rows[i]
         if y != cur_row:
             prev = cur if y == cur_row + 1 else []
             cur = []
             cur_row = y
-        s = s_l[i]
-        e = e_l[i]
+        s = s_cols[i]
+        e = e_cols[i]
         for ps, pe, pr in prev:
             if ps <= e and pe >= s:  # 8-connected overlap (ranges extended by 1)
-                ra, rb = findp(i + 1), findp(pr)
+                ra, rb = find(i + 1), find(pr)
                 if ra != rb:
                     if ra < rb:
                         parent[rb] = ra
@@ -159,27 +81,21 @@ def _label_small(img, h, w, wp, rs, re_, rows_l, s_l, e_l):
                         parent[ra] = rb
         cur.append((s, e, i + 1))
 
+    # relabel roots in raster order of first encounter (runs are raster-
+    # ordered, so the first run whose root is r fixes r's final label)
     remap: dict[int, int] = {}
-    next_label = 1
-    lut = [0] * (n_runs + 1)
-    for i in range(1, n_runs + 1):
-        r = findp(i)
+    labels_flat = np.zeros(h * wp, dtype=np.int32)
+    sizes = [0]
+    for i in range(n_runs):
+        r = find(i + 1)
         lab = remap.get(r)
         if lab is None:
-            lab = remap[r] = next_label
-            next_label += 1
-        lut[i] = lab
-
-    labels_flat = np.zeros(h * wp, dtype=np.int32)
-    sizes = [0] * next_label
-    for i in range(n_runs):
-        lab = lut[i + 1]
+            lab = remap[r] = len(sizes)
+            sizes.append(0)
         labels_flat[rs[i]:re_[i]] = lab
         sizes[lab] += re_[i] - rs[i]
-    labels = labels_flat.reshape(h, wp)[:, :w]
-    sizes_arr = np.asarray(sizes, dtype=np.int64)
-    sizes_arr[0] = img.size - int(sizes_arr[1:].sum())
-    return next_label, labels, sizes_arr
+    sizes[0] = img.size - sum(sizes)
+    return len(sizes), labels_flat.reshape(h, wp)[:, :w], np.asarray(sizes, dtype=np.int64)
 
 
 def largest_label(sizes: np.ndarray, n_labels: int) -> int:
@@ -193,26 +109,3 @@ def largest_label(sizes: np.ndarray, n_labels: int) -> int:
             max_label = i
             max_size = sizes[i]
     return max_label
-
-
-def remove_dots(image: np.ndarray) -> np.ndarray:
-    """Keep only the largest component, as a 0/255 uint8 image
-    (reference train_recognition.py:33-55)."""
-    n, labels, sizes = label_components(image)
-    max_label = largest_label(sizes, n)
-    out = np.zeros(labels.shape)
-    out[labels == max_label] = 255
-    return out.astype(np.uint8)
-
-
-def split_largest_component(image: np.ndarray) -> tuple[np.ndarray, int]:
-    """Zero out the largest component in the LABEL image and return
-    (labels_without_largest, largest_label) — the reference's
-    `get_largest_connected_component` (train_recognition.py:7-30); the
-    returned label image keeps raw label values (the dots), which downstream
-    transition counters consume directly."""
-    n, labels, sizes = label_components(image)
-    max_label = largest_label(sizes, n)
-    labels = labels.copy()
-    labels[labels == max_label] = 0
-    return labels, max_label

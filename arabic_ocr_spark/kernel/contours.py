@@ -26,20 +26,14 @@ __all__ = ["find_external_contours", "contour_area"]
 _DELTAS = ((1, 0), (1, -1), (0, -1), (-1, -1), (-1, 0), (-1, 1), (0, 1), (1, 1))
 
 
-def _trace_border(fgp: np.ndarray, start: tuple[int, int],
-                  fg_bytes: bytes | None = None) -> list[tuple[int, int]]:
+def _trace_border(fg_bytes: bytes, stride: int, start: tuple[int, int]) -> list[tuple[int, int]]:
     """Follow the outer border of the component containing `start`
     (which must be its raster-first pixel, so its W neighbour is background).
-    `fgp` is the foreground mask padded by one false ring (bounds checks
-    become plain indexing).  Returns the point sequence as (x, y) tuples in
-    UNPADDED coordinates.
-
-    fg_bytes: optional raveled uint8 copy of fgp — C-level bytes indexing in
-    the tight probe loop is ~4x numpy scalar indexing; callers tracing many
-    contours of one image build it once."""
-    if fg_bytes is None:
-        fg_bytes = fgp.astype(np.uint8).tobytes()
-    stride = fgp.shape[1]
+    `fg_bytes` is the raveled uint8 foreground mask padded by one false ring
+    (bounds checks become plain indexing; C-level bytes indexing in the
+    tight probe loop is ~4x numpy scalar indexing), `stride` its padded
+    width.  Returns the point sequence as (x, y) tuples in UNPADDED
+    coordinates."""
     y0, x0 = start[0] + 1, start[1] + 1
 
     # per-direction flat-index deltas for the padded image
@@ -83,7 +77,7 @@ def find_external_contours(img: np.ndarray) -> list[np.ndarray]:
     n, labels, _ = label_components(img)
     if n <= 1:
         return []
-    fgp = np.zeros((img.shape[0] + 2, img.shape[1] + 2), dtype=bool)
+    fgp = np.zeros((img.shape[0] + 2, img.shape[1] + 2), dtype=np.uint8)
     fgp[1:-1, 1:-1] = img != 0
     contours: list[np.ndarray] = []
     flat = labels.ravel()
@@ -93,10 +87,10 @@ def find_external_contours(img: np.ndarray) -> list[np.ndarray]:
     nz = np.flatnonzero(flat)[::-1]
     first_idx = np.full(n, -1, dtype=np.int64)
     first_idx[flat[nz]] = nz
-    fg_bytes = fgp.astype(np.uint8).tobytes()  # shared by all traces
+    fg_bytes = fgp.tobytes()  # shared by all traces
     for lbl in range(1, n):
         idx = first_idx[lbl]
-        pts = _trace_border(fgp, (int(idx // w), int(idx % w)), fg_bytes)
+        pts = _trace_border(fg_bytes, w + 2, (int(idx // w), int(idx % w)))
         contours.append(np.asarray(pts, dtype=np.int64))
     return contours
 

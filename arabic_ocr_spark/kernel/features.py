@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .components import label_components, largest_label, split_largest_component
+from .components import label_components, largest_label
 
 __all__ = [
     "vertical_transitions",
@@ -154,21 +154,17 @@ def _is_3_dots_connected(dots_img: np.ndarray) -> bool:
     return bool(np.max(horizontal_transitions(dots_img)) >= 4)
 
 
-def recognize_dots(char_img: np.ndarray, _labeled=None) -> tuple[int, int, int]:
+def recognize_dots(char_img: np.ndarray, labels: np.ndarray, body: int) -> tuple[int, int, int]:
     """(position, exists, n_dots) of the diacritics: position 1=top / 2=mid /
     3=bottom by comparing extremal nonzero rows of the full char vs the
     dots-only label image; hamza -> 5 labels, connected 3-dots -> 4.
 
-    _labeled: optional precomputed (n, labels, sizes, body_label) so the
-    caller can share one labeling pass (identical semantics)."""
-    if _labeled is None:
-        dots_img, max_label = split_largest_component(char_img)
-    else:
-        n, labels, sizes, body = _labeled
-        dots_img = labels.copy()
-        dots_img[dots_img == body] = 0
-        max_label = body
-    max_label = int(max(np.max(dots_img), max_label))
+    labels/body: `char_img`'s component labelling and its largest label
+    (the reference's `get_largest_connected_component`, which zeroes the
+    body in the label image and keeps the raw dot labels)."""
+    dots_img = labels.copy()
+    dots_img[dots_img == body] = 0
+    max_label = int(max(np.max(dots_img), body))
     if max_label == 1:
         return -1, 0, 0
     if max_label == 2:
@@ -229,15 +225,11 @@ def recognize_char(char_img: np.ndarray) -> list:
         if label == "D_CONIC":
             score += 4**4
 
-    if char_img.shape[1] == 0 or char_img.shape[0] == 0:
-        return []
     char_img = eliminate_extra_padding(img_dotted)
     if char_img.shape[0] * char_img.shape[1] < 2:
         return []
-    try:
-        form_ratio = char_img.shape[0] / char_img.shape[1]
-    except ZeroDivisionError:
-        return []
+    # both sides are >= 1 from here on: the ratio and the corners exist
+    form_ratio = char_img.shape[0] / char_img.shape[1]
 
     char_form = -1
     if form_ratio < 0.8:
@@ -248,17 +240,14 @@ def recognize_char(char_img: np.ndarray) -> list:
         char_form = 3
 
     h, w = char_img.shape
-    try:
-        corvar = (
-            (char_img[0][0] / 255) * 1
-            + (char_img[0][w - 1] / 255) * 2
-            + (char_img[h - 1][w - 1] / 255) * 4
-            + (char_img[h - 1][0] / 255) * 8
-        )
-    except IndexError:
-        return []
+    corvar = (
+        (char_img[0][0] / 255) * 1
+        + (char_img[0][w - 1] / 255) * 2
+        + (char_img[h - 1][w - 1] / 255) * 4
+        + (char_img[h - 1][0] / 255) * 8
+    )
 
-    pospunc, expunc, numpunc = recognize_dots(img_dotted, _labeled=(n_l, labels, sizes, body))
+    pospunc, expunc, numpunc = recognize_dots(img_dotted, labels, body)
     hmax = np.max(horz_transitions)
     vmax = np.max(ver_transitions)
     if hmax < 4:
@@ -268,7 +257,7 @@ def recognize_char(char_img: np.ndarray) -> list:
     return [score, char_form, corvar, expunc, pospunc, numpunc, hmax, vmax, has_hole]
 
 
-def batch_get_feat_vectors(word: np.ndarray, idxes: list, text_word=None) -> list[list]:
+def batch_get_feat_vectors(word: np.ndarray, idxes: list) -> list[list]:
     """Slice the word at the cut positions and featurize each slice; an
     empty/failed feature vector does not advance the slice start (segments
     merge rightward across rejected cuts) — reference

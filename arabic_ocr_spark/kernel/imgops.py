@@ -8,7 +8,7 @@ are re-derived from the published OpenCV definitions:
 - projections: int32 row/column sums (reference preprocess.py:14-30).
 - baseline: first argmax of the horizontal projection (preprocess.py:8-11).
 - dilate 3x3: max filter == OR of 8-neighbour shifts (segment_words.py:20).
-- most_frequent: mode excluding 0 when 0 wins (utils.py:9-19).
+- most_frequent: mode excluding 0 when 0 wins (utils.py:9-19), by bincount.
 - zero-run gap scan: the reference's hand-rolled run finder over a
   projection (segment_words.py:24-41, :125-145; preprocess.py:283-305),
   vectorized but numerically identical (gap centre = float mean of the run's
@@ -85,28 +85,15 @@ def dilate3x3(img: np.ndarray) -> np.ndarray:
     return out
 
 
-def most_frequent(arr: np.ndarray):
-    """Mode (smallest value on ties, per np.unique sort); if the mode is 0,
-    recompute over the nonzero values.  Small non-negative int arrays (the
-    per-contour y-coordinate case) take an O(max) bincount path — argmax's
-    first-maximum matches np.unique's ascending tie-break."""
-    arr = np.asarray(arr)
-    if (arr.size and arr.ndim == 1 and np.issubdtype(arr.dtype, np.integer)
-            and int(arr.min()) >= 0 and int(arr.max()) < 65536):
-        counts = np.bincount(arr)
-        most_freq = int(np.argmax(counts))
-        if most_freq == 0:
-            counts[0] = 0
-            if not counts.any():
-                np.argmax(np.array([]))  # all-zero input: raise as the slow path would
-            most_freq = int(np.argmax(counts))
-        return most_freq
-    values, counts = np.unique(arr, return_counts=True)
-    most_freq = values[np.argmax(counts)]
+def most_frequent(arr: np.ndarray) -> int:
+    """Mode of a non-negative int array (smallest value on ties: argmax
+    keeps the first maximum, as the reference's sorted-unique count does);
+    if the mode is 0, the mode of the nonzero values.  An all-zero input
+    raises the reference's ValueError (argmax of an empty sequence)."""
+    counts = np.bincount(arr)
+    most_freq = int(np.argmax(counts))
     if most_freq == 0:
-        arr = arr[arr != most_freq]
-        values, counts = np.unique(arr, return_counts=True)
-        most_freq = values[np.argmax(counts)]
+        most_freq = int(np.argmax(counts[1:])) + 1
     return most_freq
 
 

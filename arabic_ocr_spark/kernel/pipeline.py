@@ -12,7 +12,7 @@ words right-to-left within a line).
 from __future__ import annotations
 
 from collections.abc import Generator
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 
@@ -32,7 +32,6 @@ class ExtractionResult:
     n_words: int = 0
     ok: bool = True
     err: str = ""
-    feat_vectors: list = field(default_factory=list, repr=False)
 
 
 def iter_words(
@@ -64,7 +63,6 @@ def extract_page(
     model: CharModel,
     templates: list[TemplateSpec] | None = None,
     skip_deskew: bool = False,
-    keep_feat_vectors: bool = False,
 ) -> ExtractionResult:
     """Full page extraction.  A page-level failure (degenerate projections,
     blank payload, reference-crash-equivalent states) yields ok=False with
@@ -81,10 +79,7 @@ def extract_page(
             except StopIteration as end:
                 res.n_lines = end.value
                 break
-            fvs = batch_get_feat_vectors(word, cuts)
-            if keep_feat_vectors:
-                res.feat_vectors.append([list(fv) for fv in fvs])
-            res.text += " " + match_feat_to_char(model, fvs)
+            res.text += " " + match_feat_to_char(model, batch_get_feat_vectors(word, cuts))
             res.n_words += 1
     except Exception as exc:  # reference-crash-equivalent turn
         return ExtractionResult(text="", ok=False, err=f"{type(exc).__name__}: {exc}")

@@ -49,18 +49,16 @@ REFERENCE_TEMPLATE_TABLE: tuple[tuple[str, float, str, bool], ...] = (
 )
 
 
-def build_specs(images: dict[str, np.ndarray], include_disabled: bool = False) -> list[TemplateSpec]:
-    """Binds the reference's threshold/action table to an alphabet's own
-    pattern images: `images` maps template name -> binary uint8 raster.
+def build_specs(images: dict[str, np.ndarray]) -> list[TemplateSpec]:
+    """Binds the reference's enabled threshold/action rows to an alphabet's
+    own pattern images: `images` maps template name -> binary uint8 raster.
     Names absent from `images` are skipped (an alphabet need not have an
     analog of every Arabic ligature).  Order follows the reference's match
     order, which is observable (cuts/whitening apply in sequence)."""
     specs = []
     for name, threshold, action, enabled in REFERENCE_TEMPLATE_TABLE:
-        if not (enabled or include_disabled):
-            continue
         img = images.get(name)
-        if img is None:
+        if not enabled or img is None:
             continue
         specs.append(TemplateSpec(name=name, image=img, threshold=threshold, action=action))
     return specs

@@ -145,7 +145,7 @@ def run_streaming_extraction(
         stream = pre_gate(stream)
 
     def process_batch(batch_df, batch_id: int):
-        df = batch_df.filter(F.col("text") != "") if cfg.require_payload else batch_df
+        df = batch_df.filter(F.col("text") != "")
         result = plan_extraction(
             df.sparkSession, df, cfg, model_bc=model_bc, templates_bc=templates_bc
         )

@@ -7,10 +7,11 @@ validate each char against its per-char predicate list; bucket accepted
 (char, fv) pairs by str(score) with set-dedup semantics.
 
 The reference accumulates the map serially across images, rewriting the JSON
-after every file.  Because accepted pairs form a SET (order-independent
-union), the distributed variant emits (score, char, fv) rows from a
-`mapInPandas` kernel, `dropDuplicates`, groups driver-side, and writes the
-artifact once — same result, any parallelism.
+after every file.  Both trainers here consume one per-page walker
+(`_page_pairs`) that yields the accepted pairs in serial order and applies
+one failure policy; the distributed variant runs it per page in Spark tasks,
+keeps each distinct pair's first serial position, merges driver-side and
+writes the artifact once — same result, any parallelism.
 """
 
 from __future__ import annotations
@@ -65,21 +66,34 @@ def validate_fv(label: str, fv: list) -> bool:
     return all(p(fv) for p in validations_for(label))
 
 
+def _accepted_chars(feat_vects: list[list], word_str: str) -> list[tuple[int, str, list]] | None:
+    """The word-acceptance rule (reference integrator.py:136-160): None when
+    the segment count mismatches the word length (word rejected); otherwise
+    the (char_index, char, fv) triples whose fv passes the char's
+    validations.  feat_vects is consumed reversed; fvs come back as floats."""
+    if len(word_str) != sum(1 for fv in feat_vects if fv != []):
+        return None
+    fvs = list(reversed(feat_vects))
+    return [(i, ch, [float(x) for x in fvs[i]])
+            for i, ch in enumerate(word_str) if validate_fv(ch, fvs[i])]
+
+
+def _assign(char_map: dict, ch: str, fv: list) -> None:
+    """Bucket (char, fv) by str(score) with set-dedup semantics."""
+    bucket = char_map.setdefault(str(int(fv[0])), [])
+    if [ch, fv] not in bucket:
+        bucket.append([ch, fv])
+
+
 def compare_and_assign(feat_vects: list[list], word_str: str, char_map: dict):
     """Reference semantics (integrator.py:136-160): returns -1 when the
     segment count mismatches the word length (word rejected); otherwise
-    mutates and returns char_map.  feat_vects is consumed reversed."""
-    if len(word_str) != sum(1 for fv in feat_vects if fv != []):
+    mutates and returns char_map."""
+    accepted = _accepted_chars(feat_vects, word_str)
+    if accepted is None:
         return -1
-    fvs = list(reversed(feat_vects))
-    for i, curr_char in enumerate(word_str):
-        if not validate_fv(curr_char, fvs[i]):
-            continue
-        score = str(fvs[i][0])
-        bucket = char_map.setdefault(score, [])
-        fc = [curr_char, [float(x) for x in fvs[i]]]
-        if fc not in bucket:
-            bucket.append(fc)
+    for _i, ch, fv in accepted:
+        _assign(char_map, ch, fv)
     return char_map
 
 
@@ -114,24 +128,36 @@ def train_words_for_alphabet(rng: np.random.Generator | None = None, n_random: i
     return pages
 
 
-def _train_one_page(img, gt_words: list[str], char_map: dict, skip_deskew: bool) -> tuple[int, int]:
-    rejected = total = 0
+def _page_pairs(lines: list[str], tally: list[int], angle: float | None = None):
+    """The one training walker: composes a page (rotated by `angle` degrees
+    when given) and yields (word_idx, char_idx, char, fv) for every pair it
+    contributes, in serial order, through the full inference path (deskew
+    on).  Adds the page's rejected and total word counts to tally[0] and
+    tally[1].  A page whose segmentation raises keeps the pairs yielded
+    before the failure and counts its remaining words as rejected."""
+    gt_words = [w for ln in lines for w in ln.split()]
+    img, _ = compose_text_image(lines)
+    if angle is not None:
+        from .sources.synth import rotate_page
+
+        img = rotate_page(img, angle)
     wi = 0
     try:
-        for word_img, cuts, _li in iter_words(img, skip_deskew=skip_deskew):
-            fvs = batch_get_feat_vectors(word_img, cuts)
-            total += 1
-            if wi >= len(gt_words):
-                rejected += 1
-                continue
-            if compare_and_assign(fvs, gt_words[wi], char_map) == -1:
-                rejected += 1
+        for word_img, cuts, _li in iter_words(img):
+            tally[1] += 1
+            accepted = None
+            if wi < len(gt_words):
+                accepted = _accepted_chars(batch_get_feat_vectors(word_img, cuts), gt_words[wi])
+            if accepted is None:
+                tally[0] += 1
+            else:
+                for i, ch, fv in accepted:
+                    yield wi, i, ch, fv
             wi += 1
     except Exception:
-        # page-level segmentation failure: all its words count as rejected
-        rejected += max(1, len(gt_words) - wi)
-        total += max(1, len(gt_words) - wi)
-    return rejected, total
+        n = max(1, len(gt_words) - wi)
+        tally[0] += n
+        tally[1] += n
 
 
 def train_serial(pages: Iterable[list[str]] | None = None,
@@ -146,30 +172,20 @@ def train_serial(pages: Iterable[list[str]] | None = None,
     keeps badly-resegmented words out.
 
     Returns (raw char_map, rejected_words, total_words)."""
-    from .sources.synth import rotate_page
-
     pages = list(pages) if pages is not None else train_words_for_alphabet()
-    char_map: dict = {}
-    rejected = total = 0
-    # clean pass runs the FULL inference path (deskew on): min-area-rect
-    # tilts even straight pages with ragged line ends by a fraction of a
-    # degree, so training must see exactly what inference sees
-    for lines in pages:
-        gt_words = [w for ln in lines for w in ln.split()]
-        img, _ = compose_text_image(lines)
-        r, t = _train_one_page(img, gt_words, char_map, skip_deskew=False)
-        rejected += r
-        total += t
     rng = np.random.default_rng(seed + 7)
-    for _round in range(skew_rounds):
-        for lines in pages:
-            gt_words = [w for ln in lines for w in ln.split()]
-            img, _ = compose_text_image(lines)
-            angle = float(rng.uniform(-3.0, 3.0))
-            r, t = _train_one_page(rotate_page(img, angle), gt_words, char_map, skip_deskew=False)
-            rejected += r
-            total += t
-    return char_map, rejected, total
+    # clean pass first: min-area-rect tilts even straight pages with ragged
+    # line ends by a fraction of a degree, so training must see exactly
+    # what inference sees
+    passes = [(lines, None) for lines in pages] + [
+        (lines, float(rng.uniform(-3.0, 3.0))) for _round in range(skew_rounds) for lines in pages
+    ]
+    char_map: dict = {}
+    tally = [0, 0]
+    for lines, angle in passes:
+        for _wi, _i, ch, fv in _page_pairs(lines, tally, angle):
+            _assign(char_map, ch, fv)
+    return char_map, tally[0], tally[1]
 
 
 DEFAULT_SKEW_ROUNDS = 4
@@ -203,30 +219,12 @@ def train_spark(spark, pages: list[list[str]], out_path: str | None = None) -> C
     sc = spark.sparkContext
 
     def emit(ipage):
-        pidx, page_lines = ipage
-        gt_words = [w for ln in page_lines for w in ln.split()]
-        img, _ = compose_text_image(page_lines)
-        wi = 0
-        out = []
-        # full inference path (deskew on) — must match train_serial exactly
-        for word_img, cuts, _li in iter_words(img, skip_deskew=False):
-            fvs = batch_get_feat_vectors(word_img, cuts)
-            if wi < len(gt_words):
-                word = gt_words[wi]
-                if len(word) == sum(1 for fv in fvs if fv != []):
-                    rev = list(reversed(fvs))
-                    for i, ch in enumerate(word):
-                        if validate_fv(ch, rev[i]):
-                            out.append(
-                                (int(rev[i][0]), ch, [float(x) for x in rev[i]], pidx, wi, i)
-                            )
-            wi += 1
-        return out
+        pidx, lines = ipage
+        return [Row(score=int(fv[0]), char=ch, fv=fv, p=pidx, w=wi, c=i)
+                for wi, i, ch, fv in _page_pairs(lines, [0, 0])]
 
-    rows = sc.parallelize(list(enumerate(pages)), max(2, min(len(pages), 64))).flatMap(emit)
-    df = spark.createDataFrame(
-        rows.map(lambda t: Row(score=t[0], char=t[1], fv=t[2], p=t[3], w=t[4], c=t[5]))
-    )
+    pages_rdd = sc.parallelize(list(enumerate(pages)), max(2, min(len(pages), 64)))
+    df = spark.createDataFrame(pages_rdd.flatMap(emit))
     pairs = (
         df.withColumn("fv_key", F.concat_ws(",", F.col("fv").cast("array<string>")))
         .groupBy("score", "char", "fv_key")

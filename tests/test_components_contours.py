@@ -3,12 +3,7 @@
 import numpy as np
 import pytest
 
-from arabic_ocr_spark.kernel.components import (
-    label_components,
-    largest_label,
-    remove_dots,
-    split_largest_component,
-)
+from arabic_ocr_spark.kernel.components import label_components, largest_label
 from arabic_ocr_spark.kernel.contours import contour_area, find_external_contours
 
 
@@ -57,34 +52,6 @@ XX.XX
     )
     n, _labels, sizes = label_components(img)
     assert largest_label(sizes, n) == 1
-
-
-def test_remove_dots_keeps_largest():
-    img = _img(
-        """
-.X...
-.....
-XXX..
-XXX..
-"""
-    )
-    out = remove_dots(img)
-    assert out[0, 1] == 0
-    assert out[2:4, 0:3].min() == 255
-
-
-def test_split_largest_component_returns_dot_labels():
-    img = _img(
-        """
-.X...
-.....
-XXX..
-XXX..
-"""
-    )
-    dots, max_label = split_largest_component(img)
-    assert max_label == 2  # body labeled 2 (dot raster-first)
-    assert dots[0, 1] == 1 and dots[2:4, 0:3].max() == 0
 
 
 def test_contour_single_row_strip_revisits():

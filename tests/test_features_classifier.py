@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 
 from arabic_ocr_spark.kernel.classifier import CharModel, match_feat_to_char
+from arabic_ocr_spark.kernel.components import label_components, largest_label
 from arabic_ocr_spark.kernel.features import (
     add_extra_padding,
     batch_get_feat_vectors,
@@ -66,6 +67,12 @@ XXXXX
     assert fv[1] == 2  # square form
 
 
+def _dots(img):
+    # recognize_char's labelling: the body is the largest component
+    n, labels, sizes = label_components(img)
+    return recognize_dots(img, labels, largest_label(sizes, n))
+
+
 def test_recognize_dots_positions():
     top = _img(
         """
@@ -76,7 +83,7 @@ XXXX.
 XXXX.
 """
     )
-    pos, exists, n = recognize_dots(top)
+    pos, exists, n = _dots(top)
     assert (pos, exists, n) == (1, 1, 1)
     bottom = _img(
         """
@@ -87,7 +94,7 @@ XXXX.
 .X...
 """
     )
-    pos, exists, n = recognize_dots(bottom)
+    pos, exists, n = _dots(bottom)
     assert (pos, exists, n) == (3, 1, 1)
     none = _img(
         """
@@ -96,7 +103,7 @@ XXXX
 XXXX
 """
     )
-    assert recognize_dots(none) == (-1, 0, 0)
+    assert _dots(none) == (-1, 0, 0)
 
 
 def test_recognize_dots_two_dots():
@@ -109,7 +116,7 @@ XXXXX.
 XXXXX.
 """
     )
-    pos, exists, n = recognize_dots(img)
+    pos, exists, n = _dots(img)
     assert (pos, exists, n) == (1, 1, 2)
 
 

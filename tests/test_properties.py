@@ -16,6 +16,12 @@ from arabic_ocr_spark.sources.codec import decode_payload, encode_payload
 
 small_binary = arrays(np.uint8, st.tuples(st.integers(1, 12), st.integers(1, 12)),
                       elements=st.sampled_from([0, 255]))
+# dense noise up to 40x40: hundreds of runs per image, far more than the
+# kernel's word slices hold, so the union-find sees long merge chains
+large_binary = st.builds(
+    lambda h, w, p, seed: ((np.random.default_rng(seed).random((h, w)) < p) * 255).astype(np.uint8),
+    st.integers(20, 40), st.integers(20, 40), st.floats(0.2, 0.8), st.integers(0, 2**32 - 1),
+)
 
 
 @given(st.lists(st.integers(0, 3), min_size=1, max_size=40))
@@ -44,7 +50,7 @@ def test_zero_run_gaps_matches_naive_scan(vals):
     assert got_c == centres and got_w == widths
 
 
-@given(small_binary)
+@given(st.one_of(small_binary, large_binary))
 @settings(max_examples=150, deadline=None)
 def test_label_components_matches_bfs(img):
     n, labels, sizes = label_components(img)

@@ -158,11 +158,11 @@ def test_spark_job_count_per_run(spark, synth_dir, tmp_path):
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events land asynchronously
     assert stats["waves_run"] == 3
     # 2 per run (schema reads of the input and the golden table) + 5 per
-    # wave (the data and lineage writes with their shuffle stages) + 2 for
-    # the one lineage read that counts rows_written after the last wave; a
-    # per-wave row count would make it 23, and a per-wave golden read with a
-    # schema-inferred read-back 28
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 19
+    # wave (the data and lineage writes with their shuffle stages) + 1 for
+    # the one lineage collect that sums rows_written on the driver after the
+    # last wave; a Spark-side sum would make it 19, a per-wave row count 23,
+    # and a per-wave golden read with a schema-inferred read-back 28
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 18
 
 
 def test_lineage_extraction_accuracy(spark, synth_dir, tmp_path):
