@@ -22,7 +22,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from arabic_ocr_spark.job import ExtractionJobConfig, lineage_rows, plan_extraction
-from arabic_ocr_spark.kernel.classifier import CharModel
 from arabic_ocr_spark.operators.dedup import (
     dedup_groups,
     exact_dup_groups,
@@ -59,7 +58,7 @@ from arabic_ocr_spark.operators.textstats import (
     quality_scores,
     token_stats,
 )
-from arabic_ocr_spark.sources.synth import SynthConfig, default_model_path, synthesize
+from arabic_ocr_spark.sources.synth import SynthConfig, synthesize
 
 _SYNTH_VERSION = "v3"
 _SYNTH_SIZES = {
@@ -139,10 +138,9 @@ def _extraction_plan(spark: SparkSession, sf_dir: str, cached: bool = True) -> D
     extract_lineage share it through _stage.  cached=False returns the raw
     un-persisted plan (plan-shape tests)."""
     def build():
-        df = _transcripts(spark, sf_dir).filter(F.col("text") != "")
-        # 128 chunks: ~4 task rounds at 32 cores so stragglers average out
-        cfg = ExtractionJobConfig(num_chunks=128, model_path=default_model_path())
-        return plan_extraction(spark, df, cfg, model=CharModel.load(default_model_path()))
+        # 128 chunks: ~4 task rounds at 32 cores so stragglers average out;
+        # no model_path: the packaged default model
+        return plan_extraction(spark, _transcripts(spark, sf_dir), ExtractionJobConfig(num_chunks=128))
 
     return _stage(spark, sf_dir, "extraction", build) if cached else build()
 

@@ -162,56 +162,69 @@ def _extract(df, model_bc, templates_bc):
     return df.mapInPandas(extract_batches, schema=schema)
 
 
+def _payloads(df):
+    """df's payload-bearing rows: a blank `text` is the contract's
+    non-payload marker and never reaches the kernel."""
+    from pyspark.sql import functions as F
+
+    return df.filter(F.col("text") != "")
+
+
+def _broadcasts(spark, cfg: ExtractionJobConfig, model: CharModel | None = None,
+                templates: list[TemplateSpec] | None = None):
+    """(model_bc, templates_bc): the kernel's broadcast handles.  A run or a
+    stream creates them once and every plan it builds reuses them, so the
+    model crosses the wire once per executor, not once per wave or
+    micro-batch (a per-batch broadcast would also pile up un-unpersisted
+    blocks on executors over a long-running stream)."""
+    sc = spark.sparkContext
+    return sc.broadcast(model or CharModel.load(cfg.model_path)), sc.broadcast(templates or [])
+
+
 def plan_extraction(spark, df, cfg: ExtractionJobConfig, model: CharModel | None = None,
                     templates: list[TemplateSpec] | None = None, wave: int | None = None,
                     model_bc=None, templates_bc=None, prechunked: bool = False):
     """Builds the extraction DataFrame (no side effects; one shuffle).
 
-    wave: restrict the plan to one checkpoint wave.  The predicate is on the
-    PRE-kernel salted chunk column (`pmod(chunk, num_waves) == wave`), so it
-    prunes before the repartition — a wave scans, shuffles, and extracts only
-    its own 1/num_waves of the input.  (Filtering the kernel OUTPUT instead
-    would re-run the opaque mapInPandas kernel over everything per wave:
-    Catalyst cannot push a predicate through it.)
+    The one owner of the input contract: df is a raw transcripts frame, or
+    with prechunked a `stage_chunked` layout (chunk and wave already
+    materialized).  Either way this applies, once, the payload filter, the
+    role filter (payload_roles) and the wave restriction.
 
-    model_bc / templates_bc: pre-created broadcast handles, so callers that
-    build many plans per session (the wave loop, streaming foreachBatch)
+    wave: restrict the plan to one checkpoint wave, `wave == w` on the
+    PRE-kernel salted chunk's wave column.  On a staged input that is the
+    partition column, so even the scan reads only 1/num_waves; on a raw
+    input it is computed, and the predicate still prunes below the
+    repartition — a wave shuffles and extracts only its own rows.
+    (Filtering the kernel OUTPUT instead would re-run the opaque
+    mapInPandas kernel over everything per wave: Catalyst cannot push a
+    predicate through it.)
+
+    model_bc / templates_bc: `_broadcasts` handles, so callers that build
+    many plans per session (the wave loop, streaming foreachBatch)
     broadcast the model exactly once instead of once per plan.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    if model_bc is None:
-        model = model or CharModel.load(cfg.model_path)
-        model_bc = spark.sparkContext.broadcast(model)
-    if templates_bc is None:
-        templates_bc = spark.sparkContext.broadcast(templates or [])
-
-    if prechunked:
-        # staged input (stage_chunked): the salted chunk column is already
-        # materialized and the caller's read was partition-pruned to the
-        # wave — no hashing, no wave filter.  The role filter still applies
-        # here: stage_chunked carries `role` through the staged layout
-        # precisely so a role-restricted run over a staged directory is not
-        # a silent no-op (a pre-r3 staged layout without the column raises
-        # rather than extracting every role)
-        base = df
-        if cfg.payload_roles:
-            if "role" not in base.columns:
-                raise ValueError(
-                    "payload_roles is set but the staged input has no 'role' "
-                    "column; re-run stage_chunked on a role-bearing source"
-                )
-            base = base.filter(F.col("role").isin(*cfg.payload_roles))
-        salted = base.select("conv_id", "turn_idx", "text", "chunk")
-    else:
-        cols = df.select("conv_id", "turn_idx", "text")
-        if cfg.payload_roles:
-            cols = df.filter(F.col("role").isin(*cfg.payload_roles)).select("conv_id", "turn_idx", "text")
-
-        salted = _with_salted_chunk(cols, cfg)
-        if wave is not None:
-            salted = salted.filter(_wave_of(F.col("chunk"), cfg.num_waves) == wave)
+    if model_bc is None or templates_bc is None:
+        model_bc, templates_bc = _broadcasts(spark, cfg, model, templates)
+    rows = _payloads(df)
+    if cfg.payload_roles:
+        # stage_chunked carries `role` through the staged layout precisely
+        # so a role-restricted run over it is not a silent no-op; an input
+        # without the column raises rather than extracting every role
+        if "role" not in rows.columns:
+            raise ValueError(
+                "payload_roles is set but the input has no 'role' column; "
+                "a staged input must be re-staged from a role-bearing source"
+            )
+        rows = rows.filter(F.col("role").isin(*cfg.payload_roles))
+    if not prechunked:
+        rows = _chunked(rows, cfg)
+    if wave is not None:
+        rows = rows.filter(F.col("wave") == wave)
+    salted = rows.select("conv_id", "turn_idx", "text", "chunk")
     gate = None
     if cfg.quality_filter:
         # pre-kernel gate (operators/multimodal.with_quality_flag): drops
@@ -260,24 +273,22 @@ def plan_extraction(spark, df, cfg: ExtractionJobConfig, model: CharModel | None
             .select(*StructType.fromDDL(RESULT_SCHEMA).names))
 
 
-def _wave_of(chunk_col, num_waves: int):
+def _chunked(df, cfg: ExtractionJobConfig):
+    """df's conv_id, turn_idx and text (and role, when df has it) plus the
+    salted `chunk`, pmod(xxhash64(conv_id, pmod(xxhash64(turn_idx), S)), C),
+    and its checkpoint `wave`, pmod(chunk, W).  When S is unset it is
+    derived from df's skew sketch and pinned on cfg: every wave (and a
+    later run over the same output) must salt identically."""
     from pyspark.sql import functions as F
 
-    return F.pmod(chunk_col, F.lit(num_waves)).cast("int")
-
-
-def _with_salted_chunk(df, cfg: ExtractionJobConfig):
-    """df plus the salted `chunk` column,
-    pmod(xxhash64(conv_id, pmod(xxhash64(turn_idx), S)), C).  When S is
-    unset it is derived from df's skew sketch and pinned on cfg: every wave
-    (and a later run over the same output) must salt identically."""
-    from pyspark.sql import functions as F
-
+    keep = ["conv_id", "turn_idx", "text"] + (["role"] if "role" in df.columns else [])
     if cfg.salt_buckets is None:
         cfg.salt_buckets = derive_salt_buckets(df, cfg.num_chunks)
     salt = F.pmod(F.xxhash64(F.col("turn_idx")), F.lit(cfg.salt_buckets))
-    return df.withColumn(
-        "chunk", F.pmod(F.xxhash64(F.col("conv_id"), salt), F.lit(cfg.num_chunks)).cast("int")
+    return (
+        df.select(*keep)
+        .withColumn("chunk", F.pmod(F.xxhash64(F.col("conv_id"), salt), F.lit(cfg.num_chunks)).cast("int"))
+        .withColumn("wave", F.pmod(F.col("chunk"), F.lit(cfg.num_waves)).cast("int"))
     )
 
 
@@ -294,15 +305,10 @@ def stage_chunked(spark, df, cfg: ExtractionJobConfig, staged_dir: str) -> str:
     The production analog is an Iceberg table partitioned by the wave
     column; the staged copy is also what you keep when the same corpus
     will be extracted more than once."""
-    from pyspark.sql import functions as F
-
-    # `role` rides along so a later role-restricted run over the staged
-    # layout can still filter (plan_extraction's prechunked branch); sources
-    # without the column stage role-less and such runs raise there
-    keep = ["conv_id", "turn_idx", "text"] + (["role"] if "role" in df.columns else [])
-    salted = _with_salted_chunk(df.select(*keep), cfg)
-    salted = salted.withColumn("wave", _wave_of(F.col("chunk"), cfg.num_waves))
-    salted.write.mode("overwrite").partitionBy("wave").parquet(staged_dir)
+    # `role` rides along (when the source has it) so a later role-restricted
+    # run over the staged layout can still filter; S, when derived, comes
+    # from a sketch of every row, blank turns included
+    _chunked(df, cfg).write.mode("overwrite").partitionBy("wave").parquet(staged_dir)
     _pin_partitioning(cfg, staged_dir, "staged input", adopt=False)
     return staged_dir
 
@@ -457,7 +463,6 @@ def run_extraction(
     cfg: ExtractionJobConfig | None = None,
     model: CharModel | None = None,
     templates: list[TemplateSpec] | None = None,
-    fail_after_wave: int | None = None,
     input_table: str | None = None,
 ) -> dict:
     """Execute the job in resumable waves.  Returns run stats.
@@ -465,11 +470,7 @@ def run_extraction(
     input_path: parquet path; or pass input_table to read a catalog table
     (the production Iceberg source — any Spark catalog name resolves, and
     Iceberg's scan supports the same pruning/pushdown the plan tests pin).
-    fail_after_wave: test hook — raise after committing that many waves
-    (simulates a mid-run kill for the resume test).
     """
-    from pyspark.sql import functions as F
-
     cfg = cfg or ExtractionJobConfig()
     if (input_path is None) == (input_table is None):
         raise ValueError("exactly one of input_path / input_table is required")
@@ -480,15 +481,14 @@ def run_extraction(
         # partitioned copy so per-wave scans prune to 1/num_waves
         _pin_partitioning(cfg, input_path, "staged input")
     df = spark.table(input_table) if input_table else spark.read.parquet(input_path)
-    df = df.filter(F.col("text") != "")
 
     # pin the partitioning parameters for the OUTPUT's lifetime: a resumed
-    # run must salt exactly like the committed waves
-    _pin_partitioning(cfg, output_dir, "output dir", source=df)
+    # run must salt exactly like the committed waves (a derived S sketches
+    # the payload rows)
+    _pin_partitioning(cfg, output_dir, "output dir", source=_payloads(df))
 
     # broadcast once for the whole run; every wave's plan reuses the handles
-    model_bc = spark.sparkContext.broadcast(model or CharModel.load(cfg.model_path))
-    templates_bc = spark.sparkContext.broadcast(templates or [])
+    model_bc, templates_bc = _broadcasts(spark, cfg, model, templates)
     golden = spark.read.parquet(cfg.golden_path) if cfg.golden_path else None
     iceberg_table = cfg.iceberg_table if cfg.iceberg_table and _iceberg_available(spark) else None
 
@@ -502,24 +502,10 @@ def run_extraction(
     for wave in range(cfg.num_waves):
         if wave in done_waves:
             continue
-        # per-wave plan: the wave predicate sits BELOW the kernel (on the
-        # pre-shuffle salted chunk), so this wave scans/shuffles/extracts
-        # only its own 1/num_waves of the rows; with a staged input the
-        # predicate is a PARTITION filter and even the scan reads 1/W
-        if staged:
-            wave_src = df.filter(F.col("wave") == wave).drop("wave")
-            wave_df = plan_extraction(
-                spark, wave_src, cfg, model_bc=model_bc, templates_bc=templates_bc,
-                prechunked=True,
-            )
-        else:
-            wave_df = plan_extraction(
-                spark, df, cfg, wave=wave, model_bc=model_bc, templates_bc=templates_bc
-            )
+        wave_df = plan_extraction(spark, df, cfg, wave=wave, model_bc=model_bc,
+                                  templates_bc=templates_bc, prechunked=staged)
         commit_unit(spark, wave_df, output_dir, "wave", wave, golden, iceberg_table)
         ran.append(wave)
-        if fail_after_wave is not None and len(ran) >= fail_after_wave:
-            raise RuntimeError(f"injected failure after wave {wave}")
 
     # one read of the tiny lineage of the waves this run committed
     rows_written = 0

@@ -46,13 +46,8 @@ class CharModel:
         from a --py-files engine.zip."""
         if path is None:
             return cls.load_default()
-        try:
-            with open(path, encoding="utf-8") as f:
-                return cls.from_raw(json.load(f))
-        except (NotADirectoryError, FileNotFoundError):
-            if ".zip" in path:
-                return cls.load_default()
-            raise
+        with open(path, encoding="utf-8") as f:
+            return cls.from_raw(json.load(f))
 
     @classmethod
     def load_default(cls) -> "CharModel":

@@ -50,7 +50,10 @@ def orders_by_nation(orders: DataFrame, customer: DataFrame, nation: DataFrame) 
 
 def events_hourly(events: DataFrame) -> DataFrame:
     """Tumbling 1-hour rollup by event type (date_trunc is portable to the
-    oracle; the streaming job reuses this expression with a watermark)."""
+    oracle).  Its streaming twin, stream_job.streaming_events_hourly, groups
+    by a watermarked `window(ts, '1 hour')` instead, since an unbounded
+    stream needs the watermark; tests/test_streaming.py checks that the two
+    agree."""
     return (
         events.groupBy(
             F.date_trunc("hour", F.col("ts")).alias("hour"),

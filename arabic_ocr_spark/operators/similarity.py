@@ -35,8 +35,25 @@ def _cosine(a, b):
     return dot / (na * nb)
 
 
-def _as_double(col):
-    return F.transform(col, lambda x: x.cast("double"))
+def _vecs(embeddings: DataFrame) -> DataFrame:
+    """(vec_id, v): the embeddings with `v` the vector cast to double — the
+    one projection every operator here computes on."""
+    return embeddings.select("vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v"))
+
+
+def _matrix(vs, unit: bool = True):
+    """The Arrow boundary: a sequence of vectors as one float64 matrix, one
+    row per vector, L2-normalized by row unless `unit` is False."""
+    import numpy as np
+
+    X = np.asarray([np.asarray(v, dtype=np.float64) for v in vs])
+    return X / np.linalg.norm(X, axis=1, keepdims=True) if unit else X
+
+
+def _queries(vecs: DataFrame, n_queries: int) -> DataFrame:
+    """(query_id, q): the first n_queries vectors, the query side of top-k."""
+    return vecs.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("q"))
 
 
 def _top_k(sims: DataFrame, k: int) -> DataFrame:
@@ -51,9 +68,7 @@ def _rank_candidates(vecs: DataFrame, cand_ids: DataFrame, n_queries: int, k: in
     ranking tail of the approximate top-k operators.  Candidates carry IDS
     ONLY; the vectors re-join by id for just the surviving pairs, the query
     side broadcast."""
-    queries = vecs.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("q")
-    )
+    queries = _queries(vecs, n_queries)
     nbrs = vecs.select(F.col("vec_id").alias("neighbor_id"), "v")
     sims = (
         cand_ids.join(F.broadcast(queries), "query_id")
@@ -88,10 +103,8 @@ def cosine_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10) -> DataF
 
     Output: (query_id, neighbor_id, sim_r, rank) with sim rounded to 4 and
     deterministic (sim desc, neighbor_id asc) ranking."""
-    vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
-    queries = vecs.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("q")
-    )
+    vecs = _vecs(embeddings)
+    queries = _queries(vecs, n_queries)
     sims = (
         vecs.join(F.broadcast(queries), F.col("vec_id") != F.col("query_id"))
         .select(
@@ -135,7 +148,7 @@ def embedding_dup_pairs(embeddings: DataFrame, threshold: float = 0.38,
     the honest cost floor for an exact low-threshold similarity join."""
     import pandas as pd
 
-    vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
+    vecs = _vecs(embeddings)
     # n only sizes the block grid — pass n_rows (e.g. a catalog/metadata row
     # count) to avoid the planning-time full pass; any approximate count of
     # the right magnitude yields the same task layout
@@ -160,20 +173,16 @@ def embedding_dup_pairs(embeddings: DataFrame, threshold: float = 0.38,
     def gemm_candidates(batches):
         import numpy as np
 
+        def block(rows):  # (ids, unit-row matrix) of one packed block
+            return np.asarray([r["vec_id"] for r in rows], dtype=np.int64), _matrix([r["v"] for r in rows])
+
         for pdf in batches:
             out_a, out_b = [], []
             for rows_a, rows_b, same in zip(
                 pdf["rows_a"], pdf["rows_b"], pdf["block_a"] == pdf["block_b"]
             ):
-                ids_a = np.asarray([r["vec_id"] for r in rows_a], dtype=np.int64)
-                A = np.asarray([np.asarray(r["v"], dtype=np.float64) for r in rows_a])
-                A /= np.linalg.norm(A, axis=1, keepdims=True)
-                if same:
-                    ids_b, Bm = ids_a, A
-                else:
-                    ids_b = np.asarray([r["vec_id"] for r in rows_b], dtype=np.int64)
-                    Bm = np.asarray([np.asarray(r["v"], dtype=np.float64) for r in rows_b])
-                    Bm /= np.linalg.norm(Bm, axis=1, keepdims=True)
+                ids_a, A = block(rows_a)
+                ids_b, Bm = (ids_a, A) if same else block(rows_b)
                 G = A @ Bm.T
                 ii, jj = np.nonzero(G >= cand_floor)
                 ia, ib = ids_a[ii], ids_b[jj]
@@ -215,7 +224,7 @@ def _band_buckets(vecs: DataFrame, n_bands: int, rows_per_band: int, seed: int) 
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
+            X = _matrix(pdf["v"], unit=False)
             d = X.shape[1]
             P = planes.get(d)
             if P is None:
@@ -262,7 +271,7 @@ def embedding_neardup_candidates(embeddings: DataFrame, n_bands: int = 16,
     only shuffles are the self-join on the short (band, key) buckets and the
     final distinct — identical to the MinHash-LSH text ladder, which is the
     point: at 0.95+ this replaces a quadratic GEMM with a bucket join."""
-    vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
+    vecs = _vecs(embeddings)
     return banded_pairs(_band_buckets(vecs, n_bands, rows_per_band, seed), "vec_id",
                         resolve_bucket_cap(max_bucket_size, vecs, n_rows))
 
@@ -276,7 +285,7 @@ def neardup_bucket_audit(embeddings: DataFrame, n_bands: int = 16,
     dropped_pairs_ubound).  Run it before enabling a cap on a new corpus —
     and alongside the guarded job in production — so a binding cap is a
     measured, inspected event rather than silent pair loss."""
-    vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
+    vecs = _vecs(embeddings)
     return bucket_audit(_band_buckets(vecs, n_bands, rows_per_band, seed),
                         resolve_bucket_cap(max_bucket_size, vecs, n_rows), "vec_id")
 
@@ -349,7 +358,7 @@ def embedding_neardup_hi(embeddings: DataFrame, threshold: float = 0.95,
             f"at threshold={threshold} banding does not prune — use "
             f"embedding_dup_pairs (exact blocked GEMM) instead"
         )
-    vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
+    vecs = _vecs(embeddings)
     # one count serves both auto-derivations (banding AND the bucket cap)
     n = n_rows
     if n is None and (n_bands is None or rows_per_band is None or max_bucket_size == "auto"):
@@ -380,16 +389,14 @@ def _train_ivf_centroids(vecs: DataFrame, n_centroids: int, iters: int):
     init_rows = (
         vecs.withColumn("h", F.xxhash64("vec_id")).orderBy("h").limit(n_centroids).collect()
     )
-    cent = np.asarray([np.asarray(r["v"], dtype=np.float64) for r in init_rows])
-    cent /= np.linalg.norm(cent, axis=1, keepdims=True)
+    cent = _matrix([r["v"] for r in init_rows])
 
     for _ in range(iters):
         frozen = cent  # capture this iteration's centroids in the closure
 
         def partial_sums(batches, cent_m=frozen):
             for pdf in batches:
-                X = np.asarray([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
-                X = X / np.linalg.norm(X, axis=1, keepdims=True)
+                X = _matrix(pdf["v"])
                 assign = np.argmax(X @ cent_m.T, axis=1)
                 cells, pos, sums, cnts = [], [], [], []
                 for c in np.unique(assign):
@@ -435,9 +442,7 @@ def _nearest_cells(vecs: DataFrame, cent: list, n: int, id_col: str, name: str) 
     def cells(batches, cent_list=cent):
         cent_m = np.asarray(cent_list)
         for pdf in batches:
-            X = np.asarray([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
-            Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-            top = np.argsort(-(Xn @ cent_m.T), kind="stable", axis=1)[:, :n]
+            top = np.argsort(-(_matrix(pdf["v"]) @ cent_m.T), kind="stable", axis=1)[:, :n]
             yield pd.DataFrame({
                 id_col: np.repeat(pdf["vec_id"].to_numpy(), n),
                 "cell": top.reshape(-1),
@@ -469,7 +474,7 @@ def ivf_ann_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
     the corpus; candidate generation joins the C-cell index against the
     broadcast query probes; only candidates (a cell-bounded fraction of the
     corpus) reach the exact-cosine ranking."""
-    vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
+    vecs = _vecs(embeddings)
     cent = _train_ivf_centroids(vecs, n_centroids, kmeans_iters)
 
     # the index and probe tables carry IDS ONLY: shipping the vectors
@@ -551,7 +556,7 @@ def lsh_ann_candidates(embeddings: DataFrame, n_queries: int = 5,
     same parquet floats (see __spark_entry__._sql_band_sig).
     Only the top-k RANKING built on these candidates is approximate and
     graded by measured recall instead."""
-    vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
+    vecs = _vecs(embeddings)
     # table t = band t of the shared banding primitive (seeded planes)
     buckets = _band_buckets(vecs, n_tables, n_planes, seed=seed)
     qbuckets = (
@@ -596,6 +601,6 @@ def lsh_ann_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
     (ivf_ann_topk, recall ~0.9 at ~25% probe fraction) remains the
     data-adaptive default; this is the model-free alternative that needs
     no training pass."""
-    vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
+    vecs = _vecs(embeddings)
     cand_ids = lsh_ann_candidates(embeddings, n_queries, n_planes, n_tables)
     return _rank_candidates(vecs, cand_ids, n_queries, k)

@@ -21,12 +21,12 @@ from __future__ import annotations
 
 import os
 
-from ..job import ExtractionJobConfig, commit_unit, plan_extraction
+from ..job import ExtractionJobConfig, _broadcasts, commit_unit, plan_extraction
 from ..kernel.classifier import CharModel
+from ..sources.readers import TRANSCRIPTS_SCHEMA
 
 __all__ = ["run_streaming_extraction", "streaming_events_hourly", "streaming_conv_progress",
-           "streaming_payload_quality", "streaming_dedup_payloads",
-           "streaming_neardup_payloads"]
+           "streaming_dedup_payloads", "streaming_neardup_payloads"]
 
 
 def _suppress_within_watermark(transcripts_stream, key, watermark: str):
@@ -89,21 +89,6 @@ def streaming_neardup_payloads(transcripts_stream, watermark: str = "1 hour",
         transcripts_stream, simhash_expr(F.col("text"), bits), watermark)
 
 
-def streaming_payload_quality(transcripts_stream):
-    """Map-only payload validity/shape sweep on an unbounded stream: the
-    JVM-side envelope decode (operators/multimodal.payload_meta) contains no
-    aggregation or Python, so it applies to a readStream DataFrame directly
-    — the cheap front gate that routes malformed payloads to a dead-letter
-    sink before any stateful or Python-side work."""
-    from ..operators.multimodal import payload_meta
-
-    return payload_meta(transcripts_stream)
-
-TRANSCRIPTS_SCHEMA = (
-    "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-)
-
-
 def run_streaming_extraction(
     spark,
     input_dir: str,
@@ -124,15 +109,9 @@ def run_streaming_extraction(
     live upstream of foreachBatch.  A gated re-send is dropped before it
     occupies a kernel slot, the streaming twin of the batch
     dedup-before-compute option."""
-    from pyspark.sql import functions as F
-
     cfg = cfg or ExtractionJobConfig()
-    model = model or CharModel.load(cfg.model_path)
-    # broadcast ONCE for the stream's lifetime: foreachBatch runs per
-    # micro-batch, and a per-batch broadcast would accumulate un-unpersisted
-    # broadcast blocks on executors over a long-running stream
-    model_bc = spark.sparkContext.broadcast(model)
-    templates_bc = spark.sparkContext.broadcast([])
+    # broadcast ONCE for the stream's lifetime, not once per micro-batch
+    model_bc, templates_bc = _broadcasts(spark, cfg, model)
     # like the broadcasts: resolve the (static) golden table once for the
     # stream's lifetime, not once per micro-batch
     golden = spark.read.parquet(cfg.golden_path) if cfg.golden_path else None
@@ -145,13 +124,13 @@ def run_streaming_extraction(
         stream = pre_gate(stream)
 
     def process_batch(batch_df, batch_id: int):
-        df = batch_df.filter(F.col("text") != "")
+        # the raw micro-batch: plan_extraction applies the input contract
         result = plan_extraction(
-            df.sparkSession, df, cfg, model_bc=model_bc, templates_bc=templates_bc
+            batch_df.sparkSession, batch_df, cfg, model_bc=model_bc, templates_bc=templates_bc
         )
         # idempotent per batch id; lineage's `wave` column carries the
         # micro-batch id, so one consumer reads batch and streaming lineage
-        commit_unit(df.sparkSession, result, output_dir, "batch", int(batch_id), golden)
+        commit_unit(batch_df.sparkSession, result, output_dir, "batch", int(batch_id), golden)
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

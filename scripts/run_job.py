@@ -32,7 +32,8 @@ def main() -> None:
     ap.add_argument("--input-table", default=None,
                     help="catalog table name (Iceberg production source) instead of --input")
     ap.add_argument("--output", required=True)
-    ap.add_argument("--model", default=None)
+    ap.add_argument("--model", default=None,
+                    help="classifier model JSON; omit for the model packaged with the engine")
     ap.add_argument("--chunks", type=int, default=256)
     ap.add_argument("--waves", type=int, default=8)
     ap.add_argument("--salt", type=int, default=None,
@@ -55,7 +56,6 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from arabic_ocr_spark.job import ExtractionJobConfig, run_extraction, stage_chunked
-    from arabic_ocr_spark.sources.synth import default_model_path
     from arabic_ocr_spark.streaming.stream_job import run_streaming_extraction
 
     spark = SparkSession.builder.appName("arabic-ocr-extract").getOrCreate()
@@ -63,7 +63,7 @@ def main() -> None:
         num_chunks=args.chunks,
         num_waves=args.waves,
         salt_buckets=args.salt,
-        model_path=args.model or default_model_path(),
+        model_path=args.model,
         golden_path=args.golden,
         dedup_payloads=args.dedup_payloads.lower() == "true",
         payload_roles=tuple(r for r in (args.roles or "").split(",") if r),

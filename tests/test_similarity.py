@@ -5,8 +5,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from arabic_ocr_spark.operators.similarity import (
-    _as_double,
     _cosine,
+    _vecs,
     ann_recall,
     embedding_dup_pairs,
     ivf_ann_topk,
@@ -21,7 +21,7 @@ def embeddings(spark):
 
 
 def _brute_force_pairs(embeddings, threshold):
-    vecs = embeddings.select("vec_id", _as_double("embedding").alias("v"))
+    vecs = _vecs(embeddings)
     left = vecs.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"))
     right = vecs.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"))
     return (

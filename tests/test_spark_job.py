@@ -1,12 +1,14 @@
 """Spark end-to-end tests: per-turn equality vs the serial oracle, order
 stability, resume-from-lineage, and skew spreading (SURVEY.md §5)."""
 
+import contextlib
 import os
 import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
+import arabic_ocr_spark.job as job
 from arabic_ocr_spark.job import ExtractionJobConfig, read_lineage, run_extraction
 from arabic_ocr_spark.session import get_spark
 from arabic_ocr_spark.sources.synth import SynthConfig, default_model_path, synthesize
@@ -27,6 +29,20 @@ def _cfg(**kw):
 
 def _read_out(spark, out_dir):
     return spark.read.parquet(os.path.join(out_dir, "data"))
+
+
+@contextlib.contextmanager
+def _killed_after_first_wave():
+    """A mid-run kill: the run's first wave commits, then the run raises."""
+    commit = job.commit_unit
+
+    def commit_then_die(*args, **kwargs):
+        commit(*args, **kwargs)
+        raise RuntimeError("injected failure after the first committed wave")
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(job, "commit_unit", commit_then_die)
+        yield
 
 
 def test_extraction_matches_oracle(spark, synth_dir, tmp_path):
@@ -69,8 +85,8 @@ def test_output_deterministic_across_runs(spark, synth_dir, tmp_path):
 
 def test_resume_skips_committed_waves(spark, synth_dir, tmp_path):
     out = str(tmp_path / "out")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_extraction(spark, f"{synth_dir}/transcripts.parquet", out, _cfg(), fail_after_wave=1)
+    with _killed_after_first_wave(), pytest.raises(RuntimeError, match="injected failure"):
+        run_extraction(spark, f"{synth_dir}/transcripts.parquet", out, _cfg())
     lin1 = read_lineage(spark, out)
     committed = {r.committed_at for r in lin1.select("committed_at").distinct().collect()}
     assert lin1.select("wave").distinct().count() == 1
@@ -202,12 +218,9 @@ def test_resume_reuses_pinned_salt(spark, synth_dir, tmp_path, monkeypatch):
     """chunk/wave membership is a function of salt_buckets: a resumed run
     must reuse the salt pinned at first run, never re-derive it (a different
     sample could yield a different S and silently duplicate/drop rows)."""
-    import arabic_ocr_spark.job as job
-
     out = str(tmp_path / "out")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_extraction(spark, f"{synth_dir}/transcripts.parquet", out,
-                       _cfg(salt_buckets=None), fail_after_wave=1)
+    with _killed_after_first_wave(), pytest.raises(RuntimeError, match="injected failure"):
+        run_extraction(spark, f"{synth_dir}/transcripts.parquet", out, _cfg(salt_buckets=None))
 
     def boom(*a, **k):
         raise AssertionError("resume must not re-derive salt buckets")
@@ -236,8 +249,8 @@ def test_waves_with_dedup_payloads(spark, synth_dir, tmp_path):
     and duplicate-free, and resume still works."""
     out = str(tmp_path / "out")
     cfg = _cfg(dedup_payloads=True)
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_extraction(spark, f"{synth_dir}/transcripts.parquet", out, cfg, fail_after_wave=1)
+    with _killed_after_first_wave(), pytest.raises(RuntimeError, match="injected failure"):
+        run_extraction(spark, f"{synth_dir}/transcripts.parquet", out, cfg)
     stats = run_extraction(spark, f"{synth_dir}/transcripts.parquet", out, _cfg(dedup_payloads=True))
     assert stats["waves_skipped"] == 1 and stats["waves_run"] == 2
     result = _read_out(spark, out)

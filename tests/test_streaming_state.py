@@ -74,7 +74,7 @@ def test_conv_progress_accumulates_across_batches(spark, two_batch_input, tmp_pa
 def test_payload_quality_runs_on_unbounded_stream(spark, two_batch_input, tmp_path):
     """payload_meta is JVM-only and aggregation-free, so it must apply to a
     readStream DataFrame without foreachBatch (append mode)."""
-    from arabic_ocr_spark.streaming.stream_job import streaming_payload_quality
+    from arabic_ocr_spark.operators.multimodal import payload_meta
 
     stream = (
         spark.readStream.schema(TRANSCRIPTS_SCHEMA)
@@ -82,7 +82,7 @@ def test_payload_quality_runs_on_unbounded_stream(spark, two_batch_input, tmp_pa
     )
     out = str(tmp_path / "out")
     q = (
-        streaming_payload_quality(stream)
+        payload_meta(stream)
         .writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", str(tmp_path / "ckpt2"))

@@ -72,8 +72,8 @@ def run_at(cores: int, input_dir: str) -> dict:
                       shuffle_partitions=max(16, 2 * cores))
     spark.sparkContext.setLogLevel("ERROR")
     model = CharModel.load(default_model_path())
-    df = spark.read.parquet(os.path.join(input_dir, "transcripts.parquet")).filter("text <> ''")
-    n = df.count()
+    df = spark.read.parquet(os.path.join(input_dir, "transcripts.parquet"))
+    n = df.filter("text <> ''").count()  # the plan extracts payload rows only
     cfg = ExtractionJobConfig(num_chunks=128, model_path=default_model_path())
     # warmup: JVM + python workers + broadcast, outside the timed window
     plan_extraction(spark, df.limit(32 * cores), cfg, model=model).count()

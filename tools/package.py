@@ -1,17 +1,20 @@
-"""Builds dist/engine.zip for spark-submit --py-files (code + model artifact)."""
+"""Builds dist/engine.zip for spark-submit --py-files (code + model artifact).
+
+    python tools/package.py [out.zip]      # default: dist/engine.zip
+"""
 
 from __future__ import annotations
 
 import os
+import sys
 import zipfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> str:
-    dist = os.path.join(ROOT, "dist")
-    os.makedirs(dist, exist_ok=True)
-    out = os.path.join(dist, "engine.zip")
+def main(out: str | None = None) -> str:
+    out = out or os.path.join(ROOT, "dist", "engine.zip")
+    os.makedirs(os.path.dirname(os.path.abspath(out)), exist_ok=True)
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
         pkg = os.path.join(ROOT, "arabic_ocr_spark")
         for dirpath, _dirs, files in os.walk(pkg):
@@ -26,4 +29,4 @@ def main() -> str:
 
 
 if __name__ == "__main__":
-    main()
+    main(*sys.argv[1:2])
