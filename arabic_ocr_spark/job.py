@@ -10,11 +10,20 @@ re-expressed as a DataFrame program, reference segment_words.py:234-277):
     salting splits a pathologically long conversation (hot conv_id) across
     chunks; S is derived from a cheap skew sketch.  chunk is DETERMINISTIC
     -> it is also the lineage/checkpoint key.
- -> repartition(C, chunk): every chunk's rows colocate in one task
+ -> placement by chunk id (`_place`): every chunk's rows colocate in one
+    task, and each live chunk gets its own task.  A wave's plan is
+    repartitionById(ceil(C/W), chunk div W) (its chunks are w, w+W, ...);
+    a whole-input plan is repartitionById(C, chunk).  By id, not by hash:
+    repartition(C, chunk) hashes the C ids with Murmur3 onto fewer than C
+    partitions (C=8 fills 5, C=64 fills 37), so some tasks run several
+    chunks while empty ones beside them still pay a Python task's fixed
+    cost.  repartitionById needs pyspark >= 4.1.
  -> sortWithinPartitions(conv_id, turn_idx): stable turn ordering inside
     each partition (the north rule's ordering guarantee)
  -> mapInPandas(extract kernel): Arrow batches in, NumPy per payload,
-    classifier weights + templates broadcast ONCE per executor
+    classifier weights + templates broadcast ONCE per executor; `part_id`
+    is the partition that owns the row's chunk (chunk div W on a wave's
+    plan, chunk on a whole-input plan)
  -> checkpointed write: chunks are grouped into WAVES; each wave commits
     through `commit_unit` (shared with the streaming micro-batch sink): its
     data directory atomically (parquet _SUCCESS; Iceberg snapshot on a
@@ -27,7 +36,7 @@ re-expressed as a DataFrame program, reference segment_words.py:234-277):
 At 100 TB: C is sized so a chunk's payload bytes fit one task comfortably
 (e.g. 2-8 GB/chunk -> C in the tens of thousands), waves bound the blast
 radius of a failure, and the only shuffle in the whole job is the single
-repartition by chunk — the kernel itself is map-only.
+placement by chunk — the kernel itself is map-only.
 """
 
 from __future__ import annotations
@@ -248,22 +257,22 @@ def plan_extraction(spark, df, cfg: ExtractionJobConfig, model: CharModel | None
             # direct path's gate
             distinct = gate(distinct)
         # the distinct side's `chunk` is the payload's own bucket: it only
-        # spreads the kernel tasks, and the turns keep their salted chunk
-        distinct = distinct.withColumn(
+        # spreads the kernel tasks (placed like a chunk, so a wave runs
+        # ceil(C/W) of them), and the turns keep their salted chunk
+        distinct = _place(distinct.withColumn(
             "chunk", F.pmod(F.xxhash64("_ph"), F.lit(cfg.num_chunks)).cast("int")
-        ).repartition(cfg.num_chunks, F.col("chunk"))
+        ), cfg, wave)
         per_payload = _extract(distinct, model_bc, templates_bc).drop("chunk")
         # restore the canonical partitioning/order contract after the join
         result = (
-            hashed.drop("text").join(per_payload, "_ph")
-            .repartition(cfg.num_chunks, F.col("chunk"))
+            _place(hashed.drop("text").join(per_payload, "_ph"), cfg, wave)
             .sortWithinPartitions("conv_id", "turn_idx")
         )
     else:
         if gate is not None:
             salted = gate(salted)
         result = _extract(
-            salted.repartition(cfg.num_chunks, F.col("chunk")).sortWithinPartitions("conv_id", "turn_idx"),
+            _place(salted, cfg, wave).sortWithinPartitions("conv_id", "turn_idx"),
             model_bc, templates_bc,
         )
     # part_id is the partition that OWNS the row's chunk: the kernel task on
@@ -273,17 +282,33 @@ def plan_extraction(spark, df, cfg: ExtractionJobConfig, model: CharModel | None
             .select(*StructType.fromDDL(RESULT_SCHEMA).names))
 
 
+def _place(df, cfg: ExtractionJobConfig, wave: int | None):
+    """df repartitioned by the `chunk` id itself (repartitionById; the
+    module docstring says why not by its hash).  A wave-restricted plan
+    (`wave` set) holds one wave's chunks w, w+W, w+2W, ...; `chunk div W`
+    numbers them 0, 1, 2, ..., so the wave runs ceil(C/W) tasks, one per
+    live chunk and none empty.  A whole-input plan runs C tasks, one per
+    chunk."""
+    from pyspark.sql import functions as F
+
+    if wave is not None:
+        return df.repartitionById(-(-cfg.num_chunks // cfg.num_waves),
+                                  F.expr(f"chunk div {cfg.num_waves}").cast("int"))
+    return df.repartitionById(cfg.num_chunks, "chunk")
+
+
 def _chunked(df, cfg: ExtractionJobConfig):
     """df's conv_id, turn_idx and text (and role, when df has it) plus the
     salted `chunk`, pmod(xxhash64(conv_id, pmod(xxhash64(turn_idx), S)), C),
     and its checkpoint `wave`, pmod(chunk, W).  When S is unset it is
-    derived from df's skew sketch and pinned on cfg: every wave (and a
-    later run over the same output) must salt identically."""
+    derived from the skew sketch of df's payload rows, as `run_extraction`
+    derives it, and pinned on cfg: every wave (and a later run over the
+    same output) must salt identically."""
     from pyspark.sql import functions as F
 
     keep = ["conv_id", "turn_idx", "text"] + (["role"] if "role" in df.columns else [])
     if cfg.salt_buckets is None:
-        cfg.salt_buckets = derive_salt_buckets(df, cfg.num_chunks)
+        cfg.salt_buckets = derive_salt_buckets(_payloads(df), cfg.num_chunks)
     salt = F.pmod(F.xxhash64(F.col("turn_idx")), F.lit(cfg.salt_buckets))
     return (
         df.select(*keep)
@@ -307,7 +332,8 @@ def stage_chunked(spark, df, cfg: ExtractionJobConfig, staged_dir: str) -> str:
     will be extracted more than once."""
     # `role` rides along (when the source has it) so a later role-restricted
     # run over the staged layout can still filter; S, when derived, comes
-    # from a sketch of every row, blank turns included
+    # from a sketch of the payload rows, so staging does not move a row's
+    # chunk or wave
     _chunked(df, cfg).write.mode("overwrite").partitionBy("wave").parquet(staged_dir)
     _pin_partitioning(cfg, staged_dir, "staged input", adopt=False)
     return staged_dir

@@ -1,6 +1,7 @@
 """The `spark-submit --py-files dist/engine.zip` path: the zip that
-tools/package.py builds must import, load its packaged model and extract a
-page with nothing but the zip on PYTHONPATH.  No JVM."""
+tools/package.py builds must import (installing the engine's stat-gated
+zipimporter.invalidate_caches), load its packaged model and extract a page
+with nothing but the zip on PYTHONPATH.  No JVM."""
 
 import os
 import subprocess
@@ -10,8 +11,14 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _PROBE = """
 import sys
+import zipimport
 import arabic_ocr_spark
 assert arabic_ocr_spark.__file__.startswith(sys.argv[1]), arabic_ocr_spark.__file__
+# importing the engine from the zip installs the stat-gated invalidate_caches
+from arabic_ocr_spark import _zipcache
+assert isinstance(arabic_ocr_spark.__loader__, zipimport.zipimporter)
+assert (sys.version_info >= (3, 13)
+        or zipimport.zipimporter.invalidate_caches is _zipcache._invalidate_caches)
 from arabic_ocr_spark.kernel.classifier import CharModel
 from arabic_ocr_spark.kernel.pipeline import extract_page
 from arabic_ocr_spark.sources.codec import decode_payload, encode_payload

@@ -2,6 +2,7 @@
 stability, resume-from-lineage, and skew spreading (SURVEY.md §5)."""
 
 import contextlib
+import json
 import os
 import shutil
 
@@ -159,26 +160,56 @@ def test_dedup_payloads_plan_equivalent(spark, synth_dir, tmp_path):
     assert deduped.exceptAll(direct).count() == 0
 
 
-def test_spark_job_count_per_run(spark, synth_dir, tmp_path):
-    """Pins the Spark jobs a 3-wave run with a golden table starts: the
-    golden read happens once per run and every wave commit reads its files
-    back with RESULT_SCHEMA (no schema-inference job per read-back)."""
+@pytest.fixture(scope="module")
+def grouped_run(spark, synth_dir, tmp_path_factory):
+    """One 3-wave run with a golden table, its Spark jobs in their own job
+    group: (stats, output dir, group)."""
     sc = spark.sparkContext
+    out = str(tmp_path_factory.mktemp("grouped") / "out")
+    group = f"job-count-{os.path.basename(os.path.dirname(out))}"
     cfg = _cfg(golden_path=f"{synth_dir}/transcripts_golden.parquet")
-    group = f"job-count-{os.path.basename(str(tmp_path))}"
     sc.setJobGroup(group, group)
     try:
-        stats = run_extraction(spark, f"{synth_dir}/transcripts.parquet", str(tmp_path / "out"), cfg)
+        stats = run_extraction(spark, f"{synth_dir}/transcripts.parquet", out, cfg)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events land asynchronously
+    return stats, out, group
+
+
+def test_spark_job_count_per_run(spark, grouped_run):
+    """Pins the Spark jobs a 3-wave run with a golden table starts: the
+    golden read happens once per run and every wave commit reads its files
+    back with RESULT_SCHEMA (no schema-inference job per read-back)."""
+    stats, _, group = grouped_run
     assert stats["waves_run"] == 3
     # 2 per run (schema reads of the input and the golden table) + 5 per
     # wave (the data and lineage writes with their shuffle stages) + 1 for
     # the one lineage collect that sums rows_written on the driver after the
     # last wave; a Spark-side sum would make it 19, a per-wave row count 23,
     # and a per-wave golden read with a schema-inferred read-back 28
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 18
+    assert len(spark.sparkContext.statusTracker().getJobIdsForGroup(group)) == 18
+
+
+def test_each_live_chunk_runs_in_its_own_task(spark, grouped_run):
+    """Placement by chunk id: in a wave of C=12, W=3, the chunks w, w+3,
+    w+6, w+9 land on partitions 0..3 (part_id = chunk div W), one chunk per
+    partition, and the wave's kernel stage runs ceil(C/W) = 4 tasks — hash
+    placement ran 12, most of them empty or holding several chunks."""
+    _, out, group = grouped_run
+    owners = (_read_out(spark, out).groupBy("wave", "part_id")
+              .agg(F.countDistinct("chunk").alias("n"), F.min("chunk").alias("chunk")).collect())
+    assert owners and all(r.n == 1 and r.part_id == r.chunk // 3 for r in owners)
+
+    sc = spark.sparkContext
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    dot = sc._jvm.org.apache.spark.ui.scope.RDDOperationGraph.makeDotFile
+    kernel_tasks = [
+        tracker.getStageInfo(s).numTasks
+        for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds
+        if 'label="MapInPandas"' in dot(store.operationGraphForStage(s))
+    ]
+    assert kernel_tasks == [4, 4, 4]
 
 
 def test_lineage_extraction_accuracy(spark, synth_dir, tmp_path):
@@ -291,6 +322,29 @@ def test_staged_input_equals_direct(spark, synth_dir, tmp_path):
         run_extraction(spark, staged, str(tmp_path / "o_bad"), _cfg(num_waves=7))
     with pytest.raises(ValueError, match="staged input was salted with"):
         run_extraction(spark, staged, str(tmp_path / "o_bad_s"), _cfg(salt_buckets=cfg.salt_buckets + 1))
+
+
+def test_staged_input_with_derived_salt_equals_direct(spark, synth_dir, tmp_path):
+    """With salt_buckets=None, staging and a direct run sketch the same
+    payload rows: both pin the same S, and every row keeps its chunk and
+    wave whether or not the corpus was staged first."""
+    from arabic_ocr_spark.job import stage_chunked
+
+    staged, out_d = str(tmp_path / "staged"), str(tmp_path / "o_direct")
+    src = f"{synth_dir}/transcripts.parquet"
+    stage_chunked(spark, spark.read.parquet(src), _cfg(salt_buckets=None), staged)
+    run_extraction(spark, src, out_d, _cfg(salt_buckets=None))
+    pins = []
+    for d in (staged, out_d):
+        with open(os.path.join(d, "_partitioning.json"), encoding="utf-8") as f:
+            pins.append(json.load(f))
+    assert pins[0] == pins[1]
+
+    cols = ["conv_id", "turn_idx", "chunk", "wave"]
+    a = spark.read.parquet(staged).filter(F.col("text") != "").select(cols)
+    b = _read_out(spark, out_d).select(cols)
+    assert a.count() == b.count()
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
 def test_staged_input_respects_payload_roles(spark, synth_dir, tmp_path):
