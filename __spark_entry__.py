@@ -22,6 +22,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from arabic_ocr_spark.job import ExtractionJobConfig, lineage_rows, plan_extraction
+from arabic_ocr_spark.operators import dedup, multimodal, relational, similarity
 from arabic_ocr_spark.operators.dedup import (
     dedup_groups,
     exact_dup_groups,
@@ -50,6 +51,7 @@ from arabic_ocr_spark.operators.similarity import (
 )
 from arabic_ocr_spark.operators.textstats import (
     BPE_SPLIT_PATTERN,
+    FINGERPRINT_K,
     LANG_MARKERS,
     bpe_token_stats,
     curated_docs,
@@ -487,8 +489,11 @@ def _sql_minhash_cte(k: int = 7, num_hashes: int = 8) -> str:
     # first 15 hex chars as a BIGINT — identical mapping, so even a fold
     # collision perturbs both engines' candidate sets the same way
     def fold(b: int) -> str:
-        concat = f"mh_{2 * b} || '|' || mh_{2 * b + 1}"
+        concat = " || '|' || ".join(f"mh_{b * dedup.BAND_SIZE + j}" for j in range(dedup.BAND_SIZE))
         return f"CAST(concat('0x', substring(md5({concat}), 1, 15)) AS BIGINT)"
+
+    more_bands = "".join(f"\n  UNION ALL SELECT doc_id, {b}, {fold(b)} FROM sig"
+                         for b in range(1, num_hashes // dedup.BAND_SIZE))
 
     return f"""
 WITH sh AS (
@@ -505,10 +510,7 @@ sig AS (
   FROM sh
 ),
 buckets AS (
-  SELECT doc_id, 0 AS band, {fold(0)} AS band_key FROM sig
-  UNION ALL SELECT doc_id, 1, {fold(1)} FROM sig
-  UNION ALL SELECT doc_id, 2, {fold(2)} FROM sig
-  UNION ALL SELECT doc_id, 3, {fold(3)} FROM sig
+  SELECT doc_id, 0 AS band, {fold(0)} AS band_key FROM sig{more_bands}
 ),
 cand AS (
   SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
@@ -518,9 +520,9 @@ cand AS (
 """
 
 
-def _sql_simhash(bits: int = 16) -> str:
+def _sql_simhash() -> str:
     terms = []
-    for b in range(bits):
+    for b in range(dedup.SIMHASH_BITS):
         nib = b // 4 + 1
         shift = 2 ** (b % 4)
         vote = (
@@ -599,24 +601,32 @@ def _sql_sim_pairs(vecs: str, threshold: float) -> str:
 ) WHERE sim_r >= {threshold}"""
 
 
-def _sql_band_sig(vecs: str, dim: int, n_bands: int, rows_per_band: int, seed: int) -> str:
-    """(vec_id, band, key) rows of `vecs` — the twin of
-    similarity._band_buckets.  The Gaussian plane matrix is a PURE FUNCTION
-    of (seed, bits, dim), regenerated here with the identical numpy call and
-    inlined as float64 SQL literals (repr round-trips doubles exactly), so
-    DuckDB evaluates the same sign-of-projection buckets over the same
-    parquet floats.
+def _sql_band_sig(vecs: str, X, n_bands: int, rows_per_band: int, seed: int) -> str:
+    """(vec_id, band, key) rows of `vecs`, whose vectors are the rows of
+    the float64 matrix X — the twin of similarity._band_buckets.  The
+    Gaussian plane matrix is a PURE FUNCTION of (seed, bits, dim),
+    regenerated here with the identical numpy call and inlined as float64
+    SQL literals (repr round-trips doubles exactly), so DuckDB evaluates the
+    same sign-of-projection buckets over the same parquet floats.
 
-    Portability note: Spark computes the projections as one BLAS GEMM,
-    DuckDB as sequential list_dot_product folds — different summation
-    orders can disagree ONLY if a projection lands within float rounding of
-    0 (measured margin on the fixtures: min |projection| 1.3e-6 at sf0.01,
+    Portability: Spark computes the projections as one BLAS GEMM, DuckDB as
+    sequential list_dot_product folds — different summation orders can
+    disagree ONLY if a projection lands within float rounding of 0
+    (measured margin on the fixtures: min |projection| 1.3e-6 at sf0.01,
     ~3e7 x the worst-case accumulated rounding error of a 64-term double
-    dot product), and the check is deterministic for a fixed
-    (seed, corpus), so green once is green always."""
+    dot product).  A projection of X within 1e-9 of zero raises here, so a
+    fixture or seed without that margin fails loudly instead of gating on
+    a sign the two engines may not share."""
     import numpy as np
 
-    planes = np.random.default_rng(seed).standard_normal((n_bands * rows_per_band, dim))
+    planes = np.random.default_rng(seed).standard_normal((n_bands * rows_per_band, X.shape[1]))
+    proj = np.abs(X @ planes.T)
+    row, bit = np.unravel_index(np.argmin(proj), proj.shape)
+    if proj[row, bit] < 1e-9:
+        raise ValueError(
+            f"oracle band signature: seed-{seed} plane {bit} projects row {row} of {vecs} "
+            f"to {proj[row, bit]:.3g}, within 1e-9 of zero; its sign bucket is not "
+            f"portable between Spark and DuckDB, so this fixture cannot gate the operator")
 
     def key_expr(t: int) -> str:
         terms = []
@@ -630,15 +640,14 @@ def _sql_band_sig(vecs: str, dim: int, n_bands: int, rows_per_band: int, seed: i
     )
 
 
-def _sql_lsh_ann_cte(dim: int, n_queries: int = 5, n_planes: int = 4,
-                     n_tables: int = 16, seed: int = 11) -> str:
-    """Shared WITH-prefix for the ANN-LSH oracles: the seeded band
-    signatures, the OR-over-tables candidate pairs (`cand`) and their exact
-    cosines (`sims`)."""
+def _sql_lsh_ann_cte(X, n_queries: int = 5) -> str:
+    """Shared WITH-prefix for the ANN-LSH oracles over the embeddings X:
+    the seeded band signatures, the OR-over-tables candidate pairs (`cand`)
+    and their exact cosines (`sims`)."""
     return f"""
 WITH {_SQL_VECS},
 sig AS (
-  {_sql_band_sig("v", dim, n_tables, n_planes, seed)}
+  {_sql_band_sig("v", X, similarity.LSH_ANN_TABLES, similarity.LSH_ANN_PLANES, similarity.LSH_ANN_SEED)}
 ),
 q AS (SELECT vec_id AS query_id, band, key FROM sig WHERE vec_id < {n_queries}),
 cand AS (
@@ -653,13 +662,13 @@ sims AS (
 )"""
 
 
-def _sql_lsh_ann_recall(dim: int, k: int = 10, n_queries: int = 5) -> str:
+def _sql_lsh_ann_recall(X, k: int = 10, n_queries: int = 5) -> str:
     """DuckDB twin of the ann_lsh_recall query: recomputes BOTH top-k sets
     from scratch — the exact cosine baseline and the banded-LSH top-k (the
     same fragments as the cosine_topk / ann_lsh_topk twins) — and replays
     the left-join hit aggregate, so the recall number itself is
     value-gated."""
-    return _sql_lsh_ann_cte(dim, n_queries=n_queries) + f""",
+    return _sql_lsh_ann_cte(X, n_queries=n_queries) + f""",
 lshk AS (
 {_sql_topk("sims", k, "query_id, neighbor_id")}
 ),
@@ -760,8 +769,8 @@ stats AS (
     CASE WHEN valid THEN CAST((n_ink * 2000000 + h * w) // (2 * h * w) AS DOUBLE) / 1000000 ELSE 0.0 END AS ink_ratio,
     CASE WHEN valid AND n_starts > 0 THEN CAST((nz_rows * 20000 + n_starts) // (2 * n_starts) AS DOUBLE) / 10000 ELSE 0.0 END AS mean_line_height,
     CAST(CASE WHEN valid AND n_starts > 0
-          AND CAST(n_ink AS DOUBLE) / (h * w) >= 0.005
-          AND CAST(n_ink AS DOUBLE) / (h * w) <= 0.5
+          AND CAST(n_ink AS DOUBLE) / (h * w) >= {multimodal.MIN_INK}
+          AND CAST(n_ink AS DOUBLE) / (h * w) <= {multimodal.MAX_INK}
          THEN 1 ELSE 0 END AS BIGINT) AS quality_ok
   FROM agg
 ),
@@ -891,10 +900,10 @@ SELECT doc_id,
 FROM p
 """
 
-    sql["fingerprint"] = """
+    sql["fingerprint"] = f"""
 SELECT doc_id,
-  CASE WHEN length(text) < 8 THEN md5(text)
-       ELSE list_min([md5(substring(text, g, 8)) for g in generate_series(1, length(text) - 7)]) END AS fingerprint
+  CASE WHEN length(text) < {FINGERPRINT_K} THEN md5(text)
+       ELSE list_min([md5(substring(text, g, {FINGERPRINT_K})) for g in generate_series(1, length(text) - {FINGERPRINT_K - 1})]) END AS fingerprint
 FROM documents
 """
 
@@ -908,7 +917,7 @@ sims AS (
 
     sql["embedding_dup_pairs"] = f"""
 WITH {_SQL_VECS}
-{_sql_sim_pairs("v", 0.38)}
+{_sql_sim_pairs("v", similarity.DUP_THRESHOLD)}
 """
 
     # the payload twins read the synth transcripts by path: that table is
@@ -963,41 +972,41 @@ aug AS (
 {_sql_sim_pairs("aug", 0.95)}
 """
 
-    # the seeded band-signature twins need the corpus dim (and the near-dup
-    # cands the aug row count), read once from the same sf dir the driver's
-    # views point at (resolution as meta_sf above); skipped (rows-only
-    # fallback) if the table is absent
+    # the seeded band-signature twins need the vectors themselves (their
+    # dim, the margin check, and for the near-dup cands the aug row count),
+    # read once from the same sf dir the registered views point at
+    # (resolution as meta_sf above); skipped (rows-only fallback) if the
+    # table is absent
     emb_path = os.path.join(meta_sf, "embeddings.parquet")
     if os.path.exists(emb_path):
         import duckdb
+        import numpy as np
 
-        # the aug row count REPLAYS the planted branches' id-range filters
-        # (not a constant +50): on a fixture with sparse or missing low ids
-        # both engines must size the banding from the same n
-        dim, base_n, n_planted, n_decoys = duckdb.sql(f"""
-            SELECT any_value(len(embedding)), count(*),
-                   count(*) FILTER (vec_id < {_N_PLANTED}),
-                   count(*) FILTER (vec_id >= {_N_PLANTED}
-                                    AND vec_id < {_N_PLANTED + _N_DECOYS})
-            FROM read_parquet('{emb_path}')
-        """).fetchone()
-        dim = int(dim)
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{emb_path}')")
+
+        def vectors(query: str):
+            return np.asarray([r[0] for r in con.sql(query).fetchall()])
+
+        base_X = vectors(f"WITH {_SQL_VECS}\nSELECT emb FROM v")
+        aug_X = vectors(f"{aug_cte}\nSELECT emb FROM aug")
         # the ann_lsh candidate stage, and the FULL LSH top-k: deterministic
         # end-to-end (seeded candidates + exact cosine + deterministic
         # tie-break), so it is value-gated — only IVF (trained quantizer)
         # and the recall measurement built on it remain rows-only
-        lsh = _sql_lsh_ann_cte(dim)
+        lsh = _sql_lsh_ann_cte(base_X)
         sql["ann_lsh_candidates"] = lsh + "\nSELECT query_id, neighbor_id FROM cand\n"
         sql["ann_lsh_topk"] = lsh + f"\n{_sql_topk('sims', 10, _SQL_TOPK_COLS)}\n"
-        sql["ann_lsh_recall"] = _sql_lsh_ann_recall(dim)
+        sql["ann_lsh_recall"] = _sql_lsh_ann_recall(base_X)
         # the near-dup candidate stage, oracle-gated like ann_lsh_candidates:
         # the collision-model (b, r) for the SAME corpus count the Spark
-        # query derives, the seed-7 planes, and the banded sign-bucket
-        # self-join over the oracle's own aug reconstruction
-        nb, rpb = neardup_band_params(int(base_n) + int(n_planted) + int(n_decoys))
+        # query derives (the aug reconstruction's rows, so a fixture with
+        # sparse or missing low ids sizes both engines' banding alike), the
+        # near-dup planes, and the banded sign-bucket self-join over it
+        nb, rpb = neardup_band_params(len(aug_X))
         sql["embedding_neardup_cands"] = aug_cte + f""",
 sig AS (
-  {_sql_band_sig("aug", dim, nb, rpb, 7)}
+  {_sql_band_sig("aug", aug_X, nb, rpb, similarity.NEARDUP_SEED)}
 )
 SELECT DISTINCT l.vec_id AS vec_a, r.vec_id AS vec_b
 FROM sig l JOIN sig r ON l.band = r.band AND l.key = r.key AND l.vec_id < r.vec_id
@@ -1029,23 +1038,23 @@ SELECT event_type, count(*) AS n_events, round(sum(value), 4) AS sum_value,
 FROM events GROUP BY date_trunc('hour', ts), event_type
 """
 
-    sql["asof_join"] = """
+    sql["asof_join"] = f"""
 SELECT p.event_id AS purchase_id, p.user_id,
   c.event_id AS click_id, epoch_us(c.ts) AS click_us
-FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+FROM (SELECT * FROM events WHERE event_type = '{relational.ASOF_LEFT_TYPE}') p
 ASOF LEFT JOIN (
   SELECT user_id, ts, max(event_id) AS event_id
-  FROM events WHERE event_type = 'click' GROUP BY user_id, ts
+  FROM events WHERE event_type = '{relational.ASOF_RIGHT_TYPE}' GROUP BY user_id, ts
 ) c
   ON p.user_id = c.user_id AND p.ts >= c.ts
 """
 
-    sql["range_join"] = """
+    sql["range_join"] = f"""
 SELECT a.event_id AS event_a, b.event_id AS event_b, a.user_id
 FROM events a JOIN events b
   ON a.user_id = b.user_id
  AND epoch_us(b.ts) > epoch_us(a.ts)
- AND epoch_us(b.ts) <= epoch_us(a.ts) + 600000000
+ AND epoch_us(b.ts) <= epoch_us(a.ts) + {relational.RANGE_SECONDS * 1_000_000}
 """
 
     # curation keep-list: extend the dedup_groups recursive chain with the

@@ -118,17 +118,17 @@ def _iceberg_available(spark) -> bool:
         return False
 
 
-def derive_salt_buckets(df, num_chunks: int, sample_fraction: float = 0.02,
-                        safety: float = 2.0, max_buckets: int = 4096) -> int:
+def derive_salt_buckets(df, num_chunks: int, sample_fraction: float = 0.02) -> int:
     """Cheap skew sketch -> salt bucket count S.
 
     Samples the conv_id column (column-pruned scan of one string column),
     estimates the hottest conversation's share of total rows, and returns
     the number of chunks that conversation must spread over so no chunk
-    exceeds ~an average chunk's row count, times a safety factor.  At
+    exceeds ~an average chunk's row count, times a safety factor of 2.  At
     10^12 rows this is a planning-time sample aggregation — the per-conv
     counts partial-aggregate map-side and only the max survives.  A uniform
-    table returns 1 (salting off); the cap bounds sort-key cardinality."""
+    table returns 1 (salting off); the cap (4096) bounds sort-key
+    cardinality."""
     from pyspark.sql import functions as F
 
     s = df.select("conv_id").sample(fraction=sample_fraction, seed=7)
@@ -140,7 +140,7 @@ def derive_salt_buckets(df, num_chunks: int, sample_fraction: float = 0.02,
     if not row["total"]:
         return 1
     spread = row["hot"] * num_chunks / row["total"]  # chunks the hot conv needs
-    return int(min(max_buckets, max(1, math.ceil(spread * safety))))
+    return int(min(4096, max(1, math.ceil(spread * 2.0))))
 
 
 def _extract(df, model_bc, templates_bc):
@@ -482,6 +482,20 @@ def commit_unit(spark, result, output_dir: str, unit: str, unit_id: int,
     lineage_rows(written, unit_id, golden).coalesce(1).write.mode("overwrite").parquet(lin_dir)
 
 
+def _read_parquet(spark, path: str):
+    """spark.read.parquet(path), inferring an INT64 TIMESTAMP(NANOS) column
+    (what pandas' to_parquet writes for `ts`) as its raw long instead of
+    failing: extraction never reads `ts`, so only schema inference meets it.
+    The session's setting is restored before returning."""
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        return spark.read.parquet(path)
+    finally:
+        spark.conf.set(key, prev)
+
+
 def run_extraction(
     spark,
     input_path: str | None,
@@ -506,7 +520,7 @@ def run_extraction(
         # column in the data was computed with it) and read the wave-
         # partitioned copy so per-wave scans prune to 1/num_waves
         _pin_partitioning(cfg, input_path, "staged input")
-    df = spark.table(input_table) if input_table else spark.read.parquet(input_path)
+    df = spark.table(input_table) if input_table else _read_parquet(spark, input_path)
 
     # pin the partitioning parameters for the OUTPUT's lifetime: a resumed
     # run must salt exactly like the committed waves (a derived S sketches

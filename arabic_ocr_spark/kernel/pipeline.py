@@ -62,7 +62,6 @@ def extract_page(
     image: np.ndarray | None,
     model: CharModel,
     templates: list[TemplateSpec] | None = None,
-    skip_deskew: bool = False,
 ) -> ExtractionResult:
     """Full page extraction.  A page-level failure (degenerate projections,
     blank payload, reference-crash-equivalent states) yields ok=False with
@@ -71,7 +70,7 @@ def extract_page(
     if image is None:
         return ExtractionResult(text="", ok=False, err="blank_payload")
     res = ExtractionResult()
-    words = iter_words(image, templates, skip_deskew)
+    words = iter_words(image, templates)
     try:
         while True:
             try:

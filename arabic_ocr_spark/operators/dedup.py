@@ -26,9 +26,14 @@ __all__ = ["exact_dup_groups", "minhash_signatures", "lsh_candidate_pairs",
            "min_label_components", "dedup_groups", "auto_bucket_cap",
            "resolve_bucket_cap", "bucket_audit", "banded_pairs", "lsh_bucket_audit"]
 
+# minhashes per LSH band of the text ladder (read by its DuckDB twin)
+BAND_SIZE = 2
+# bits of the batch simhash operator (read by its DuckDB twin)
+SIMHASH_BITS = 16
 
-def auto_bucket_cap(n_rows: int, c: float = 8.0) -> int:
-    """Default hot-bucket cap: ceil(c * sqrt(n)), floor 64.
+
+def auto_bucket_cap(n_rows: int) -> int:
+    """Default hot-bucket cap: ceil(c * sqrt(n)) with c = 8, floor 64.
 
     Why sqrt(n): a band bucket of size s contributes s*(s-1)/2 candidate
     pairs, so capping s at c*sqrt(n) bounds ANY single bucket's contribution
@@ -39,7 +44,7 @@ def auto_bucket_cap(n_rows: int, c: float = 8.0) -> int:
     binds (sf0.01 max text bucket 12 vs cap 179; sf0.1 max 90 vs cap 566)
     and the banded semantics stay exactly oracle-checked; only a
     mass-templated degenerate cluster crosses it."""
-    return max(64, math.ceil(c * math.sqrt(max(n_rows, 1))))
+    return max(64, math.ceil(8.0 * math.sqrt(max(n_rows, 1))))
 
 
 def resolve_bucket_cap(max_bucket_size: int | str | None,
@@ -179,12 +184,12 @@ def minhash_signatures(docs: DataFrame, k: int = 7, num_hashes: int = 8) -> Data
     return docs.select("doc_id", _shingles(k).alias("shingles")).select("doc_id", *aggs)
 
 
-def _text_band_buckets(docs: DataFrame, k: int, num_hashes: int, band_size: int) -> DataFrame:
+def _text_band_buckets(docs: DataFrame, k: int, num_hashes: int) -> DataFrame:
     """(doc_id, band, band_key): the minhash band-bucket table behind
     lsh_candidate_pairs and lsh_bucket_audit.
 
     The band key is FOLDED TO AN INT64 before anything shuffles: the
-    concatenated per-band minhash strings (band_size x 32 hex chars) are
+    concatenated per-band minhash strings (BAND_SIZE x 32 hex chars) are
     md5'd and the first 15 hex chars cast to a 60-bit long — ~8x fewer
     band-join shuffle bytes than shipping the concatenated strings.  The
     fold is the repo's portable-collision pattern (same as the jaccard
@@ -198,7 +203,7 @@ def _text_band_buckets(docs: DataFrame, k: int, num_hashes: int, band_size: int)
     # signature chain would re-evaluate the whole shingle pipeline per
     # band reference on both sides of the self-join (measured 2x the query)
     sigs = minhash_signatures(docs, k, num_hashes).localCheckpoint()
-    n_bands = num_hashes // band_size
+    n_bands = num_hashes // BAND_SIZE
     # one posexplode instead of a union of per-band selects: the signature
     # chain (shingling + H md5-min scans) is computed ONCE per doc, not once
     # per band branch
@@ -206,7 +211,7 @@ def _text_band_buckets(docs: DataFrame, k: int, num_hashes: int, band_size: int)
         *[
             F.conv(
                 F.substring(
-                    F.md5(F.concat_ws("|", *[F.col(f"mh_{b * band_size + j}") for j in range(band_size)])),
+                    F.md5(F.concat_ws("|", *[F.col(f"mh_{b * BAND_SIZE + j}") for j in range(BAND_SIZE)])),
                     1, 15,
                 ),
                 16, 10,
@@ -217,11 +222,11 @@ def _text_band_buckets(docs: DataFrame, k: int, num_hashes: int, band_size: int)
     return sigs.select("doc_id", F.posexplode(band_keys).alias("band", "band_key"))
 
 
-def lsh_candidate_pairs(docs: DataFrame, k: int = 7, num_hashes: int = 8, band_size: int = 2,
+def lsh_candidate_pairs(docs: DataFrame, k: int = 7, num_hashes: int = 8,
                         max_bucket_size: int | str | None = "auto",
                         n_rows: int | None = None) -> DataFrame:
     """Near-duplicate candidate pairs (doc_a < doc_b) sharing at least one
-    LSH band.  Bands of `band_size` consecutive minhashes; the self-join is
+    LSH band.  Bands of BAND_SIZE consecutive minhashes; the self-join is
     on the int64-folded band key (see _text_band_buckets).
 
     max_bucket_size — the hot-bucket cap (see banded_pairs for the guard
@@ -230,11 +235,11 @@ def lsh_candidate_pairs(docs: DataFrame, k: int = 7, num_hashes: int = 8, band_s
     count — to skip the plan-time count), which never binds on natural
     near-dup buckets at the gated scales, so the default path stays exactly
     oracle-checked; None disables the guard entirely."""
-    return banded_pairs(_text_band_buckets(docs, k, num_hashes, band_size), "doc_id",
+    return banded_pairs(_text_band_buckets(docs, k, num_hashes), "doc_id",
                         resolve_bucket_cap(max_bucket_size, docs, n_rows))
 
 
-def lsh_bucket_audit(docs: DataFrame, k: int = 7, num_hashes: int = 8, band_size: int = 2,
+def lsh_bucket_audit(docs: DataFrame, k: int = 7, num_hashes: int = 8,
                      max_bucket_size: int | str | None = "auto",
                      n_rows: int | None = None) -> DataFrame:
     """The hot-bucket audit for lsh_candidate_pairs at the same parameters:
@@ -242,23 +247,23 @@ def lsh_bucket_audit(docs: DataFrame, k: int = 7, num_hashes: int = 8, band_size
     dropped_pairs_ubound).  Run it before enabling a cap on a new corpus —
     and alongside the guarded job in production — so a binding cap is a
     measured, inspected event rather than silent pair loss."""
-    return bucket_audit(_text_band_buckets(docs, k, num_hashes, band_size),
+    return bucket_audit(_text_band_buckets(docs, k, num_hashes),
                         resolve_bucket_cap(max_bucket_size, docs, n_rows), "doc_id")
 
 
 def jaccard_verified_pairs(docs: DataFrame, k: int = 7, num_hashes: int = 8,
-                           band_size: int = 2, threshold: float = 0.6,
-                           broadcast_shingles: bool = True,
+                           threshold: float = 0.6,
                            candidates: DataFrame | None = None,
                            n_rows: int | None = None) -> DataFrame:
     """Exact shingle-set Jaccard on the LSH candidates; keeps pairs with
     J >= threshold.  (doc_a, doc_b, jaccard rounded to 4).
 
-    broadcast_shingles: the shingle table has |docs| rows vs the candidate
-    join's |pairs| fan-out, so broadcasting it avoids shuffling string
-    arrays twice.  At corpus sizes where shingles exceed executor memory,
-    pass False to fall back to shuffle joins (pairs are then the small
-    side: candidates should be semi-join-reduced first at 100 TB).
+    Join strategy is the planner's: the per-doc size table and the
+    semi-join-reduced shingle arrays are the small sides of the candidate
+    joins, so under spark.sql.autoBroadcastJoinThreshold they broadcast
+    (no string arrays shuffle), and on a corpus beyond it the same plan
+    falls back to sort-merge joins with the same pairs
+    (tests/test_dedup_cc.py pins both).
 
     candidates: optionally a precomputed/persisted lsh_candidate_pairs
     result (doc_a, doc_b) — the dedup ladder is a chain (candidates ->
@@ -272,7 +277,7 @@ def jaccard_verified_pairs(docs: DataFrame, k: int = 7, num_hashes: int = 8,
     stably (a parquet/Iceberg snapshot, the normal case).  Over a
     non-deterministic upstream, checkpoint `docs` itself first."""
     cands = candidates if candidates is not None else lsh_candidate_pairs(
-        docs, k, num_hashes, band_size, n_rows=n_rows
+        docs, k, num_hashes, n_rows=n_rows
     )
     # shingles mapped to 60-bit ints (first 15 hex chars of md5): integer
     # set intersection is ~30% faster than string intersection, and because
@@ -289,7 +294,6 @@ def jaccard_verified_pairs(docs: DataFrame, k: int = 7, num_hashes: int = 8,
     # re-derived only for the doc_ids that survive the size prefilter,
     # via a semi-join-reduced second scan
     sizes = docs.select("doc_id", F.size(ints).alias("n_sh")).localCheckpoint()
-    sizes_j = F.broadcast(sizes) if broadcast_shingles else sizes
     # size-bound prefilter (AllPairs): J(A,B) <= min(|A|,|B|)/max(|A|,|B|),
     # so pairs whose set sizes are too disproportionate cannot reach the
     # threshold.  Sizes attach first so the (much wider) shingle arrays are
@@ -298,8 +302,8 @@ def jaccard_verified_pairs(docs: DataFrame, k: int = 7, num_hashes: int = 8,
     # threshold still rounds up to it and must not be pruned (the oracle
     # has no prefilter).
     filtered = (
-        cands.join(sizes_j.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")), "doc_a")
-        .join(sizes_j.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")), "doc_b")
+        cands.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")), "doc_a")
+        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")), "doc_b")
         .filter(F.least("na", "nb") >= (threshold - 6e-5) * F.greatest("na", "nb"))
     ).localCheckpoint()  # tiny surviving pair list; feeds the id-union + both array joins
     cand_ids = (
@@ -308,8 +312,6 @@ def jaccard_verified_pairs(docs: DataFrame, k: int = 7, num_hashes: int = 8,
         .distinct()
     )
     arrays = docs.join(cand_ids, "doc_id", "left_semi").select("doc_id", ints.alias("shingles"))
-    if broadcast_shingles:
-        arrays = F.broadcast(arrays)
     withsets = (
         filtered.join(arrays.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")), "doc_a")
         .join(arrays.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")), "doc_b")
@@ -387,21 +389,18 @@ def min_label_components(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     return labels
 
 
-def dedup_groups(docs: DataFrame, k: int = 7, num_hashes: int = 8,
-                 band_size: int = 2, threshold: float = 0.6,
-                 max_iters: int = 20, pairs: DataFrame | None = None,
+def dedup_groups(docs: DataFrame, pairs: DataFrame | None = None,
                  n_rows: int | None = None) -> DataFrame:
     """Near-duplicate GROUPS: connected components over the Jaccard-verified
     pair graph; every document gets its component's minimum doc_id as
     group_rep (singletons map to themselves).  See min_label_components for
     the distributed CC scheme; the full corpus joins in exactly once at the
     end.  `pairs` optionally supplies a precomputed jaccard_verified_pairs
-    result (see its docstring on chain materialization)."""
+    result (see its docstring on chain materialization); without it the
+    pairs are jaccard_verified_pairs at its defaults."""
     if pairs is None:
-        pairs = jaccard_verified_pairs(docs, k, num_hashes, band_size, threshold,
-                                       n_rows=n_rows)
-    pairs = pairs.select("doc_a", "doc_b")
-    labels = min_label_components(pairs, max_iters)
+        pairs = jaccard_verified_pairs(docs, n_rows=n_rows)
+    labels = min_label_components(pairs.select("doc_a", "doc_b"))
     return (
         docs.select("doc_id")
         .join(labels.withColumnRenamed("doc_a", "doc_id"), "doc_id", "left")
@@ -451,7 +450,7 @@ def _simhash_total(toks_col, bits: int):
     )
 
 
-def simhash_expr(text_col, bits: int = 16):
+def simhash_expr(text_col, bits: int):
     """SimHash of a text column as a single JVM expression (long) — usable
     anywhere a Column is (including unbounded streams: it contains no
     aggregation or Python).  Empty/whitespace-only text hashes to 0."""
@@ -459,7 +458,7 @@ def simhash_expr(text_col, bits: int = 16):
     return F.when(F.size(toks) > 0, _simhash_total(toks, bits)).otherwise(F.lit(0)).cast("long")
 
 
-def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
-    """Per-document SimHash over whitespace tokens (see _simhash_total).
-    Returns (doc_id, simhash)."""
-    return docs.select("doc_id", simhash_expr(F.col("text"), bits).alias("simhash"))
+def simhash(docs: DataFrame) -> DataFrame:
+    """Per-document SIMHASH_BITS-bit SimHash over whitespace tokens (see
+    _simhash_total).  Returns (doc_id, simhash)."""
+    return docs.select("doc_id", simhash_expr(F.col("text"), SIMHASH_BITS).alias("simhash"))

@@ -24,6 +24,9 @@ __all__ = ["payload_meta", "payload_features", "payload_ink_stats", "payload_thu
            "PAYLOAD_FEATURE_SCHEMA", "PAYLOAD_PROFILE_SCHEMA"]
 
 _HEADER_LEN = 8  # b"GRY1" + u16le height + u16le width
+# the quality gate's plausible ink-ratio range (read by the DuckDB twin)
+MIN_INK = 0.005
+MAX_INK = 0.5
 
 
 def _u16le(bin_col, pos: int):
@@ -78,9 +81,9 @@ PAYLOAD_PROFILE_SCHEMA = (
 def _page_ink_counts(img):
     """(n_ink, n_pixels, n_line_starts, nz_rows) as exact INTEGERS for a
     decoded page — the ONE definition of the ink/line statistics;
-    payload_features, with_quality_flag and payload_ink_stats all derive
-    from it so the extraction-path gate can never desync from the reported
-    features."""
+    payload_profile and with_quality_flag both derive from it (through
+    _quality_ok for the gate) so the extraction-path gate can never desync
+    from the reported features."""
     import numpy as np
 
     from ..kernel.imgops import binarize_inv, horizontal_projection
@@ -91,12 +94,6 @@ def _page_ink_counts(img):
     # nonzero-run starts = rising edges of the projection mask
     starts = np.flatnonzero(nz & ~np.concatenate(([False], nz[:-1])))
     return int(np.count_nonzero(binary)), binary.size, len(starts), int(np.count_nonzero(nz))
-
-
-def _page_ink_stats(img):
-    """(ink_ratio, n_line_starts, nz_rows) — ratio view of _page_ink_counts."""
-    n_ink, n_pixels, n_starts, nz_rows = _page_ink_counts(img)
-    return n_ink / n_pixels, n_starts, nz_rows
 
 
 def round_ratio(num: int, den: int, decimals: int) -> float:
@@ -116,12 +113,13 @@ def round_ratio(num: int, den: int, decimals: int) -> float:
     return (num * scale * 2 + den) // (den * 2) / scale
 
 
-def _quality_ok(ink: float, n_starts: int, min_ink: float, max_ink: float) -> bool:
-    return bool(n_starts > 0 and min_ink <= ink <= max_ink)
+def _quality_ok(n_ink: int, n_pixels: int, n_starts: int) -> bool:
+    """The quality gate: >= 1 detectable text line and a plausible
+    (unrounded) ink ratio."""
+    return bool(n_starts > 0 and MIN_INK <= n_ink / n_pixels <= MAX_INK)
 
 
-def payload_profile(df: DataFrame, min_ink: float = 0.005, max_ink: float = 0.5,
-                    max_side: int = 32, include_thumb: bool = True) -> DataFrame:
+def payload_profile(df: DataFrame, max_side: int = 32, include_thumb: bool = True) -> DataFrame:
     """The FUSED payload sweep: ONE decode pass per payload emitting every
     per-image product — envelope dims/validity, exact integer ink statistics
     (_page_ink_counts), the rounded ratio/quality view, and (optionally) the
@@ -169,7 +167,7 @@ def payload_profile(df: DataFrame, min_ink: float = 0.005, max_ink: float = 0.5,
                 out["ink_ratio"][i] = round_ratio(n_ink, n_pixels, 6)
                 if n_starts:
                     out["mean_line_height"][i] = round_ratio(nz_rows, n_starts, 4)
-                out["quality_ok"][i] = _quality_ok(n_ink / n_pixels, n_starts, min_ink, max_ink)
+                out["quality_ok"][i] = _quality_ok(n_ink, n_pixels, n_starts)
                 if include_thumb:
                     stride = max(1, -(-max(img.shape) // max_side))
                     thumb = np.ascontiguousarray(img[::stride, ::stride])
@@ -182,7 +180,7 @@ def payload_profile(df: DataFrame, min_ink: float = 0.005, max_ink: float = 0.5,
     return cols.mapInPandas(profile, PAYLOAD_PROFILE_SCHEMA)
 
 
-def payload_features(df: DataFrame, min_ink: float = 0.005, max_ink: float = 0.5) -> DataFrame:
+def payload_features(df: DataFrame) -> DataFrame:
     """Per-image ink statistics as a quality filter for image-bearing turns.
 
     ink_ratio: fraction of ink pixels after the kernel's binarize+invert;
@@ -197,7 +195,7 @@ def payload_features(df: DataFrame, min_ink: float = 0.005, max_ink: float = 0.5
     consumer can read the same columns from one decode pass."""
     from pyspark.sql import functions as F
 
-    return payload_profile(df, min_ink, max_ink, include_thumb=False).select(
+    return payload_profile(df, include_thumb=False).select(
         "conv_id", "turn_idx", "height", "width", "valid", "ink_ratio",
         F.col("n_lines").cast("int").alias("n_lines"),
         "mean_line_height", "quality_ok",
@@ -222,7 +220,7 @@ def payload_ink_stats(df: DataFrame) -> DataFrame:
     )
 
 
-def with_quality_flag(df: DataFrame, min_ink: float = 0.005, max_ink: float = 0.5) -> DataFrame:
+def with_quality_flag(df: DataFrame) -> DataFrame:
     """Pass-through form of the payload_features quality gate: every input
     column is preserved and a `quality_ok` boolean is appended (same
     predicate as payload_features: decodable payload, >=1 detectable text
@@ -250,8 +248,8 @@ def with_quality_flag(df: DataFrame, min_ink: float = 0.005, max_ink: float = 0.
                 img = decode_payload(t)
                 if img is None:
                     continue
-                ink, n_starts, _ = _page_ink_stats(img)
-                ok[i] = _quality_ok(ink, n_starts, min_ink, max_ink)
+                n_ink, n_pixels, n_starts, _ = _page_ink_counts(img)
+                ok[i] = _quality_ok(n_ink, n_pixels, n_starts)
             pdf = pdf.copy()
             pdf["quality_ok"] = ok
             yield pdf

@@ -17,6 +17,12 @@ from pyspark.sql import DataFrame, functions as F
 __all__ = ["pricing_summary", "orders_by_nation", "events_hourly", "asof_last_event",
            "events_within_interval"]
 
+# event types the as-of join matches, and the range join's interval width
+# (read by the DuckDB twins)
+ASOF_LEFT_TYPE = "purchase"
+ASOF_RIGHT_TYPE = "click"
+RANGE_SECONDS = 600
+
 
 def pricing_summary(lineitem: DataFrame) -> DataFrame:
     """TPC-H Q1-flavoured rollup: returnflag/linestatus aggregate with
@@ -66,11 +72,10 @@ def events_hourly(events: DataFrame) -> DataFrame:
     )
 
 
-def asof_last_event(events: DataFrame, left_type: str = "purchase",
-                    right_type: str = "click") -> DataFrame:
+def asof_last_event(events: DataFrame) -> DataFrame:
     """Keyed AS-OF join, an operator Spark lacks natively: for every
-    left_type event, the most recent right_type event by the SAME user at
-    or before its timestamp (inclusive), NULL when none exists.
+    ASOF_LEFT_TYPE event, the most recent ASOF_RIGHT_TYPE event by the SAME
+    user at or before its timestamp (inclusive), NULL when none exists.
 
     Implemented as the scalable union-merge: tag both sides, repartition
     once on the key, sort (ts, tag) within the key so an equal-timestamp
@@ -88,14 +93,14 @@ def asof_last_event(events: DataFrame, left_type: str = "purchase",
     from pyspark.sql import Window
 
     carry_t = "struct<match_id:bigint,match_us:bigint>"
-    rights = events.filter(F.col("event_type") == right_type).select(
+    rights = events.filter(F.col("event_type") == ASOF_RIGHT_TYPE).select(
         "user_id", "ts",
         F.lit(0).alias("tag"),
         F.struct(F.col("event_id").alias("match_id"),
                  F.unix_micros(F.col("ts").cast("timestamp")).alias("match_us")).alias("carry"),
         F.lit(None).cast("long").alias("left_id"),
     )
-    lefts = events.filter(F.col("event_type") == left_type).select(
+    lefts = events.filter(F.col("event_type") == ASOF_LEFT_TYPE).select(
         "user_id", "ts",
         F.lit(1).alias("tag"),
         F.lit(None).cast(carry_t).alias("carry"),
@@ -120,9 +125,9 @@ def asof_last_event(events: DataFrame, left_type: str = "purchase",
     )
 
 
-def events_within_interval(events: DataFrame, seconds: int = 600) -> DataFrame:
+def events_within_interval(events: DataFrame) -> DataFrame:
     """Range join, banded: ordered pairs of same-user events with
-    0 < ts_b - ts_a <= seconds.
+    0 < ts_b - ts_a <= RANGE_SECONDS.
 
     A naive inequality join is a per-user cross product; instead timestamps
     bucket by the interval width, the left side emits its bucket and the
@@ -133,7 +138,7 @@ def events_within_interval(events: DataFrame, seconds: int = 600) -> DataFrame:
     2 x width) window instead of events-per-user squared."""
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     e = events.select("event_id", "user_id", us.alias("us"))
-    width = int(seconds) * 1_000_000
+    width = RANGE_SECONDS * 1_000_000
     bucket = F.floor(F.col("us") / width).cast("long")
     left = e.select(
         F.col("event_id").alias("event_a"), "user_id", F.col("us").alias("us_a"),

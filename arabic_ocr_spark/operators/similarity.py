@@ -27,6 +27,14 @@ __all__ = ["cosine_topk", "lsh_ann_topk", "lsh_ann_candidates", "ivf_ann_topk", 
            "embedding_dup_pairs", "embedding_neardup_candidates", "embedding_neardup_hi",
            "neardup_band_params", "neardup_bucket_audit"]
 
+# the constants below are read by the operators' DuckDB twins too
+# (__spark_entry__.oracle_sql), so each is spelled once
+DUP_THRESHOLD = 0.38   # embedding_dup_pairs cosine floor (fixture-calibrated)
+NEARDUP_SEED = 7       # plane seed of the near-dup banding
+LSH_ANN_SEED = 11      # plane seed of the ANN signature tables
+LSH_ANN_PLANES = 4     # sign bits per ANN table
+LSH_ANN_TABLES = 16    # ANN tables OR-ed into the candidate set
+
 
 def _cosine(a, b):
     dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
@@ -116,10 +124,9 @@ def cosine_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10) -> DataF
     return _top_k(sims, k)
 
 
-def embedding_dup_pairs(embeddings: DataFrame, threshold: float = 0.38,
-                        block_rows: int = 1024, n_rows: int | None = None) -> DataFrame:
+def embedding_dup_pairs(embeddings: DataFrame, block_rows: int = 1024) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (vec_a < vec_b, sim_r) with
-    cosine >= threshold (default calibrated to the synthetic fixture
+    cosine >= DUP_THRESHOLD (calibrated to the synthetic fixture
     embeddings, whose max pairwise cosine is ~0.48; production near-dup
     thresholds sit at 0.95+).
 
@@ -129,7 +136,7 @@ def embedding_dup_pairs(embeddings: DataFrame, threshold: float = 0.38,
        into n/block_rows blocks; each of the B*(B+1)/2 block pairs is one
        task that computes its cosine sub-matrix as a single normalized
        float64 GEMM (BLAS, ~1000x the per-pair HOF expression throughput)
-       and emits index pairs above `threshold - 6e-5` (margin covers both
+       and emits index pairs above `DUP_THRESHOLD - 6e-5` (margin covers both
        the round-to-4-decimals output boundary and BLAS-vs-sequential
        float summation divergence).  Shuffle cost: each block replicated B
        times, i.e. data inflates by sqrt(2 * #tasks) — the standard exact
@@ -149,11 +156,8 @@ def embedding_dup_pairs(embeddings: DataFrame, threshold: float = 0.38,
     import pandas as pd
 
     vecs = _vecs(embeddings)
-    # n only sizes the block grid — pass n_rows (e.g. a catalog/metadata row
-    # count) to avoid the planning-time full pass; any approximate count of
-    # the right magnitude yields the same task layout
-    n = n_rows if n_rows is not None else vecs.count()
-    num_blocks = max(1, -(-n // block_rows))
+    # n only sizes the block grid
+    num_blocks = max(1, -(-vecs.count() // block_rows))
     blocked = vecs.withColumn(
         "block", F.pmod(F.xxhash64("vec_id"), F.lit(num_blocks)).cast("int")
     )
@@ -168,7 +172,7 @@ def embedding_dup_pairs(embeddings: DataFrame, threshold: float = 0.38,
         )
         .repartition(num_blocks * (num_blocks + 1) // 2, "block_a", "block_b")
     )
-    cand_floor = threshold - 6e-5
+    cand_floor = DUP_THRESHOLD - 6e-5
 
     def gemm_candidates(batches):
         import numpy as np
@@ -197,7 +201,7 @@ def embedding_dup_pairs(embeddings: DataFrame, threshold: float = 0.38,
             yield pd.DataFrame({"vec_a": a, "vec_b": b})
 
     cand = tasks.mapInPandas(gemm_candidates, "vec_a bigint, vec_b bigint")
-    return _verify_pairs(vecs, cand, threshold)
+    return _verify_pairs(vecs, cand, DUP_THRESHOLD)
 
 
 def _band_buckets(vecs: DataFrame, n_bands: int, rows_per_band: int, seed: int) -> DataFrame:
@@ -242,7 +246,7 @@ def _band_buckets(vecs: DataFrame, n_bands: int, rows_per_band: int, seed: int) 
 
 
 def embedding_neardup_candidates(embeddings: DataFrame, n_bands: int = 16,
-                                 rows_per_band: int = 12, seed: int = 7,
+                                 rows_per_band: int = 12,
                                  max_bucket_size: int | str | None = "auto",
                                  n_rows: int | None = None) -> DataFrame:
     """Candidate near-duplicate pairs (vec_a < vec_b) sharing at least one
@@ -255,8 +259,8 @@ def embedding_neardup_candidates(embeddings: DataFrame, n_bands: int = 16,
     below 1e-4.  A background pair at cosine ~0 (p = 0.5) collides
     anywhere w.p. 16 * 2^-12 ~ 0.4% — candidate volume stays O(n) on
     near-orthogonal corpora instead of the exact path's n^2/2 GEMM entries.
-    Both rates are DETERMINISTIC for a fixed (seed, corpus): the planes are
-    a pure function of the seed, so recall is a testable constant, not a
+    Both rates are DETERMINISTIC for a fixed corpus: the planes are a pure
+    function of NEARDUP_SEED, so recall is a testable constant, not a
     random variable.
 
     max_bucket_size — the hot-bucket cap (see dedup.banded_pairs for the
@@ -272,12 +276,12 @@ def embedding_neardup_candidates(embeddings: DataFrame, n_bands: int = 16,
     final distinct — identical to the MinHash-LSH text ladder, which is the
     point: at 0.95+ this replaces a quadratic GEMM with a bucket join."""
     vecs = _vecs(embeddings)
-    return banded_pairs(_band_buckets(vecs, n_bands, rows_per_band, seed), "vec_id",
+    return banded_pairs(_band_buckets(vecs, n_bands, rows_per_band, NEARDUP_SEED), "vec_id",
                         resolve_bucket_cap(max_bucket_size, vecs, n_rows))
 
 
 def neardup_bucket_audit(embeddings: DataFrame, n_bands: int = 16,
-                         rows_per_band: int = 12, seed: int = 7,
+                         rows_per_band: int = 12,
                          max_bucket_size: int | str | None = "auto",
                          n_rows: int | None = None) -> DataFrame:
     """The hot-bucket audit for embedding_neardup_candidates at the same
@@ -286,13 +290,12 @@ def neardup_bucket_audit(embeddings: DataFrame, n_bands: int = 16,
     and alongside the guarded job in production — so a binding cap is a
     measured, inspected event rather than silent pair loss."""
     vecs = _vecs(embeddings)
-    return bucket_audit(_band_buckets(vecs, n_bands, rows_per_band, seed),
+    return bucket_audit(_band_buckets(vecs, n_bands, rows_per_band, NEARDUP_SEED),
                         resolve_bucket_cap(max_bucket_size, vecs, n_rows), "vec_id")
 
 
 def neardup_band_params(n_rows: int, threshold: float = 0.95,
-                        recall_target: float = 0.999,
-                        candidates_per_row: float = 8.0) -> tuple[int, int]:
+                        recall_target: float = 0.999) -> tuple[int, int]:
     """Size (n_bands, rows_per_band) for embedding_neardup_hi from the
     Charikar collision model, so candidate volume stays O(n) as the corpus
     grows (the fixed default (16, 12) keeps a constant ~0.5% FRACTION of
@@ -303,14 +306,13 @@ def neardup_band_params(n_rows: int, threshold: float = 0.95,
     - true pairs at `threshold`: miss probability (1 - p^r)^b must be
       <= 1 - recall_target  ->  b = ceil(ln(1-recall) / ln(1-p^r));
     - background pairs (cosine ~0, p = 1/2): expected candidates
-      ~ n^2/2 * b * 2^-r, bounded to candidates_per_row * n.
+      ~ n^2/2 * b * 2^-r, bounded to 8 candidates per row.
     Scans r upward and returns the first (b, r) meeting both — more bits
     per band cut the background exponentially while the recall constraint
     grows b only polynomially.  At n = 10^9 / threshold 0.95 / recall
     0.999 this lands near (254, 34): ~8.6k signature bits ~ 1 KB/vector,
     the honest price of three-nines recall at p ~ 0.9; recall_target 0.99
-    roughly thirds the bands.  All outputs stay deterministic for a fixed
-    seed."""
+    roughly thirds the bands."""
     import math
 
     p = 1 - math.acos(min(max(threshold, -1.0), 1.0)) / math.pi
@@ -322,14 +324,14 @@ def neardup_band_params(n_rows: int, threshold: float = 0.95,
         else:
             b = max(1, math.ceil(math.log(max(1e-15, 1.0 - recall_target)) / math.log(1.0 - pr)))
         expected_bg = (n_rows * max(n_rows - 1, 1) / 2.0) * b * 2.0 ** (-r)
-        if expected_bg <= candidates_per_row * n_rows:
+        if expected_bg <= 8.0 * n_rows:
             return b, r
     return b, 61
 
 
 def embedding_neardup_hi(embeddings: DataFrame, threshold: float = 0.95,
                          n_bands: int | None = None, rows_per_band: int | None = None,
-                         seed: int = 7, n_rows: int | None = None,
+                         n_rows: int | None = None,
                          max_bucket_size: int | str | None = "auto") -> DataFrame:
     """High-threshold embedding near-duplicate pairs: (vec_a < vec_b, sim_r)
     with cosine >= threshold (>= 0.9 regime), as banded-LSH candidates +
@@ -368,8 +370,7 @@ def embedding_neardup_hi(embeddings: DataFrame, threshold: float = 0.95,
         n_bands = auto_b if n_bands is None else n_bands
         rows_per_band = auto_r if rows_per_band is None else rows_per_band
     max_bucket_size = resolve_bucket_cap(max_bucket_size, vecs, n)
-    cand = embedding_neardup_candidates(embeddings, n_bands, rows_per_band, seed,
-                                        max_bucket_size)
+    cand = embedding_neardup_candidates(embeddings, n_bands, rows_per_band, max_bucket_size)
     return _verify_pairs(vecs, cand, threshold)
 
 
@@ -434,7 +435,7 @@ def _train_ivf_centroids(vecs: DataFrame, n_centroids: int, iters: int):
 def _nearest_cells(vecs: DataFrame, cent: list, n: int, id_col: str, name: str) -> DataFrame:
     """(id_col, cell): each vector's `n` nearest centroids by cosine, the
     top-n of one (batch x C) GEMM per Arrow batch (stable order on ties) —
-    the IVF index when n = n_assign, the query probes when n = nprobe.
+    the IVF index when n = 3, the query probes when n = 8 (ivf_ann_topk).
     `name` labels the MapInPandas node in query plans."""
     import numpy as np
     import pandas as pd
@@ -452,22 +453,20 @@ def _nearest_cells(vecs: DataFrame, cent: list, n: int, id_col: str, name: str) 
     return vecs.mapInPandas(cells, f"{id_col} bigint, cell int")
 
 
-def ivf_ann_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
-                 n_centroids: int = 32, n_assign: int = 3, nprobe: int = 8,
-                 kmeans_iters: int = 5) -> DataFrame:
-    """IVF approximate top-k: a coarse k-means quantizer buckets the corpus
-    (each vector indexed under its n_assign nearest centroids); a query
-    probes its nprobe nearest cells and ranks candidates by exact cosine.
-    Same output shape as cosine_topk.
+def ivf_ann_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10) -> DataFrame:
+    """IVF approximate top-k: a coarse k-means quantizer (32 cells, 5
+    Lloyd iterations) buckets the corpus, each vector indexed under its 3
+    nearest centroids; a query probes its 8 nearest cells and ranks
+    candidates by exact cosine.  Same output shape as cosine_topk.
 
     Data-adaptive where hyperplane LSH is not: on weakly-clustered/isotropic
     embeddings random hyperplanes separate true neighbours with probability
     ~theta/pi per bit, while learned centroids track the actual density.
-    Multi-assignment (n_assign > 1) trades index size for recall — the
-    standard IVF recall knob.  Defaults are calibrated on the synthetic
-    fixture to recall@10 >= 0.8 vs cosine_topk (measured by ann_recall);
-    real embedding corpora with genuine cluster structure prune far harder
-    at the same settings.
+    Indexing each vector under several cells trades index size for recall.
+    The quantizer's values are calibrated on the synthetic fixture to
+    recall@10 >= 0.8 vs cosine_topk (measured by ann_recall); real
+    embedding corpora with genuine cluster structure prune far harder at
+    the same settings.
 
     Scale: centroid training is map-only scans + tiny shuffles
     (see _train_ivf_centroids); the index pass is one map-only GEMM over
@@ -475,14 +474,14 @@ def ivf_ann_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
     broadcast query probes; only candidates (a cell-bounded fraction of the
     corpus) reach the exact-cosine ranking."""
     vecs = _vecs(embeddings)
-    cent = _train_ivf_centroids(vecs, n_centroids, kmeans_iters)
+    cent = _train_ivf_centroids(vecs, 32, 5)
 
     # the index and probe tables carry IDS ONLY: shipping the vectors
-    # through the cell join (duplicated n_assign x / nprobe x) would shuffle
+    # through the cell join (duplicated per assigned / probed cell) would shuffle
     # ~3x the corpus vector bytes at scale; _rank_candidates re-joins
     # vectors by id for just the surviving candidates
-    indexed = _nearest_cells(vecs, cent, n_assign, "vec_id", "index_cells")
-    probes = _nearest_cells(vecs.filter(F.col("vec_id") < n_queries), cent, nprobe, "query_id",
+    indexed = _nearest_cells(vecs, cent, 3, "vec_id", "index_cells")
+    probes = _nearest_cells(vecs.filter(F.col("vec_id") < n_queries), cent, 8, "query_id",
                             "probe_cells")
     cand_ids = (
         indexed.join(F.broadcast(probes), "cell")
@@ -542,15 +541,13 @@ def ann_recall(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
     )
 
 
-def lsh_ann_candidates(embeddings: DataFrame, n_queries: int = 5,
-                       n_planes: int = 4, n_tables: int = 16,
-                       seed: int = 11) -> DataFrame:
+def lsh_ann_candidates(embeddings: DataFrame, n_queries: int = 5) -> DataFrame:
     """(query_id, neighbor_id): the candidate-generation stage of
     lsh_ann_topk — corpus vectors sharing the query's (band, key) bucket in
-    ANY of the `n_tables` signature tables (OR-banding), deduplicated.
+    ANY of the LSH_ANN_TABLES signature tables (OR-banding), deduplicated.
 
-    DETERMINISTIC for a fixed (seed, corpus): the Gaussian planes are a
-    pure function of the seed and bucketing is sign-of-projection, so this
+    DETERMINISTIC for a fixed corpus: the Gaussian planes are a pure
+    function of LSH_ANN_SEED and bucketing is sign-of-projection, so this
     stage is DuckDB-oracle-checked — the oracle replays the identical
     float64 planes as SQL literals and the identical sign rule over the
     same parquet floats (see __spark_entry__._sql_band_sig).
@@ -558,7 +555,7 @@ def lsh_ann_candidates(embeddings: DataFrame, n_queries: int = 5,
     graded by measured recall instead."""
     vecs = _vecs(embeddings)
     # table t = band t of the shared banding primitive (seeded planes)
-    buckets = _band_buckets(vecs, n_tables, n_planes, seed=seed)
+    buckets = _band_buckets(vecs, LSH_ANN_TABLES, LSH_ANN_PLANES, LSH_ANN_SEED)
     qbuckets = (
         buckets.filter(F.col("vec_id") < n_queries)
         .select(F.col("vec_id").alias("query_id"), "band", "key")
@@ -571,10 +568,9 @@ def lsh_ann_candidates(embeddings: DataFrame, n_queries: int = 5,
     )
 
 
-def lsh_ann_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
-                 n_planes: int = 4, n_tables: int = 16) -> DataFrame:
-    """Approximate top-k via MULTI-TABLE hyperplane LSH: `n_tables`
-    independent `n_planes`-bit signature tables; a corpus vector is a
+def lsh_ann_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10) -> DataFrame:
+    """Approximate top-k via MULTI-TABLE hyperplane LSH: LSH_ANN_TABLES
+    independent LSH_ANN_PLANES-bit signature tables; a corpus vector is a
     candidate for a query if it shares the query's bucket in ANY table
     (OR-banding), then exact cosine ranks the candidates.  Same output shape
     as cosine_topk (rows-only check: the bucketing is seed-stable — the
@@ -602,5 +598,5 @@ def lsh_ann_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
     data-adaptive default; this is the model-free alternative that needs
     no training pass."""
     vecs = _vecs(embeddings)
-    cand_ids = lsh_ann_candidates(embeddings, n_queries, n_planes, n_tables)
+    cand_ids = lsh_ann_candidates(embeddings, n_queries)
     return _rank_candidates(vecs, cand_ids, n_queries, k)

@@ -99,18 +99,22 @@ def lang_id(docs: DataFrame) -> DataFrame:
     )
 
 
-def fingerprints(docs: DataFrame, k: int = 8) -> DataFrame:
-    """Document fingerprint: lexicographic-min md5 over the k-gram shingle
-    set (a 1-hash MinHash — stable content signature for near-dup triage).
-    Documents shorter than k get the md5 of the whole text.
+# shingle width of the document fingerprint (read by its DuckDB twin)
+FINGERPRINT_K = 8
+
+
+def fingerprints(docs: DataFrame) -> DataFrame:
+    """Document fingerprint: lexicographic-min md5 over the FINGERPRINT_K-
+    gram shingle set (a 1-hash MinHash — stable content signature for
+    near-dup triage).  Shorter documents get the md5 of the whole text.
 
     Shingling stays inside one higher-order-function expression (sequence +
     transform + array_min), so no explode/shuffle: a map-only pass."""
-    short = F.length("text") < k
+    short = F.length("text") < FINGERPRINT_K
     gram_mins = F.array_min(
         F.transform(
-            F.sequence(F.lit(1), F.length("text") - (k - 1)),
-            lambda i: F.md5(F.col("text").substr(i, F.lit(k))),
+            F.sequence(F.lit(1), F.length("text") - (FINGERPRINT_K - 1)),
+            lambda i: F.md5(F.col("text").substr(i, F.lit(FINGERPRINT_K))),
         )
     )
     return docs.select(

@@ -13,7 +13,6 @@ def get_spark(
     app_name: str = "arabic-ocr-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    arrow_batch_rows: int = 256,
 ) -> SparkSession:
     """local[$SPARK_GRAFT_CPUS] by default in the sandbox; on a real cluster
     the master comes from spark-submit and these configs ride along.
@@ -34,7 +33,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "4g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

@@ -318,7 +318,7 @@ def line_natural_width(words: list[str]) -> int:
     ) + WORD_GAP * (len(words) - 1)
 
 
-def render_line(words: list[str], line_width: int | None = None, justify_to: int | None = None) -> np.ndarray:
+def render_line(words: list[str], justify_to: int | None = None) -> np.ndarray:
     """Words (reading order: words[0] is rendered RIGHTMOST) -> line bitmap
     including the left margin.
 
@@ -338,8 +338,6 @@ def render_line(words: list[str], line_width: int | None = None, justify_to: int
             extra -= take
         margin += min(MAX_MARGIN_STRETCH, extra)
     width = margin + sum(b.shape[1] for b in bitmaps) + sum(gaps)
-    if line_width is not None:
-        width = max(width, line_width)
     out = np.zeros((CELL_H, width), dtype=np.uint8)
     x = margin
     for i, b in enumerate(bitmaps):
@@ -348,12 +346,12 @@ def render_line(words: list[str], line_width: int | None = None, justify_to: int
     return out
 
 
-def render_page(lines: list[list[str]], justify: bool = True) -> np.ndarray:
+def render_page(lines: list[list[str]]) -> np.ndarray:
     """Lines of words -> grayscale page image (uint8: paper=255, ink=0),
-    ready for the binarize-invert front of the pipeline.  With justify,
-    every line's ink right edge is aligned to the widest line (as far as
-    the bounded gap/margin stretch allows)."""
-    target = max(line_natural_width(ws) for ws in lines) if justify else None
+    ready for the binarize-invert front of the pipeline.  Every line's ink
+    right edge is aligned to the widest line (as far as the bounded
+    gap/margin stretch allows)."""
+    target = max(line_natural_width(ws) for ws in lines)
     line_bitmaps = [render_line(ws, justify_to=target) for ws in lines]
     width = max(b.shape[1] for b in line_bitmaps) + RIGHT_MARGIN
     height = TOP_MARGIN + sum(b.shape[0] for b in line_bitmaps) + LINE_GAP * (len(line_bitmaps) - 1) + BOTTOM_MARGIN
@@ -384,17 +382,16 @@ def expected_text_for(lines: list[list[str]]) -> str:
     return expected
 
 
-def compose_paragraph(rng, n_lines: int, target_width: int = 170,
-                      min_word: int = 3, max_word: int = 6) -> tuple[np.ndarray, str, list[list[str]]]:
+def compose_paragraph(rng, n_lines: int, target_width: int = 170) -> tuple[np.ndarray, str, list[list[str]]]:
     """Width-targeted random paragraph: each line greedily fills words until
     the natural width approaches target_width, then justification absorbs
     the remainder — producing the near-rectangular ink blocks real
-    justified pages have (deskew-stable)."""
+    justified pages have (deskew-stable).  Words are 3-6 glyphs long."""
     lines: list[list[str]] = []
     for _ in range(n_lines):
         words: list[str] = []
         while True:
-            w = "".join(rng.choice(ALPHABET, size=int(rng.integers(min_word, max_word + 1))))
+            w = "".join(rng.choice(ALPHABET, size=int(rng.integers(3, 7))))
             cand = words + [w]
             if line_natural_width(cand) > target_width:
                 if words:

@@ -36,9 +36,10 @@ from .glyphs import ALPHABET, compose_paragraph, compose_text_image
 __all__ = ["SynthConfig", "synthesize", "default_model_path", "rotate_page"]
 
 
-def rotate_page(img: np.ndarray, angle: float, pad: int = 12) -> np.ndarray:
+def rotate_page(img: np.ndarray, angle: float) -> np.ndarray:
     """Rotate a paper-white/ink-black page by `angle` degrees (bicubic, the
-    same warp the deskew stage inverts), padding the canvas first."""
+    same warp the deskew stage inverts), padding the canvas by 12 px first."""
+    pad = 12
     ink = (255 - img).astype(np.uint8)
     canvas = np.zeros((img.shape[0] + 2 * pad, img.shape[1] + 2 * pad), dtype=np.uint8)
     canvas[pad:-pad, pad:-pad] = ink
@@ -96,11 +97,12 @@ def _render_pool(cfg: SynthConfig, model: CharModel) -> tuple[list[str], list[di
     return payloads, oracle
 
 
-def synthesize(out_dir: str, cfg: SynthConfig | None = None, model_path: str | None = None) -> dict:
-    """Writes transcripts.parquet + transcripts_golden.parquet under out_dir.
-    Returns summary stats.  Fully deterministic from cfg.seed."""
+def synthesize(out_dir: str, cfg: SynthConfig | None = None) -> dict:
+    """Writes transcripts.parquet + transcripts_golden.parquet under out_dir,
+    the golden from the packaged model.  Returns summary stats.  Fully
+    deterministic from cfg.seed."""
     cfg = cfg or SynthConfig()
-    model = CharModel.load(model_path or default_model_path())
+    model = CharModel.load(default_model_path())
     payloads, oracle = _render_pool(cfg, model)
 
     rng = np.random.default_rng(cfg.seed + 1)

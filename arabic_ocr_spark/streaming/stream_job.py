@@ -22,7 +22,6 @@ from __future__ import annotations
 import os
 
 from ..job import ExtractionJobConfig, _broadcasts, commit_unit, plan_extraction
-from ..kernel.classifier import CharModel
 from ..sources.readers import TRANSCRIPTS_SCHEMA
 
 __all__ = ["run_streaming_extraction", "streaming_events_hourly", "streaming_conv_progress",
@@ -63,8 +62,7 @@ def streaming_dedup_payloads(transcripts_stream, watermark: str = "1 hour"):
     return _suppress_within_watermark(transcripts_stream, F.md5("text"), watermark)
 
 
-def streaming_neardup_payloads(transcripts_stream, watermark: str = "1 hour",
-                               bits: int = 32):
+def streaming_neardup_payloads(transcripts_stream, watermark: str = "1 hour"):
     """Streaming NEAR-duplicate payload suppression: drop turns whose text
     SimHash (a pure JVM expression, operators/dedup.simhash_expr — legal on
     unbounded streams) collides with one already seen within the watermark
@@ -86,7 +84,7 @@ def streaming_neardup_payloads(transcripts_stream, watermark: str = "1 hour",
     from ..operators.dedup import simhash_expr
 
     return _suppress_within_watermark(
-        transcripts_stream, simhash_expr(F.col("text"), bits), watermark)
+        transcripts_stream, simhash_expr(F.col("text"), 32), watermark)
 
 
 def run_streaming_extraction(
@@ -94,13 +92,12 @@ def run_streaming_extraction(
     input_dir: str,
     output_dir: str,
     cfg: ExtractionJobConfig | None = None,
-    model: CharModel | None = None,
-    available_now: bool = True,
     pre_gate=None,
     max_files_per_trigger: int = 8,
 ):
-    """Start (and, with available_now, drain) the streaming extraction.
-    Returns the StreamingQuery.
+    """Run the streaming extraction over every file in input_dir
+    (availableNow trigger: micro-batches of at most max_files_per_trigger
+    files, then the query stops).  Returns the finished StreamingQuery.
 
     pre_gate: optional stream-to-stream transform applied to the UNBOUNDED
     stream before the per-batch extraction plan — the composition point for
@@ -109,14 +106,22 @@ def run_streaming_extraction(
     live upstream of foreachBatch.  A gated re-send is dropped before it
     occupies a kernel slot, the streaming twin of the batch
     dedup-before-compute option."""
+    from pyspark.sql.types import StructType
+
     cfg = cfg or ExtractionJobConfig()
     # broadcast ONCE for the stream's lifetime, not once per micro-batch
-    model_bc, templates_bc = _broadcasts(spark, cfg, model)
+    model_bc, templates_bc = _broadcasts(spark, cfg)
     # like the broadcasts: resolve the (static) golden table once for the
     # stream's lifetime, not once per micro-batch
     golden = spark.read.parquet(cfg.golden_path) if cfg.golden_path else None
+    # extraction never reads `ts`, only a pre_gate's watermark does; read
+    # without it, a file whose ts is INT64 TIMESTAMP(NANOS) (what pandas'
+    # to_parquet writes) streams like any other
+    schema = StructType.fromDDL(TRANSCRIPTS_SCHEMA)
+    if pre_gate is None:
+        schema = StructType([f for f in schema if f.name != "ts"])
     stream = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_dir)
     )
@@ -132,15 +137,13 @@ def run_streaming_extraction(
         # micro-batch id, so one consumer reads batch and streaming lineage
         commit_unit(batch_df.sparkSession, result, output_dir, "batch", int(batch_id), golden)
 
-    writer = (
+    q = (
         stream.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
+    q.awaitTermination()
     return q
 
 
@@ -204,13 +207,15 @@ def streaming_conv_progress(transcripts_stream, idle_timeout_ms: int = 0):
     )
 
 
-def streaming_events_hourly(events_stream, watermark: str = "2 hours"):
-    """Watermarked tumbling 1-hour rollup (append-mode compatible)."""
+def streaming_events_hourly(events_stream):
+    """Watermarked tumbling 1-hour rollup (append-mode compatible); the
+    watermark trails the latest event time by 2 hours, and rows arriving
+    behind it are dropped."""
     from pyspark.sql import functions as F
 
     return (
         events_stream.withColumn("ts", F.col("ts").cast("timestamp"))  # watermark needs TZ timestamps
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 4).alias("sum_value"))
         .select(F.col("win.start").alias("hour"), "event_type", "n_events", "sum_value")

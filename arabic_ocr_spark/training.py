@@ -108,10 +108,10 @@ def normalize_ground_truth(line: str) -> list[str]:
     return [w for w in line.split(" ") if w != ""]
 
 
-def train_words_for_alphabet(rng: np.random.Generator | None = None, n_random: int = 60) -> list[list[str]]:
+def train_words_for_alphabet(n_random: int = 60) -> list[list[str]]:
     """Deterministic training corpus: every glyph in isolation-context plus
     randomized words (seeded) for context coverage."""
-    rng = rng or np.random.default_rng(42)
+    rng = np.random.default_rng(42)
     labels = list(_GLYPH_DEFS)
     pages: list[list[str]] = []
     for ch in labels:
@@ -161,7 +161,7 @@ def _page_pairs(lines: list[str], tally: list[int], angle: float | None = None):
 
 
 def train_serial(pages: Iterable[list[str]] | None = None,
-                 skew_rounds: int = 0, seed: int = 42) -> tuple[dict, int, int]:
+                 skew_rounds: int = 0) -> tuple[dict, int, int]:
     """Serial trainer over composed fixture pages.
 
     skew_rounds > 0 adds passes over the SAME pages rotated by small seeded
@@ -173,7 +173,7 @@ def train_serial(pages: Iterable[list[str]] | None = None,
 
     Returns (raw char_map, rejected_words, total_words)."""
     pages = list(pages) if pages is not None else train_words_for_alphabet()
-    rng = np.random.default_rng(seed + 7)
+    rng = np.random.default_rng(42 + 7)
     # clean pass first: min-area-rect tilts even straight pages with ragged
     # line ends by a fraction of a degree, so training must see exactly
     # what inference sees
@@ -191,17 +191,18 @@ def train_serial(pages: Iterable[list[str]] | None = None,
 DEFAULT_SKEW_ROUNDS = 4
 
 
-def build_model(out_path: str | None = None, skew_rounds: int = DEFAULT_SKEW_ROUNDS) -> CharModel:
+def build_model(out_path: str | None = None) -> CharModel:
     """Builds the committed classifier artifact: clean pass through the full
-    inference path plus skew-augmented rounds (see train_serial)."""
-    raw, rejected, total = train_serial(skew_rounds=skew_rounds)
+    inference path plus DEFAULT_SKEW_ROUNDS skew-augmented rounds (see
+    train_serial)."""
+    raw, rejected, total = train_serial(skew_rounds=DEFAULT_SKEW_ROUNDS)
     model = CharModel.from_raw(raw)
     if out_path:
         model.save(out_path)
     return model
 
 
-def train_spark(spark, pages: list[list[str]], out_path: str | None = None) -> CharModel:
+def train_spark(spark, pages: list[list[str]]) -> CharModel:
     """Distributed trainer: pages -> (score, char, fv, encounter-seq) rows
     -> min-seq dedup -> driver merge in SERIAL INSERTION ORDER.
 
@@ -235,7 +236,4 @@ def train_spark(spark, pages: list[list[str]], out_path: str | None = None) -> C
     raw: dict = {}
     for r in sorted(pairs, key=lambda r: (r.seq.p, r.seq.w, r.seq.c)):
         raw.setdefault(str(r.score), []).append([r.char, list(r.fv)])
-    model = CharModel.from_raw(raw)
-    if out_path:
-        model.save(out_path)
-    return model
+    return CharModel.from_raw(raw)

@@ -43,3 +43,17 @@ def test_oracle_sql_is_duckdb_parseable():
             # binder errors are fine here (views/files absent); parse errors
             # surface as ParserException above
             pass
+
+
+def test_band_signature_refuses_a_sign_at_zero():
+    """A fixture vector whose seeded-plane projection lies within 1e-9 of
+    zero has no engine-portable sign bucket: the twin raises instead."""
+    import numpy as np
+    import pytest
+
+    p0 = np.random.default_rng(7).standard_normal((4, 3))[0]
+    x = np.array([1.0, 2.0, 3.0])
+    assert "UNION ALL" in entry._sql_band_sig("v", x[None, :], 2, 2, 7)
+    on_plane = x - (x @ p0) / (p0 @ p0) * p0  # orthogonal to plane 0
+    with pytest.raises(ValueError, match="plane 0 projects row 1 of v"):
+        entry._sql_band_sig("v", np.stack([x, on_plane]), 2, 2, 7)

@@ -126,3 +126,47 @@ def test_resolve_bucket_cap_validates_strings():
     # "auto" with nothing to count
     with _pytest.raises(ValueError, match="auto"):
         resolve_bucket_cap("auto")
+
+
+def _final_plans(spark, run):
+    """(run(), the final physical plan tree of every SQL execution run()
+    started — its localCheckpoint jobs included)."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        bus.waitUntilEmpty()  # SQL events land asynchronously
+        execs = store.executionsList()
+        return [execs.apply(i) for i in range(execs.size())]
+
+    seen = {e.executionId() for e in executions()}
+    out = run()
+    return out, [e.physicalPlanDescription().split("\n\n")[0].split("== Initial Plan ==")[0]
+                 for e in executions() if e.executionId() not in seen]
+
+
+def test_jaccard_verify_falls_back_to_shuffle_joins(spark):
+    """jaccard_verified_pairs leaves the join strategy to the planner: by
+    default its small sides broadcast, and with broadcasting off (a corpus
+    past spark.sql.autoBroadcastJoinThreshold) every join it runs is a
+    sort-merge join, with the same verified pairs."""
+    import re
+
+    from arabic_ocr_spark.operators.dedup import jaccard_verified_pairs
+
+    base = [f"document {i} is about topic {i * 7}, with shared words and a tail" for i in range(12)]
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(base)] + [(100 + i, t + " again") for i, t in enumerate(base)],
+        "doc_id long, text string")
+    joins = lambda plans: re.findall(r"\b(\w+Join)\b", "\n".join(plans))  # noqa: E731
+    default, plans = _final_plans(spark, lambda: jaccard_verified_pairs(docs).collect())
+    assert "BroadcastHashJoin" in joins(plans)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        shuffled, plans = _final_plans(spark, lambda: jaccard_verified_pairs(docs).collect())
+    finally:
+        spark.conf.set(key, prev)
+    assert joins(plans) and set(joins(plans)) == {"SortMergeJoin"}
+    assert default and sorted(map(tuple, shuffled)) == sorted(map(tuple, default))

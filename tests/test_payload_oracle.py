@@ -28,7 +28,7 @@ def _expected(conv_id, turn_idx, text, max_side=32):
         conv_id, turn_idx, h, w, 1, n_ink, n_pixels, n_starts, nz_rows,
         round_ratio(n_ink, n_pixels, 6),
         round_ratio(nz_rows, n_starts, 4) if n_starts else 0.0,
-        int(_quality_ok(n_ink / n_pixels, n_starts, 0.005, 0.5)),
+        int(_quality_ok(n_ink, n_pixels, n_starts)),
         len(range(0, h, stride)), len(range(0, w, stride)),
     )
 

@@ -141,7 +141,7 @@ def test_quality_gate_sits_below_kernel(spark, entry_mod):
 def test_ivf_candidate_join_carries_ids_not_vectors(spark):
     """The IVF index/probe cell join must ship (id, cell) rows only — the
     vectors re-join by id at the exact-cosine ranking stage.  Shipping
-    vectors through the cell join (duplicated n_assign x) would shuffle ~3x
+    vectors through the cell join (one copy per assigned cell) would shuffle ~3x
     the corpus vector bytes at scale."""
     from arabic_ocr_spark.operators.similarity import ivf_ann_topk
 

@@ -71,6 +71,41 @@ def test_conv_progress_accumulates_across_batches(spark, two_batch_input, tmp_pa
     assert conv_a_counts == [2, 4]
 
 
+def test_conv_progress_idle_timeout_closes_conversation(spark, two_batch_input, tmp_path):
+    """With idle_timeout_ms > 0 a conversation that receives no turns for
+    the timeout emits one final done=true row with its totals, and its
+    state is removed (the operator's only state eviction)."""
+    import time
+
+    stream = spark.readStream.schema(TRANSCRIPTS_SCHEMA).parquet(os.path.join(two_batch_input, "*"))
+    q = (
+        streaming_conv_progress(stream, idle_timeout_ms=1000)
+        .writeStream.format("memory").queryName("conv_progress_idle")
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(processingTime="200 milliseconds")
+        .start()
+    )
+    try:
+        # processing-time timeouts run in no-data batches: wait for them
+        deadline = time.time() + 120
+        while True:
+            done = spark.sql("SELECT * FROM conv_progress_idle WHERE done").collect()
+            progress = q.lastProgress
+            state_rows = progress["stateOperators"][0]["numRowsTotal"] if progress else None
+            if len(done) == 2 and state_rows == 0 or time.time() > deadline:
+                break
+            time.sleep(0.5)
+    finally:
+        q.stop()
+    assert q.exception() is None
+    final = {r["conv_id"]: (r["n_turns"], r["max_turn_idx"], r["n_payload"]) for r in done}
+    assert final == {"conv_a": (4, 3, 3), "conv_b": (1, 0, 1)}
+    assert state_rows == 0
+    running = spark.sql("SELECT * FROM conv_progress_idle WHERE NOT done").collect()
+    assert {r["conv_id"] for r in running} == {"conv_a", "conv_b"}
+
+
 def test_payload_quality_runs_on_unbounded_stream(spark, two_batch_input, tmp_path):
     """payload_meta is JVM-only and aggregation-free, so it must apply to a
     readStream DataFrame without foreachBatch (append mode)."""
