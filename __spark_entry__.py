@@ -196,7 +196,7 @@ def _q_extract_eval(spark, sf_dir):
 def _q_extract_lineage(spark, sf_dir):
     """Per-chunk lineage aggregate (partition id, turn range, rows, failures):
     a projection of the job's own lineage_rows."""
-    return lineage_rows(_extraction_plan(spark, sf_dir), wave=0).select(
+    return lineage_rows(_extraction_plan(spark, sf_dir)).select(
         "chunk", "rows_processed", "n_ok",
         F.col("turn_min").cast("long").alias("turn_min"),
         F.col("turn_max").cast("long").alias("turn_max"),

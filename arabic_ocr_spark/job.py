@@ -64,10 +64,14 @@ _KERNEL_SCHEMA = (
 )
 RESULT_SCHEMA = "conv_id string, turn_idx int, chunk int, part_id int, " + _KERNEL_SCHEMA
 
+# `wave` is the commit unit id (checkpoint wave in batch, micro-batch id in
+# streaming).  It comes last: on disk it is the lineage directory's
+# partition column (`_lineage_dir`), which a read appends after the file
+# columns
 LINEAGE_SCHEMA = (
-    "wave int, chunk int, rows_processed bigint, n_ok bigint, n_failed bigint, "
+    "chunk int, rows_processed bigint, n_ok bigint, n_failed bigint, "
     "turn_min int, turn_max int, conv_min string, conv_max string, "
-    "wall_us bigint, extraction_acc double, committed_at double"
+    "wall_us bigint, extraction_acc double, committed_at double, wave int"
 )
 
 
@@ -333,9 +337,10 @@ def stage_chunked(spark, df, cfg: ExtractionJobConfig, staged_dir: str) -> str:
     # `role` rides along (when the source has it) so a later role-restricted
     # run over the staged layout can still filter; S, when derived, comes
     # from a sketch of the payload rows, so staging does not move a row's
-    # chunk or wave
+    # chunk or wave.  The overwrite also deletes a previous staging's pin,
+    # so the pin written below is always this staging's own
     _chunked(df, cfg).write.mode("overwrite").partitionBy("wave").parquet(staged_dir)
-    _pin_partitioning(cfg, staged_dir, "staged input", adopt=False)
+    _pin_partitioning(cfg, staged_dir, "staged input")
     return staged_dir
 
 
@@ -347,19 +352,18 @@ def _is_staged(input_path: str | None) -> bool:
 
 
 def _pin_partitioning(cfg: ExtractionJobConfig, dirpath: str, owner: str,
-                      source=None, adopt: bool = True) -> None:
+                      source=None) -> None:
     """The ONE reader and writer of a directory's `_partitioning.json`.
     chunk (and therefore wave membership) is a function of (salt_buckets,
     num_chunks), so data chunked under a pin must be read, resumed and
     extended under the same one — a re-derived sample sketch could land on
     a different S and silently duplicate/drop rows.
 
-    With adopt=True an existing pin is validated against cfg (a mismatch
-    raises, naming `owner`) and its S adopted into cfg; without a pin, or
-    with adopt=False, cfg's parameters are written — S derived from
-    `source`'s skew sketch first when unset."""
+    An existing pin is validated against cfg (a mismatch raises, naming
+    `owner`) and its S adopted into cfg; without a pin, cfg's parameters
+    are written — S derived from `source`'s skew sketch first when unset."""
     path = os.path.join(dirpath, _PIN_FILE)
-    if adopt and os.path.exists(path):
+    if os.path.exists(path):
         with open(path, encoding="utf-8") as f:
             pinned = json.load(f)
         if pinned["num_chunks"] != cfg.num_chunks or pinned["num_waves"] != cfg.num_waves:
@@ -382,14 +386,14 @@ def _pin_partitioning(cfg: ExtractionJobConfig, dirpath: str, owner: str,
                    "salt_buckets": cfg.salt_buckets}, f)
 
 
-def lineage_rows(written, wave: int, golden=None):
-    """Per-chunk lineage aggregate in the canonical LINEAGE_SCHEMA — the ONE
+def lineage_rows(written, golden=None):
+    """Per-chunk lineage aggregate: LINEAGE_SCHEMA's file columns (all but
+    `wave`, which the unit's lineage directory carries) — the ONE
     definition, applied by `commit_unit` to batch waves and streaming
     micro-batches alike, so a consumer written against either lineage table
-    reads both.  `wave` is the commit unit id (checkpoint wave in batch,
-    micro-batch id in streaming); `golden` an optional
-    (conv_id, turn_idx, expected_text) frame for the per-chunk
-    extraction-accuracy metric (null when no golden is configured)."""
+    reads both.  `golden` is an optional (conv_id, turn_idx, expected_text)
+    frame for the per-chunk extraction-accuracy metric (null when no golden
+    is configured)."""
     from pyspark.sql import functions as F
 
     if golden is not None:
@@ -414,24 +418,32 @@ def lineage_rows(written, wave: int, golden=None):
             F.sum("proc_us").alias("wall_us"),
             F.avg("is_exact").alias("extraction_acc"),
         )
-        .withColumn("wave", F.lit(wave))
         .withColumn("committed_at", F.lit(time.time()))
         .select(
-            "wave", "chunk", "rows_processed", "n_ok", "n_failed",
+            "chunk", "rows_processed", "n_ok", "n_failed",
             "turn_min", "turn_max", "conv_min", "conv_max", "wall_us",
             "extraction_acc", "committed_at",
         )
     )
 
 
-def _committed_units(output_dir: str, unit: str = "*") -> dict[str, int]:
-    """lineage/<unit>=<id> directory -> id, for every commit unit whose
+def _lineage_dir(output_dir: str, unit_id) -> str:
+    """lineage/wave=<id>, the one name of a commit unit's lineage directory
+    — a batch wave's and a streaming micro-batch's alike.  The unit id is
+    encoded once, in this partition directory (the files carry no `wave`
+    column), so a read of the `lineage/` root gives exactly LINEAGE_SCHEMA
+    on either output."""
+    return os.path.join(output_dir, "lineage", f"wave={unit_id}")
+
+
+def _committed_units(output_dir: str) -> dict[str, int]:
+    """lineage/wave=<id> directory -> id, for every commit unit whose
     lineage COMMITTED (the `_SUCCESS` marker of the lineage directory, not
     its row contents): a unit that legitimately produced zero rows — e.g.
     every payload dropped by the quality gate — still counts as done, so a
     resumed run skips it instead of re-scanning and re-gating it forever."""
     done: dict[str, int] = {}
-    for p in glob.glob(os.path.join(output_dir, "lineage", f"{unit}=*")):
+    for p in glob.glob(_lineage_dir(output_dir, "*")):
         if os.path.exists(os.path.join(p, "_SUCCESS")):
             try:
                 done[p] = int(os.path.basename(p).split("=", 1)[1])
@@ -446,7 +458,10 @@ def read_lineage(spark, output_dir: str):
     done = _committed_units(output_dir)
     if not done:
         return None
-    return spark.read.schema(LINEAGE_SCHEMA).parquet(*sorted(done))
+    # basePath: each unit directory's `wave=<id>` name fills the column
+    return (spark.read.schema(LINEAGE_SCHEMA)
+            .option("basePath", os.path.join(output_dir, "lineage"))
+            .parquet(*sorted(done)))
 
 
 def commit_unit(spark, result, output_dir: str, unit: str, unit_id: int,
@@ -464,7 +479,7 @@ def commit_unit(spark, result, output_dir: str, unit: str, unit_id: int,
        that read-back, partitioned by `unit` (retry-idempotent; the parquet
        directory stays the sandbox-testable system of record, so with a
        catalog configured this dual-writes during migration);
-    4. LAST, the unit's `lineage_rows` to `lineage/<unit>=<unit_id>` — its
+    4. LAST, the unit's `lineage_rows` to `lineage/wave=<unit_id>` — its
        `_SUCCESS` marker is the resume ledger, and lineage can never claim
        rows that did not commit.
 
@@ -472,14 +487,13 @@ def commit_unit(spark, result, output_dir: str, unit: str, unit_id: int,
     commit's: counting here would cost every unit extra Spark jobs."""
     from pyspark.sql import functions as F
 
-    part = f"{unit}={unit_id}"
-    data_dir = os.path.join(output_dir, "data", part)
-    lin_dir = os.path.join(output_dir, "lineage", part)
+    data_dir = os.path.join(output_dir, "data", f"{unit}={unit_id}")
     result.write.mode("overwrite").parquet(data_dir)
     written = spark.read.schema(RESULT_SCHEMA).parquet(data_dir)
     if iceberg_table:
         written.withColumn(unit, F.lit(unit_id)).writeTo(iceberg_table).overwritePartitions()
-    lineage_rows(written, unit_id, golden).coalesce(1).write.mode("overwrite").parquet(lin_dir)
+    lineage_rows(written, golden).coalesce(1).write.mode("overwrite").parquet(
+        _lineage_dir(output_dir, unit_id))
 
 
 def _read_parquet(spark, path: str):
@@ -535,7 +549,7 @@ def run_extraction(
     # resume ledger = the lineage directories' commit markers, NOT the
     # lineage row values: an all-dropped wave commits an empty-but-valid
     # lineage file and must still be skipped on resume
-    done_waves = set(_committed_units(output_dir, "wave").values())
+    done_waves = set(_committed_units(output_dir).values())
 
     ran: list[int] = []
     t_start = time.time()
@@ -551,7 +565,7 @@ def run_extraction(
     rows_written = 0
     if ran:
         lineage = spark.read.schema(LINEAGE_SCHEMA).parquet(
-            *(os.path.join(output_dir, "lineage", f"wave={w}") for w in ran))
+            *(_lineage_dir(output_dir, w) for w in ran))
         rows_written = sum(r.rows_processed for r in lineage.select("rows_processed").collect())
     return {
         "waves_total": cfg.num_waves,

@@ -105,10 +105,18 @@ def run_streaming_extraction(
     streaming_neardup_payloads), whose cross-batch suppression state must
     live upstream of foreachBatch.  A gated re-send is dropped before it
     occupies a kernel slot, the streaming twin of the batch
-    dedup-before-compute option."""
+    dedup-before-compute option.
+
+    The stream commits to parquet only: a cfg with `iceberg_table` set
+    raises ValueError instead of silently skipping the table write."""
     from pyspark.sql.types import StructType
 
     cfg = cfg or ExtractionJobConfig()
+    if cfg.iceberg_table:
+        raise ValueError(
+            "ExtractionJobConfig.iceberg_table is batch-only (run_extraction); "
+            "the streaming job commits parquet micro-batches only"
+        )
     # broadcast ONCE for the stream's lifetime, not once per micro-batch
     model_bc, templates_bc = _broadcasts(spark, cfg)
     # like the broadcasts: resolve the (static) golden table once for the

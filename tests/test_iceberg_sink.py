@@ -85,6 +85,15 @@ def test_recommit_is_per_wave_idempotent(spark, synth_dir, tmp_path, iceberg_dou
     assert (t, waves, n) == prev
 
 
+def test_streaming_refuses_iceberg_table(tmp_path):
+    """The stream commits parquet only, so a configured table is refused
+    instead of silently never written (it raises before any Spark call)."""
+    from arabic_ocr_spark.streaming.stream_job import run_streaming_extraction
+
+    with pytest.raises(ValueError, match="iceberg_table"):
+        run_streaming_extraction(None, str(tmp_path), str(tmp_path / "out"), _cfg())
+
+
 def test_table_input_source(spark, synth_dir, tmp_path):
     """input_table reads through the catalog (spark.table) — the production
     Iceberg source path — and produces the same run as the parquet path."""

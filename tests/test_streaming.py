@@ -81,20 +81,19 @@ def test_streaming_events_hourly_matches_batch(spark, tmp_path):  # noqa: F811
 
 
 def test_streaming_lineage_schema_equals_batch(spark, stream_synth, tmp_path):  # noqa: F811
-    """One consumer reads both lineage tables: the streaming foreachBatch
-    sink emits the canonical batch LINEAGE_SCHEMA (wave = micro-batch id),
-    not a column subset."""
+    """One consumer reads both lineage tables: a plain read of the
+    `lineage/` root gives the canonical LINEAGE_SCHEMA, with exactly one
+    `wave` column (= micro-batch id on the stream), on a streamed and on a
+    batch output alike — the unit id is encoded once, in the `wave=<id>`
+    directory, not also in the rows."""
     from arabic_ocr_spark.job import LINEAGE_SCHEMA, RESULT_SCHEMA, read_lineage, run_extraction
 
     s_out, b_out = str(tmp_path / "sout"), str(tmp_path / "bout")
     run_streaming_extraction(spark, f"{stream_synth}/stream_in", s_out, _cfg())
     run_extraction(spark, f"{stream_synth}/transcripts.parquet", b_out, _cfg())
 
-    # read the commit-unit dirs directly so partition discovery can't append
-    # the directory-name column (batch=/wave=); file-level schemas must be
-    # the canonical LINEAGE_SCHEMA on both paths
-    s_lin = spark.read.parquet(os.path.join(s_out, "lineage", "batch=0"))
-    b_lin = spark.read.parquet(os.path.join(b_out, "lineage", "wave=0"))
+    s_lin = spark.read.parquet(os.path.join(s_out, "lineage"))
+    b_lin = spark.read.parquet(os.path.join(b_out, "lineage"))
     canon = [(f.name, f.dataType) for f in spark.createDataFrame([], LINEAGE_SCHEMA).schema]
     assert [(f.name, f.dataType) for f in s_lin.schema] == canon
     assert [(f.name, f.dataType) for f in b_lin.schema] == canon
@@ -105,7 +104,11 @@ def test_streaming_lineage_schema_equals_batch(spark, stream_synth, tmp_path):  
         assert [(f.name, f.dataType) for f in data.schema] == result
     # a consumer can union them directly
     assert s_lin.unionByName(b_lin).count() == s_lin.count() + b_lin.count()
-    # read_lineage reads every committed unit, micro-batches included
+    # read_lineage (the resume ledger's view) returns the root read's rows,
+    # micro-batches included
+    for out, lin in ((s_out, s_lin), (b_out, b_lin)):
+        ledger = read_lineage(spark, out)
+        assert ledger.count() == lin.count() > 0 and ledger.exceptAll(lin).count() == 0
     streamed = read_lineage(spark, s_out)
     assert streamed is not None
     assert (streamed.agg(F.sum("rows_processed")).collect()[0][0]

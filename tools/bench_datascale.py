@@ -1,10 +1,21 @@
-"""Data-scale evidence: the dedup / CC / ANN ladders at 1x vs 10x rows.
+"""Data-scale evidence: the extraction job at sf0.1 vs sf1 turns, and the
+dedup / CC / ANN ladders at 1x vs 10x rows.
 
 The per-round bench (bench.py) varies PARALLELISM at fixed data; this tool
-varies DATA at fixed parallelism, because the bucketing claims (LSH bucket
-sizes, pointer-jumping round counts, near-dup candidate volume) only bend
-when row counts move.  It derives a deterministic 10x corpus from the sf0.1
-tables — no external data:
+varies DATA at fixed parallelism, because a driver bottleneck or a quadratic
+step only shows when row counts move.
+
+Extraction: the synthesized transcripts tables for sf0.1 and sf1 (~10x
+turns, `__spark_entry__.synth_dir_for`) run the identical un-cached plan,
+`__spark_entry__._extraction_plan(cached=False)`: pruned+pushed scan -> one
+salted-chunk shuffle -> sortWithinPartitions -> mapInPandas kernel,
+broadcast-once model.  A linear engine holds per-turn throughput roughly
+flat as turns grow 10x.
+
+Ladders: the bucketing claims (LSH bucket sizes, pointer-jumping round
+counts, near-dup candidate volume) only bend when row counts move.  A
+deterministic 10x corpus is derived from the sf0.1 tables — no external
+data:
 
 - documents x10: doc_id + j*1_000_000 for j in 1..9; variants j in {1,2}
   append a short suffix (shingle-Jaccard ~0.97 -> REAL near-duplicates that
@@ -14,9 +25,11 @@ tables — no external data:
   deterministic perturbation (cosine ~0.99 -> high-threshold near-dups),
   j >= 3 get per-coordinate pseudo-random sign flips (decorrelated).
 
-Writes BENCH/datascale_result.json: per-query wall time and output rows at
-both scales plus the time ratio (a bucketed ladder should scale near the
-row ratio; a quadratic one would scale with its square).
+Writes BENCH/datascale_result.json: under `extraction`, per-scale turns,
+wall time and turns/sec plus the data ratio and the per-turn throughput
+retention (1.0 = perfectly linear); per ladder query, wall time and output
+rows at both scales plus the time ratio (a bucketed ladder should scale
+near the row ratio; a quadratic one would scale with its square).
 
 Run on an otherwise idle machine (see CLAUDE.md on shared-VM throttling).
 """
@@ -27,12 +40,15 @@ import json
 import os
 import sys
 import time
+from functools import reduce
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", str(min(32, os.cpu_count() or 8))))
 SCALE = 10
+EXTRACT_SCALES = ("sf0.1", "sf1")
 
 
 def scaled_documents(spark, sf_dir: str, scale: int):
@@ -57,10 +73,7 @@ def scaled_documents(spark, sf_dir: str, scale: int):
         parts.append(
             docs.select((F.col("doc_id") + j * 1_000_000).alias("doc_id"), txt.alias("text"))
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return reduce(lambda a, b: a.unionByName(b), parts)
 
 
 def scaled_embeddings(spark, sf_dir: str, scale: int):
@@ -89,9 +102,34 @@ def scaled_embeddings(spark, sf_dir: str, scale: int):
         parts.append(
             emb.select((F.col("vec_id") + j * 1_000_000).alias("vec_id"), vec.alias("embedding"))
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+    return reduce(lambda a, b: a.unionByName(b), parts)
+
+
+def extraction_read(spark) -> dict:
+    """The extraction job's turns/sec at sf0.1 and at sf1, same session."""
+    import __spark_entry__ as entry
+
+    # build both synth caches before any timed window
+    for s in EXTRACT_SCALES:
+        entry.synth_dir_for(s)
+    # warmup outside the timed windows: JVM codegen, python worker pool,
+    # broadcast deserialization
+    entry._extraction_plan(spark, EXTRACT_SCALES[0], cached=False).limit(16 * CPUS).count()
+
+    out: dict = {}
+    per_sec = []
+    for s in EXTRACT_SCALES:
+        plan = entry._extraction_plan(spark, s, cached=False)
+        t0 = time.perf_counter()
+        n = plan.count()
+        dt = time.perf_counter() - t0
+        per_sec.append(n / dt)
+        out[s] = {"turns": n, "wall_s": round(dt, 2), "turns_per_sec": round(n / dt, 1)}
+        print(f"# {s}: {n} turns in {dt:.1f}s -> {n / dt:.1f} turns/s", file=sys.stderr)
+    lo, hi = EXTRACT_SCALES
+    out["data_ratio"] = round(out[hi]["turns"] / out[lo]["turns"], 2)
+    # per-turn throughput retention at 10x data (1.0 = perfectly linear)
+    out["throughput_retention"] = round(per_sec[1] / per_sec[0], 3)
     return out
 
 
@@ -100,6 +138,7 @@ def main() -> None:
         dedup_groups,
         exact_dup_groups,
         jaccard_verified_pairs,
+        lsh_bucket_audit,
         lsh_candidate_pairs,
     )
     from arabic_ocr_spark.operators.similarity import (
@@ -112,11 +151,7 @@ def main() -> None:
 
     spark = get_spark(master=f"local[{CPUS}]", shuffle_partitions=max(16, 2 * CPUS))
     spark.sparkContext.setLogLevel("ERROR")
-
-    def corpus(scale):
-        docs = scaled_documents(spark, SF_DIR, scale).localCheckpoint()
-        emb = scaled_embeddings(spark, SF_DIR, scale).localCheckpoint()
-        return docs, emb
+    extraction = extraction_read(spark)
 
     def run_suite(docs, emb, n_vecs, n_docs):
         # auto-sized banding for THIS corpus size (the collision-model
@@ -147,15 +182,14 @@ def main() -> None:
         out["_neardup_cands_per_row"] = round(out["neardup_candidates"]["rows"] / n_vecs, 2)
         return out
 
-    from arabic_ocr_spark.operators.dedup import lsh_bucket_audit
-
     results = {}
     guard_evidence = None
     for scale in (1, SCALE):
-        docs, emb = corpus(scale)
+        docs = scaled_documents(spark, SF_DIR, scale).localCheckpoint()
+        emb = scaled_embeddings(spark, SF_DIR, scale).localCheckpoint()
         nd, ne = docs.count(), emb.count()
         print(f"# scale {scale}x: {nd} docs, {ne} vectors", file=sys.stderr)
-        # warmup pass so JVM/py-worker spin-up stays out of the 1x numbers
+        # warmup pass so JVM codegen of the ladder stays out of the 1x numbers
         if scale == 1:
             exact_dup_groups(docs).count()
         results[f"{scale}x"] = run_suite(docs, emb, ne, nd)
@@ -192,6 +226,7 @@ def main() -> None:
         "sf_dir": SF_DIR,
         "cpus": CPUS,
         "scale": SCALE,
+        "extraction": extraction,
         "results": results,
         "time_ratio_10x_over_1x": ratios,
         "hot_bucket_guard_10x": guard_evidence,
@@ -201,9 +236,8 @@ def main() -> None:
             "at 10x vs n^2/2 evidences the LSH pruning claim at scale."
         ),
     }
-    os.makedirs(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCH"), exist_ok=True)
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCH", "datascale_result.json")
-    with open(path, "w", encoding="utf-8") as f:
+    os.makedirs(os.path.join(ROOT, "BENCH"), exist_ok=True)
+    with open(os.path.join(ROOT, "BENCH", "datascale_result.json"), "w", encoding="utf-8") as f:
         json.dump(out, f, indent=2)
     print(json.dumps(out))
     spark.stop()

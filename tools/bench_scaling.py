@@ -12,6 +12,11 @@ at each concurrency level; we report raw efficiency, the hardware ceiling,
 and engine efficiency normalized to that ceiling — the number a real 4x-
 hardware cluster would see.
 
+The input is the sf0.1 synthesized transcripts table that bench.py times
+(`__spark_entry__.synth_dir_for`), and each level times the driver's
+un-cached extraction plan, `__spark_entry__._extraction_plan(cached=False)`:
+C=128 chunks with the packaged model.
+
 Usage: python tools/bench_scaling.py  (writes BENCH/scaling_result.json)
 """
 
@@ -25,21 +30,12 @@ from multiprocessing import Pool
 
 sys.path.insert(0, ".")
 
-from arabic_ocr_spark.job import ExtractionJobConfig, plan_extraction  # noqa: E402
+import __spark_entry__ as driver  # noqa: E402
 from arabic_ocr_spark.kernel.classifier import CharModel  # noqa: E402
-from arabic_ocr_spark.sources.synth import SynthConfig, default_model_path, synthesize  # noqa: E402
+from arabic_ocr_spark.sources.synth import default_model_path  # noqa: E402
 
-BENCH_DIR = "/tmp/arabic_ocr_bench/scaling_v2"
+SF_DIR = "/root/testdata/sf0.1"
 PAIRS = [(2, 8), (8, 32)]
-
-
-def ensure_input() -> str:
-    marker = os.path.join(BENCH_DIR, "_DONE")
-    if not os.path.exists(marker):
-        synthesize(BENCH_DIR, SynthConfig(n_convs=800, mean_turns=20, pool_size=300, seed=42))
-        with open(marker, "w") as f:
-            f.write("ok")
-    return BENCH_DIR
 
 
 def _raw_worker(shard: list[str]) -> int:
@@ -65,20 +61,17 @@ def raw_mp_run(procs: int, payloads: list[str]) -> dict:
     return {"cores": procs, "turns": n, "wall_sec": round(dt, 2), "turns_per_sec": round(n / dt, 1)}
 
 
-def run_at(cores: int, input_dir: str) -> dict:
+def run_at(cores: int, n: int) -> dict:
     from arabic_ocr_spark.session import get_spark
 
     spark = get_spark(app_name=f"scaling-{cores}", master=f"local[{cores}]",
                       shuffle_partitions=max(16, 2 * cores))
     spark.sparkContext.setLogLevel("ERROR")
-    model = CharModel.load(default_model_path())
-    df = spark.read.parquet(os.path.join(input_dir, "transcripts.parquet"))
-    n = df.filter("text <> ''").count()  # the plan extracts payload rows only
-    cfg = ExtractionJobConfig(num_chunks=128, model_path=default_model_path())
     # warmup: JVM + python workers + broadcast, outside the timed window
-    plan_extraction(spark, df.limit(32 * cores), cfg, model=model).count()
+    driver._extraction_plan(spark, SF_DIR, cached=False).limit(32 * cores).count()
+    plan = driver._extraction_plan(spark, SF_DIR, cached=False)
     t0 = time.perf_counter()
-    out_n = plan_extraction(spark, df, cfg, model=model).count()
+    out_n = plan.count()
     dt = time.perf_counter() - t0
     spark.stop()
     assert out_n == n, (out_n, n)
@@ -92,13 +85,14 @@ def _best(runs: list[dict]) -> dict:
 def main() -> None:
     import pyarrow.parquet as pq
 
-    input_dir = ensure_input()
-    tbl = pq.read_table(os.path.join(input_dir, "transcripts.parquet"), columns=["text"])
+    tbl = pq.read_table(os.path.join(driver.synth_dir_for(SF_DIR), "transcripts.parquet"),
+                        columns=["text"])
+    # the plan extracts payload rows only
     payloads = [t for t in tbl.column("text").to_pylist() if t]
 
     reps = {2: 1, 8: 2, 32: 2}
     levels = sorted({c for pair in PAIRS for c in pair})
-    spark_runs = {c: _best([run_at(c, input_dir) for _ in range(reps[c])]) for c in levels}
+    spark_runs = {c: _best([run_at(c, len(payloads)) for _ in range(reps[c])]) for c in levels}
     raw_levels = [c for c in levels if c >= 8]
     raw_runs = {c: _best([raw_mp_run(c, payloads) for _ in range(reps[c])]) for c in raw_levels}
 
